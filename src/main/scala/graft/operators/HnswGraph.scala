@@ -105,132 +105,291 @@ object HnswGraph {
     * reference's mMax0/mMax split). Returns (per-node per-layer neighbour
     * INDICES, ascending; total distance evaluations — the build-cost
     * meter ProfileAnn growth-checks). Deterministic: no RNG, ties break
-    * on the lower index everywhere. */
+    * on the lower index everywhere.
+    *
+    * Primitive state throughout — the per-cell build is the hot loop of
+    * every graph create and maintain: adjacency lives in fixed-capacity
+    * sorted int arrays (a node's list holds at most `cap + 1` entries
+    * before it re-prunes), the beam's two heaps are parallel int/double
+    * arrays ordered by (sim desc, index asc) under
+    * `java.lang.Double.compare`, the visited set is an epoch-stamped int
+    * array, and each vector's norm is computed once (pairs of unequal
+    * length fall back to [[NswGraph.cosine]] over their common prefix). */
   private[graft] def insertBuild(
       vecs: Array[Array[Double]], levels: Array[Int],
       m: Int, efConstruction: Int): (Array[Array[Array[Int]]], Long) = {
     val n = vecs.length
-    var evals = 0L
-    def sim(a: Int, q: Array[Double]): Double = {
-      evals += 1; NswGraph.cosine(vecs(a), q)
-    }
-    // best-first ordering on (sim desc, index asc)
-    val ord: Ordering[(Int, Double)] =
-      Ordering.by { case (i, s) => (-s, i) }
-    val adj: Array[Array[mutable.ArrayBuffer[Int]]] =
-      Array.tabulate(n)(i =>
-        Array.fill(levels(i) + 1)(mutable.ArrayBuffer.empty[Int]))
+    val b = new InsertBuild(vecs, levels, m, efConstruction)
+    var i = 0
+    while (i < n) { b.insert(i); i += 1 }
+    (Array.tabulate(n)(v => Array.tabulate(levels(v) + 1)(l =>
+      java.util.Arrays.copyOf(b.adj(v)(l), b.deg(v)(l)))), b.evals)
+  }
 
-    /** ef-beam over layer `l` of the partial graph, seeded at `eps`
-      * (sims already computed); returns the beam best-first. */
-    def searchLayer(q: Array[Double], eps: Seq[(Int, Double)], ef: Int,
-                    l: Int): Array[(Int, Double)] = {
-      val visited = mutable.BitSet.empty
-      val candidates = mutable.PriorityQueue.empty[(Int, Double)](ord.reverse)
-      val results = mutable.PriorityQueue.empty[(Int, Double)](ord)
-      eps.foreach { e =>
-        if (!visited.contains(e._1)) {
-          visited += e._1
-          candidates.enqueue(e)
-          results.enqueue(e)
-          if (results.size > ef) { results.dequeue(); () }
-        }
+  /** Binary heap of (index, sim) pairs over parallel primitive arrays.
+    * `worstOnTop` = the beam (its floor is O(1) to inspect and evict);
+    * otherwise best on top (the candidate queue). The order is the total
+    * order (sim desc, index asc) with `java.lang.Double.compare` on the
+    * negated sim — NaN ranks worst. */
+  private final class PairHeap(capacity: Int, worstOnTop: Boolean) {
+    private var idx = new Array[Int](math.max(capacity, 4))
+    private var sim = new Array[Double](math.max(capacity, 4))
+    var size = 0
+
+    /** a ranks before b in best-first order. */
+    private def better(ia: Int, sa: Double, ib: Int, sb: Double): Boolean = {
+      val c = java.lang.Double.compare(-sa, -sb)
+      c < 0 || (c == 0 && ia < ib)
+    }
+    /** slot a belongs above slot b. */
+    private def above(a: Int, b: Int): Boolean =
+      if (worstOnTop) better(idx(b), sim(b), idx(a), sim(a))
+      else better(idx(a), sim(a), idx(b), sim(b))
+
+    def topIdx: Int = idx(0)
+    def topSim: Double = sim(0)
+    def clear(): Unit = size = 0
+
+    def push(i: Int, s: Double): Unit = {
+      if (size == idx.length) {
+        idx = java.util.Arrays.copyOf(idx, size * 2)
+        sim = java.util.Arrays.copyOf(sim, size * 2)
       }
-      while (candidates.nonEmpty) {
-        val c = candidates.dequeue()
-        if (results.size >= ef && c._2 < results.head._2) candidates.clear()
-        else adj(c._1)(l).sorted.foreach { nb =>
-          if (!visited.contains(nb)) {
-            visited += nb
-            val s = sim(nb, q)
-            if (results.size < ef || s > results.head._2) {
-              candidates.enqueue((nb, s))
-              results.enqueue((nb, s))
-              if (results.size > ef) { results.dequeue(); () }
+      idx(size) = i; sim(size) = s
+      var c = size
+      size += 1
+      while (c > 0 && above(c, (c - 1) >> 1)) { swap(c, (c - 1) >> 1); c = (c - 1) >> 1 }
+    }
+
+    def pop(): Unit = {
+      size -= 1
+      idx(0) = idx(size); sim(0) = sim(size)
+      var p = 0
+      var done = false
+      while (!done) {
+        val l = 2 * p + 1
+        val r = l + 1
+        var t = p
+        if (l < size && above(l, t)) t = l
+        if (r < size && above(r, t)) t = r
+        if (t == p) done = true else { swap(p, t); p = t }
+      }
+    }
+
+    private def swap(a: Int, b: Int): Unit = {
+      val ti = idx(a); idx(a) = idx(b); idx(b) = ti
+      val ts = sim(a); sim(a) = sim(b); sim(b) = ts
+    }
+  }
+
+  /** The mutable state of one [[insertBuild]]. */
+  private final class InsertBuild(vecs: Array[Array[Double]], levels: Array[Int],
+                                  m: Int, ef: Int) {
+    private val n = vecs.length
+    var evals = 0L
+    /** adj(v)(l): sorted neighbours in slots [0, deg(v)(l)). */
+    val adj: Array[Array[Array[Int]]] = Array.tabulate(n)(v =>
+      Array.tabulate(levels(v) + 1)(l => new Array[Int](capOf(l) + 1)))
+    val deg: Array[Array[Int]] = Array.tabulate(n)(v => new Array[Int](levels(v) + 1))
+    private def capOf(l: Int): Int = if (l == 0) 2 * m else m
+
+    private val norm: Array[Double] = vecs.map { v =>
+      var s = 0.0; var k = 0
+      while (k < v.length) { s += v(k) * v(k); k += 1 }
+      s
+    }
+    private val sqrtNorm: Array[Double] = norm.map(math.sqrt)
+
+    /** [[NswGraph.cosine]] of vectors a and b, bit for bit. */
+    private def sim(a: Int, b: Int): Double = {
+      evals += 1
+      val va = vecs(a); val vb = vecs(b)
+      if (va.length != vb.length) NswGraph.cosine(va, vb)
+      else {
+        var dot = 0.0; var k = 0
+        while (k < va.length) { dot += va(k) * vb(k); k += 1 }
+        if (norm(a) == 0.0 || norm(b) == 0.0) 0.0 else dot / (sqrtNorm(a) * sqrtNorm(b))
+      }
+    }
+
+    private val visited = new Array[Int](n)
+    private var epoch = 0
+    private val candidates = new PairHeap(ef + 1, worstOnTop = false)
+    private val results = new PairHeap(ef + 1, worstOnTop = true)
+    // the beam of the last searchLayer, best first
+    private val beamIdx = new Array[Int](ef)
+    private val beamSim = new Array[Double](ef)
+    private var beamLen = 0
+    // selectNeighbors' output and scratch
+    private val selIdx = new Array[Int](2 * m + 2)
+    private var selLen = 0
+    private val rejIdx = new Array[Int](math.max(ef, 2 * m) + 2)
+    private val pruneIdx = new Array[Int](2 * m + 2)
+    private val pruneSim = new Array[Double](2 * m + 2)
+    private var entry = -1
+
+    /** ef-beam over layer `l` of the partial graph for node `q`, seeded
+      * at the current beam (sims already computed); leaves the new beam,
+      * best first, in beamIdx/beamSim. */
+    private def searchLayer(q: Int, l: Int): Unit = {
+      epoch += 1
+      candidates.clear(); results.clear()
+      var e = 0
+      while (e < beamLen) {
+        val v = beamIdx(e)
+        if (visited(v) != epoch) {
+          visited(v) = epoch
+          candidates.push(v, beamSim(e))
+          results.push(v, beamSim(e))
+          if (results.size > ef) results.pop()
+        }
+        e += 1
+      }
+      while (candidates.size > 0) {
+        val c = candidates.topIdx
+        val cs = candidates.topSim
+        candidates.pop()
+        if (results.size >= ef && cs < results.topSim) candidates.clear()
+        else {
+          val nbrs = adj(c)(l)
+          val d = deg(c)(l)
+          var k = 0
+          while (k < d) {
+            val nb = nbrs(k)
+            if (visited(nb) != epoch) {
+              visited(nb) = epoch
+              val s = sim(nb, q)
+              if (results.size < ef || s > results.topSim) {
+                candidates.push(nb, s)
+                results.push(nb, s)
+                if (results.size > ef) results.pop()
+              }
             }
+            k += 1
           }
         }
       }
-      results.dequeueAll.reverseIterator.toArray
+      beamLen = results.size // <= ef: both loops trim after each push
+      var k = beamLen - 1
+      while (k >= 0) {
+        beamIdx(k) = results.topIdx; beamSim(k) = results.topSim
+        results.pop(); k -= 1
+      }
     }
 
     /** Diversity heuristic (reference Algorithm-4 shape): admit a
-      * candidate when it is closer to `q` than to every already-admitted
-      * neighbour — hub-resistant, keeps links spanning distinct
-      * directions; rejected candidates backfill unused slots
-      * (keep-pruned, so degree never starves). `cands` best-first. */
-    def selectNeighbors(q: Array[Double], cands: Array[(Int, Double)],
-                        mSel: Int): mutable.ArrayBuffer[(Int, Double)] = {
-      val selected = mutable.ArrayBuffer.empty[(Int, Double)]
-      val rejected = mutable.ArrayBuffer.empty[(Int, Double)]
+      * candidate when it is closer to the query (`cSim`, its similarity
+      * to it) than to every already-admitted neighbour — hub-resistant,
+      * keeps links spanning distinct directions; rejected candidates
+      * backfill unused slots (keep-pruned, so degree never starves).
+      * Candidates best-first; the pick lands in selIdx, admitted first,
+      * then backfill. */
+    private def selectNeighbors(cIdx: Array[Int], cSim: Array[Double],
+                                cLen: Int, mSel: Int): Unit = {
+      selLen = 0
+      var rejLen = 0
       var i = 0
-      while (i < cands.length && selected.size < mSel) {
-        val (c, sc) = cands(i)
-        if (selected.forall { case (s, _) => sc > sim(c, vecs(s)) })
-          selected += ((c, sc))
-        else rejected += ((c, sc))
+      while (i < cLen && selLen < mSel) {
+        val c = cIdx(i)
+        val sc = cSim(i)
+        var admit = true
+        var k = 0
+        while (admit && k < selLen) {
+          if (!(sc > sim(c, selIdx(k)))) admit = false
+          k += 1
+        }
+        if (admit) { selIdx(selLen) = c; selLen += 1 }
+        else { rejIdx(rejLen) = c; rejLen += 1 }
         i += 1
       }
       var j = 0
-      while (selected.size < mSel && j < rejected.length) {
-        selected += rejected(j); j += 1
+      while (selLen < mSel && j < rejLen) {
+        selIdx(selLen) = rejIdx(j); selLen += 1; j += 1
       }
-      selected
     }
 
     /** Re-prune a node whose list overflowed its cap: re-run the
       * heuristic around the node's own vector over its current list. */
-    def pruneTo(node: Int, l: Int, cap: Int): Unit = {
-      val buf = adj(node)(l)
-      if (buf.length <= cap) return
-      val cands = buf.distinct
-        .map(nb => (nb, sim(nb, vecs(node)))).toArray
-        .sortBy { case (i2, s) => (-s, i2) }
-      val kept = selectNeighbors(vecs(node), cands, cap)
-      buf.clear()
-      buf ++= kept.map(_._1)
-      ()
+    private def pruneTo(node: Int, l: Int): Unit = {
+      val cap = capOf(l)
+      val d = deg(node)(l)
+      if (d <= cap) return
+      val nbrs = adj(node)(l)
+      var k = 0
+      while (k < d) { pruneIdx(k) = nbrs(k); pruneSim(k) = sim(nbrs(k), node); k += 1 }
+      sortBestFirst(pruneIdx, pruneSim, d)
+      selectNeighbors(pruneIdx, pruneSim, d, cap)
+      System.arraycopy(selIdx, 0, nbrs, 0, selLen)
+      java.util.Arrays.sort(nbrs, 0, selLen)
+      deg(node)(l) = selLen
     }
 
-    var entry = -1
-    var i = 0
-    while (i < n) {
-      val l = levels(i)
-      if (entry < 0) entry = i
-      else {
-        val entryLevel = levels(entry)
-        var ep = (entry, sim(entry, vecs(i)))
-        // greedy descent through the layers above the node's level
-        var lc = entryLevel
-        while (lc > l) {
-          var improved = true
-          while (improved) {
-            improved = false
-            adj(ep._1)(lc).sorted.foreach { nb =>
-              val s = sim(nb, vecs(i))
-              if (s > ep._2) { ep = (nb, s); improved = true }
-            }
-          }
-          lc -= 1
-        }
-        // insertion layers: beam, select, link bidirectionally
-        var eps: Seq[(Int, Double)] = Seq(ep)
-        var l2 = math.min(entryLevel, l)
-        while (l2 >= 0) {
-          val beam = searchLayer(vecs(i), eps, efConstruction, l2)
-          selectNeighbors(vecs(i), beam, m).foreach { case (j, _) =>
-            adj(i)(l2) += j
-            adj(j)(l2) += i
-            pruneTo(j, l2, if (l2 == 0) 2 * m else m)
-          }
-          eps = beam.toSeq
-          l2 -= 1
-        }
-        if (l > entryLevel) entry = i
+    /** Insertion sort (lists are ≤ 2m + 1 long) into best-first order. */
+    private def sortBestFirst(ix: Array[Int], sm: Array[Double], len: Int): Unit = {
+      var i = 1
+      while (i < len) {
+        val vi = ix(i); val vs = sm(i)
+        var j = i - 1
+        while (j >= 0 && {
+          val c = java.lang.Double.compare(-sm(j), -vs)
+          c > 0 || (c == 0 && ix(j) > vi)
+        }) { ix(j + 1) = ix(j); sm(j + 1) = sm(j); j -= 1 }
+        ix(j + 1) = vi; sm(j + 1) = vs
+        i += 1
       }
-      i += 1
     }
-    (adj.map(_.map(_.toArray.sorted)), evals)
+
+    def insert(i: Int): Unit = {
+      val l = levels(i)
+      if (entry < 0) { entry = i; return }
+      val entryLevel = levels(entry)
+      var ep = entry
+      var epSim = sim(entry, i)
+      // greedy descent through the layers above the node's level; each
+      // pass scans the list of the node it started from
+      var lc = entryLevel
+      while (lc > l) {
+        var improved = true
+        while (improved) {
+          improved = false
+          val nbrs = adj(ep)(lc)
+          val d = deg(ep)(lc)
+          var k = 0
+          while (k < d) {
+            val nb = nbrs(k)
+            val s = sim(nb, i)
+            if (s > epSim) { ep = nb; epSim = s; improved = true }
+            k += 1
+          }
+        }
+        lc -= 1
+      }
+      // insertion layers: beam, select, link bidirectionally
+      beamIdx(0) = ep; beamSim(0) = epSim; beamLen = 1
+      var l2 = math.min(entryLevel, l)
+      while (l2 >= 0) {
+        searchLayer(i, l2)
+        selectNeighbors(beamIdx, beamSim, beamLen, m)
+        // the pick becomes i's list first: pruneTo reuses the selection
+        // scratch
+        val own = adj(i)(l2)
+        val picked = selLen
+        System.arraycopy(selIdx, 0, own, 0, picked)
+        deg(i)(l2) = picked
+        var k = 0
+        while (k < picked) {
+          val j = own(k)
+          // i is the highest index inserted so far: appending keeps
+          // j's list sorted
+          adj(j)(l2)(deg(j)(l2)) = i; deg(j)(l2) += 1
+          pruneTo(j, l2)
+          k += 1
+        }
+        java.util.Arrays.sort(own, 0, picked)
+        l2 -= 1
+      }
+      if (l > entryLevel) entry = i
+    }
   }
 
   /** Build over an [[IvfIndex.fit]] output and persist clustered by cell

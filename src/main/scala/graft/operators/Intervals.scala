@@ -260,14 +260,20 @@ object Intervals {
       // task and one oversized file; under range partitioning a hot fork
       // spans several consecutive range buckets (split by `from`, so its
       // files also stay time-clustered) while cold forks share buckets —
-      // each still writes its own packed file via partitionBy.
-      .repartitionByRange(col(ForkPartCol), col(fromCol))
+      // each still writes its own packed file via partitionBy. The
+      // bucket count is explicit (the session's shuffle partitions):
+      // with none, AQE coalesces a small revision's buckets into ONE
+      // task that then opens every fork file serially — each write
+      // opens a file per fork, so that task was most of the commit.
+      .repartitionByRange(df.sparkSession.sessionState.conf.numShufflePartitions,
+        col(ForkPartCol), col(fromCol))
       .write.mode("overwrite").partitionBy(ForkPartCol).parquet(path)
     true
   }
 
   /** Read an interval-indexed table (restores the `__fork` metadata, which
-    * hive-partition discovery strips from `__fork_part`). */
+    * hive-partition discovery strips from `__fork_part`; the schema comes
+    * from one footer on the driver, no inference job). */
   def readIndexed(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.plans.FooterSchemas.readParquet(spark, path)
 }

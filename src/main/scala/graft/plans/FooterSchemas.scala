@@ -7,7 +7,8 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Driver-side parquet-footer Spark-schema reads, shared by the metadata
-  * rewrite rules ([[DictAggRule]]'s per-file dictionary verification).
+  * rewrite rules ([[DictAggRule]]'s per-file dictionary verification) and
+  * the snapshot/sidecar readers ([[readParquet]]).
   *
   * Spark stamps every parquet file it writes with the serialized Catalyst
   * schema — INCLUDING column metadata, which is where [[graft.operators
@@ -73,5 +74,56 @@ private[graft] object FooterSchemas {
     val out = graft.sources.MetaIO.parallelMap(files)(f =>
       sparkSchemaOf(f._1, f._2, f._3, conf))
     if (out.exists(_.isEmpty)) None else Some(out.flatten)
+  }
+
+  /** `spark.read.parquet(paths: _*)` without the schema-inference job.
+    * Spark infers a parquet scan's schema from ONE footer — the first
+    * data file by path, unless schema merging is on — but reads it inside
+    * a one-task Spark job, paid on every open. Here that same footer is
+    * read on the driver (memoized, see [[sparkSchemaOf]]) and its stored
+    * Catalyst schema, column metadata included, is handed to the reader
+    * as the user schema; partition columns are still inferred from the
+    * directory names. Falls back to plain inference whenever the shortcut
+    * could differ: schema merging on, summary files present, a footer
+    * without a Spark schema, a missing path, or no data file at all
+    * (inference then raises its usual error). */
+  def readParquet(spark: org.apache.spark.sql.SparkSession,
+                  paths: String*): org.apache.spark.sql.DataFrame =
+    footerSchema(spark, paths) match {
+      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+
+  private def footerSchema(spark: org.apache.spark.sql.SparkSession,
+                           paths: Seq[String]): Option[StructType] = {
+    if (spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean) return None
+    val conf = spark.sparkContext.hadoopConfiguration
+    // the leaf files Spark's file index lists: explicit file paths as
+    // given; under a directory, hidden `_`/`.` names are skipped (except
+    // `k=v` partition dirs). Inference prefers summary files, so their
+    // presence declines the shortcut.
+    var usable = true
+    val files = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
+    def walk(fs: org.apache.hadoop.fs.FileSystem, p: Path): Unit =
+      fs.listStatus(p).foreach { st =>
+        val name = st.getPath.getName
+        if (name.startsWith("_metadata") || name.startsWith("_common_metadata")) usable = false
+        else if (!((name.startsWith("_") && !name.contains("=")) ||
+            name.startsWith(".") || name.endsWith("._COPYING_"))) {
+          if (st.isDirectory) walk(fs, st.getPath) else files += st
+        }
+      }
+    paths.foreach { p =>
+      val root = new Path(p)
+      val fs = root.getFileSystem(conf)
+      if (!fs.exists(root)) usable = false
+      else {
+        val st = fs.getFileStatus(root)
+        if (st.isDirectory) walk(fs, root) else files += st
+      }
+    }
+    if (!usable) return None
+    files.result().minByOption(_.getPath.toString).flatMap(st =>
+      sparkSchemaOf(st.getPath.toString, st.getLen, st.getModificationTime, conf))
   }
 }

@@ -64,6 +64,9 @@ object JsoniqRun {
   private[query] def RunCaseMax: Int =
     sys.props.get("graft.runcase.max").map(_.toInt).getOrElse(64)
 
+  /** Compiled-plan cache bound per [[Store]] (least recently used out). */
+  private[query] val PlanCacheCap = 64
+
   private[query] sealed trait Binding
   /** A `for`-bound item. `pointer` is set when the binding iterates a
     * STATICALLY pathable document source (jn:doc + literal steps,
@@ -837,8 +840,16 @@ object JsoniqRun {
     private[query] final case class PlanFp(headRev: Option[Int],
                                            headTs: Option[Long],
                                            compactions: Seq[String])
-    private val planCache = scala.collection.concurrent.TrieMap
-      .empty[(String, Option[String]), (DataFrame, Map[String, PlanFp])]
+    // least-recently-used eviction past PlanCacheCap entries (access
+    // order; every use is under the map's own lock): a burst of new texts
+    // evicts the coldest plans, not the hot ones with them
+    private val planCache =
+      new java.util.LinkedHashMap[(String, Option[String]),
+          (DataFrame, Map[String, PlanFp])](16, 0.75f, true) {
+        override def removeEldestEntry(e: java.util.Map.Entry[(String, Option[String]),
+            (DataFrame, Map[String, PlanFp])]): Boolean = size() > PlanCacheCap
+      }
+    private[query] def planCacheSize: Int = planCache.synchronized(planCache.size())
     private[query] val planTouch =
       new ThreadLocal[scala.collection.mutable.Set[String]]
     private[query] def planToken(path: String): PlanFp = {
@@ -850,19 +861,19 @@ object JsoniqRun {
     /** Non-commit mutations (index registry, valid-time config, resource
       * drops) clear the cache outright; commits are caught per-hit by
       * the fingerprint check. */
-    private[query] def invalidatePlans(): Unit = planCache.clear()
+    private[query] def invalidatePlans(): Unit = planCache.synchronized(planCache.clear())
     private[query] def cachedPlan(key: (String, Option[String]))
         : Option[DataFrame] =
-      planCache.get(key).flatMap { case (df, fps) =>
-        if (fps.forall { case (p, fp) => planToken(p) == fp }) Some(df)
-        else { planCache.remove(key); None }
+      planCache.synchronized(Option(planCache.get(key))).flatMap { hit =>
+        // fingerprints re-read commit logs: checked outside the lock
+        if (hit._2.forall { case (p, fp) => planToken(p) == fp }) Some(hit._1)
+        else { planCache.synchronized(planCache.remove(key, hit)); None }
       }
     private[query] def cachePlan(key: (String, Option[String]),
                                  df: DataFrame,
                                  touched: collection.Set[String]): Unit = {
-      if (planCache.size > 64) planCache.clear() // bounded, recompiles are cheap
-      planCache.put(key,
-        (df, touched.iterator.map(p => p -> planToken(p)).toMap))
+      val entry = (df, touched.iterator.map(p => p -> planToken(p)).toMap)
+      planCache.synchronized(planCache.put(key, entry))
       ()
     }
 

@@ -70,7 +70,7 @@ object DeltaTemporalTable {
     * snapshot's (deltas add only the `__change_type` marker, which
     * reconstruction drops) — footer-only driver-side read, no job. */
   def baseSchema(path: String, upTo: Option[Int] = None): org.apache.spark.sql.types.StructType =
-    SparkSession.active.read.parquet(
+    graft.plans.FooterSchemas.readParquet(SparkSession.active,
       effDir(path, baseFullRevision(path, upTo), RevisionCompaction.overlays(path))).schema
 
   /** Resolve V2-option-style pinning (`revision` / `asOfTimestampMs`)
@@ -304,7 +304,8 @@ object DeltaTemporalTable {
                          log: Seq[Commit],
                          ovs: Map[Int, RevisionCompaction.Overlay]): Option[Seq[String]] =
     log.find(_.kind == "delta").map { c =>
-      spark.read.parquet(effDir(path, c.revision, ovs)).schema.fieldNames.toSeq
+      graft.plans.FooterSchemas.readParquet(spark, effDir(path, c.revision, ovs))
+        .schema.fieldNames.toSeq
         .takeWhile(_ != "__change_type")
     }
 

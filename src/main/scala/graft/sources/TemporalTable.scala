@@ -552,76 +552,31 @@ object TemporalTable {
       // column's natural run-length) — OPTIMIZATION_r17.md has the
       // numbers. Diff keeps its broadcast semi-join slice over the
       // manifests instead (see Diff.prunedDiffFromManifests).
+      val stats = if (withStats) Some((statsNdvCols, statsGroupCols)) else None
       try {
-        if (fromCache && (wantManifest || wantKeys)) {
-          // digest source is the pinned frame: run the revision write and
-          // the sidecar digests as CONCURRENT jobs over the shared cache
-          // blocks (spark_optimization_guide §2.6 — the commit's wall
-          // clock becomes ~max(write, manifest, keyindex) instead of
-          // their sum). The manifest computes into a temp dir and renames
-          // into the revision dir AFTER the data write (overwrite mode
-          // would wipe a concurrent subdir); a failure anywhere aborts
-          // the reservation, which already deletes the revision dir
-          // (manifest included) and the key-index sidecar.
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          import scala.concurrent.ExecutionContext.Implicits.global
-          val manifestTmp = s"$path/.manifest-tmp-$rev"
-          // a frame pinned HERE has unmaterialized blocks: the data
-          // write fills them while writing (one pipelined pass), and
-          // only the two sidecar digests overlap each other after. A
-          // caller-cached frame overlaps all three jobs.
-          if (pinHere) frame.write.mode("overwrite").parquet(s"$path/rev=$rev")
-          val fKeys =
-            if (wantKeys) Some(Future {
-              frame.select(col("node_key"))
-                .write.mode("overwrite").parquet(s"${keyIndexDir(path)}/rev=$rev")
-            }) else None
-          val fMan =
-            if (wantManifest) Some(Future {
-              writeManifestFrom(frame, path, rev, target = Some(manifestTmp))
-            }) else None
-          try {
-            if (!pinHere)
-              frame.write.mode("overwrite").parquet(s"$path/rev=$rev")
-            fMan.foreach { f =>
-              Await.result(f, Duration.Inf)
-              if (!MetaIO.rename(manifestTmp, manifestDir(path, rev)))
-                throw new java.io.IOException(
-                  s"manifest rename $manifestTmp -> ${manifestDir(path, rev)} failed")
-            }
-            fKeys.foreach(Await.result(_, Duration.Inf))
-          } catch {
-            case e: Throwable =>
-              // drain the in-flight sidecar jobs BOUNDED before the abort:
-              // a hung sidecar (stuck FS/task) must not delay
-              // abortReservation and the original error forever, and a
-              // fast data-write failure must not wait out two full digests
-              // (ADVICE r16). A job still running past the bound races the
-              // abort's delete only on sidecar paths the abort re-deletes.
-              (fMan.toSeq ++ fKeys.toSeq).foreach(f =>
-                scala.util.Try(Await.result(
-                  f, scala.concurrent.duration.Duration(60, "s"))))
-              MetaIO.delete(manifestTmp, recursive = true)
-              throw e
-          }
-          // stats + valid-time policies read the just-written revision —
-          // they stay after the data write (digests handled above)
+        if (fromCache) {
+          // digest source is the pinned frame: the revision write and the
+          // sidecar digests (manifest, key index, valid-time forks) run as
+          // CONCURRENT jobs over the shared cache blocks
+          // (spark_optimization_guide §2.6 — the commit's wall clock
+          // becomes ~max(write, digests) instead of their sum). Blocks
+          // of a frame pinned HERE are not materialized yet: whichever
+          // job reaches a block first computes it while the others wait
+          // on the block's write lock and then read it, so the upstream
+          // plan still runs once.
           writeRevisionSidecars(df.sparkSession, path, rev, src = frame,
-            wantManifest = false, wantKeys = false, pinSrc = false,
-            explicitStats =
-              if (withStats) Some((statsNdvCols, statsGroupCols)) else None)
+            wantManifest = wantManifest, wantKeys = wantKeys, pinSrc = false,
+            explicitStats = stats,
+            alongside = () => frame.write.mode("overwrite").parquet(s"$path/rev=$rev"))
         } else {
+          // a nondeterministic plan could recompute other rows than it
+          // wrote (or no manifest/key digest justifies pinning it): the
+          // sidecars digest the just-written revision instead
           frame.write.mode("overwrite").parquet(s"$path/rev=$rev")
           writeRevisionSidecars(df.sparkSession, path, rev,
-            src = if (fromCache) frame
-                  else df.sparkSession.read.parquet(s"$path/rev=$rev"),
-            wantManifest = wantManifest, wantKeys = wantKeys,
-            // cached frames are already pinned; pin the re-read once
-            // instead of scanning the fresh revision twice
-            pinSrc = !fromCache && wantManifest && wantKeys,
-            explicitStats =
-              if (withStats) Some((statsNdvCols, statsGroupCols)) else None)
+            src = graft.plans.FooterSchemas.readParquet(df.sparkSession, s"$path/rev=$rev"),
+            wantManifest = wantManifest, wantKeys = wantKeys, pinSrc = true,
+            explicitStats = stats)
         }
       } finally if (pinHere) { frame.unpersist(); () }
       logCommit(path, rev, author, message, Some(df.schema))
@@ -663,7 +618,7 @@ object TemporalTable {
         spark.range(0).select(col("id").as("node_key"),
           col("id").cast("int").as("rev"))
       case Some(rel) =>
-        val dataSchema = spark.read.parquet(s"$kiDir/$rel").schema
+        val dataSchema = graft.plans.FooterSchemas.readParquet(spark, s"$kiDir/$rel").schema
         // commit timestamps as the fabricated mtimes: stable, non-1970
         // (path, len, mtime) cache keys — the CommitLogFileIndex rule
         val index = new CommitLogFileIndex(kiDir, revFiles, revTimesMs)
@@ -801,39 +756,88 @@ object TemporalTable {
     * revision always carries its sidecars and the record-lookup /
     * manifest-diff fast paths never silently degrade after a V2 write. */
   private[graft] def writeSidecars(spark: SparkSession, path: String, rev: Int,
-                                   schema: org.apache.spark.sql.types.StructType): Unit = {
-    val wantManifest = manifestEligible(schema)
-    val wantKeys = schema.fieldNames.contains("node_key")
+                                   schema: org.apache.spark.sql.types.StructType): Unit =
     writeRevisionSidecars(spark, path, rev,
-      src = spark.read.parquet(s"$path/rev=$rev"),
-      wantManifest = wantManifest, wantKeys = wantKeys,
-      pinSrc = wantManifest && wantKeys, explicitStats = None)
-  }
+      src = graft.plans.FooterSchemas.readParquet(spark, s"$path/rev=$rev"),
+      wantManifest = manifestEligible(schema),
+      wantKeys = schema.fieldNames.contains("node_key"),
+      pinSrc = true, explicitStats = None)
 
   /** The per-revision sidecar block shared by BOTH commit paths (the
-    * library [[writeFrame]] and the V2/SQL-INSERT [[writeSidecars]]):
-    * manifest + key index from `src`, then the stats policy (explicit
-    * opt-in or inherited recipe) and the valid-time fork policy. ONE
-    * definition on purpose — the two paths had already drifted once (the
-    * V2 path initially missed the `_vindex` hook). `src` is by-name: the
-    * no-sidecar fast path must not pay its construction. */
+    * library [[writeFrame]] and the V2/SQL-INSERT [[writeSidecars]]).
+    * ONE definition on purpose — the two paths had already drifted once
+    * (the V2 path initially missed the `_vindex` hook).
+    *
+    *  1. The digests of `src` run as CONCURRENT jobs: the bucket manifest
+    *     (into a temp dir, renamed into `rev=N/_manifest` at the end —
+    *     an overwrite-mode data write would wipe a subdir written
+    *     earlier), the key index, and the valid-time fork index when the
+    *     table carries a policy (the reference maintains its RI-tree per
+    *     commit via ChangeListener; [[ValidTimeIndex]] scaladoc).
+    *     `alongside` runs on the calling thread meanwhile — the data
+    *     write, when `src` is the pinned frame being committed. `pinSrc`
+    *     pins `src` when more than one digest reads it (a fresh re-read
+    *     of the revision; the pinned frame is passed unpinned).
+    *  2. Then the stats policy (explicit opt-in or inherited recipe),
+    *     computed from the just-written files so the fingerprint
+    *     provably covers the stats (StatsSidecar contract).
+    *
+    * A failure anywhere drains the in-flight digests BOUNDED before
+    * rethrowing, and the caller's abort deletes `rev=N`, the key index
+    * and `_vindex/rev=N`. `src` is by-name: the no-sidecar fast path must
+    * not pay its construction. */
   private def writeRevisionSidecars(spark: SparkSession, path: String, rev: Int,
       src: => DataFrame, wantManifest: Boolean, wantKeys: Boolean,
       pinSrc: Boolean,
-      explicitStats: Option[(Seq[String], Seq[Seq[String]])]): Unit = {
-    if (wantManifest || wantKeys) {
+      explicitStats: Option[(Seq[String], Seq[Seq[String]])],
+      alongside: () => Unit = () => ()): Unit = {
+    val policy = ValidTimeIndex.policy(path)
+    if (wantManifest || wantKeys || policy.isDefined) {
       val s = src
-      if (pinSrc) s.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val fork = policy.filter(ValidTimeIndex.hasAxes(_, s.schema))
+      val pin = pinSrc && Seq(wantManifest, wantKeys, fork.isDefined).count(identity) > 1
+      if (pin) s.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        if (wantManifest) writeManifestFrom(s, path, rev)
-        if (wantKeys) s.select(col("node_key"))
-          .write.mode("overwrite").parquet(s"${keyIndexDir(path)}/rev=$rev")
-      } finally if (pinSrc) { s.unpersist(); () }
-    }
-    // per-revision statistics sidecar: explicit opt-in, else the
-    // persisted table policy (a prior revision's recipe inherits forward
-    // — SQL INSERTs included), computed from the just-written files so
-    // the fingerprint provably covers the stats (StatsSidecar contract)
+        import scala.concurrent.{Await, Future}
+        import scala.concurrent.duration.Duration
+        import scala.concurrent.ExecutionContext.Implicits.global
+        val manifestTmp = s"$path/.manifest-tmp-$rev"
+        val fMan =
+          if (wantManifest) Some(Future {
+            writeManifest(s, manifestTmp)
+          }) else None
+        val fKeys =
+          if (wantKeys) Some(Future {
+            s.select(col("node_key"))
+              .write.mode("overwrite").parquet(s"${keyIndexDir(path)}/rev=$rev")
+          }) else None
+        val fFork = fork.map(p => Future(ValidTimeIndex.writeSidecar(s, path, rev, p)))
+        try {
+          alongside()
+          fMan.foreach { f =>
+            Await.result(f, Duration.Inf)
+            if (!MetaIO.rename(manifestTmp, manifestDir(path, rev)))
+              throw new java.io.IOException(
+                s"manifest rename $manifestTmp -> ${manifestDir(path, rev)} failed")
+          }
+          fKeys.foreach(Await.result(_, Duration.Inf))
+          fFork.foreach(Await.result(_, Duration.Inf))
+        } catch {
+          case e: Throwable =>
+            // drain the in-flight sidecar jobs BOUNDED before the abort:
+            // a hung sidecar (stuck FS/task) must not delay
+            // abortReservation and the original error forever, and a
+            // fast data-write failure must not wait out full digests
+            // (ADVICE r16). A job still running past the bound races the
+            // abort's delete only on sidecar paths the abort re-deletes.
+            (fMan.toSeq ++ fKeys.toSeq ++ fFork.toSeq).foreach(f =>
+              scala.util.Try(Await.result(
+                f, scala.concurrent.duration.Duration(60, "s"))))
+            MetaIO.delete(manifestTmp, recursive = true)
+            throw e
+        }
+      } finally if (pin) { s.unpersist(); () }
+    } else alongside()
     explicitStats match {
       case Some((ndv, groups)) =>
         StatsSidecar.write(spark, s"$path/rev=$rev",
@@ -843,10 +847,6 @@ object TemporalTable {
           ndvCols = ndv, groupCols = groups)
       }
     }
-    // valid-time fork index (persisted policy — the reference maintains
-    // its RI-tree per commit via ChangeListener; ValidTimeIndex scaladoc)
-    ValidTimeIndex.maybeWrite(spark, path, rev,
-      spark.read.parquet(s"$path/rev=$rev"))
   }
 
   /** True iff every expression in the plan is deterministic — the
@@ -860,14 +860,10 @@ object TemporalTable {
   private def planDeterministic(df: DataFrame): Boolean =
     !df.queryExecution.optimizedPlan.exists(_.expressions.exists(_.exists(!_.deterministic)))
 
-  /** `target` defaults to the revision's manifest dir; the concurrent
-    * commit path passes its temp dir instead (rename at the commit
-    * point). ONE definition for both — the sequential and concurrent
-    * paths had drifted into duplicate manifest-write code once
-    * (ADVICE r16), and a future manifest-shape change must land in
-    * exactly one place. */
-  private def writeManifestFrom(snap: DataFrame, path: String, rev: Int,
-                                target: Option[String] = None): Unit =
+  /** The bucket-manifest sidecar of `snap`, written to `target` (the
+    * commit's temp dir, renamed into `rev=N/_manifest` by
+    * [[writeRevisionSidecars]]). */
+  private def writeManifest(snap: DataFrame, target: String): Unit =
     graft.operators.Diff.bucketManifest(snap, Seq("node_key"),
         snap.columns.toSeq.filterNot(_ == "node_key"))
       // one 65536-row sidecar file, not one tiny file per shuffle
@@ -876,7 +872,7 @@ object TemporalTable {
       // opens two manifests per call, aged histories thousands — pays one
       // file open instead of spark.sql.shuffle.partitions of them
       .coalesce(1)
-      .write.mode("overwrite").parquet(target.getOrElse(manifestDir(path, rev)))
+      .write.mode("overwrite").parquet(target)
 
   /** `jn:load` (reference: bundles/sirix-query/src/main/java/io/sirix/query/
     * function/jn/io/Load.java): ingest JSON document file(s) into a
@@ -978,14 +974,18 @@ object TemporalTable {
     * overlay: a vacuumed revision's rev=N/ directory no longer holds its
     * data files. The overlay case reads its explicit file list (the
     * generation dir's underscore name would otherwise trip DataSource's
-    * hidden-path warning on every open). Callers validate the revision
-    * against the commit log first. */
+    * hidden-path warning on every open). The schema comes from one footer
+    * on the driver ([[graft.plans.FooterSchemas.readParquet]]): a
+    * revision is immutable, so re-inferring it with a Spark job on every
+    * open bought nothing. Callers validate the revision against the
+    * commit log first. */
   private def rawSnapshot(spark: SparkSession, path: String, rev: Int): DataFrame =
     RevisionCompaction.overlays(path).get(rev) match {
       case Some(o) =>
         val dir = RevisionCompaction.genDir(path, rev, o.gen)
-        spark.read.parquet(o.files.map { case (n, _) => s"$dir/$n" }: _*)
-      case None => spark.read.parquet(s"$path/rev=$rev")
+        graft.plans.FooterSchemas.readParquet(spark,
+          o.files.map { case (n, _) => s"$dir/$n" }: _*)
+      case None => graft.plans.FooterSchemas.readParquet(spark, s"$path/rev=$rev")
     }
 
   /** `revertTo(revision)` analog (reference: api/NodeTrx.java:50,
@@ -1278,9 +1278,12 @@ object TemporalTable {
     val expected = graft.operators.Diff.manifestSignature(keys, cmp, 65536)
     def storedManifest(rev: Int): Option[DataFrame] = {
       val dir = manifestDir(path, rev)
-      if (!MetaIO.exists(dir)) None
+      // the manifest's part files, listed explicitly: opening the
+      // underscore-named dir itself logs DataSource's hidden-path warning
+      val files = MetaIO.listFiles(dir).map { case (n, _) => s"$dir/$n" }
+      if (files.isEmpty) None
       else {
-        val m = spark.read.parquet(dir)
+        val m = graft.plans.FooterSchemas.readParquet(spark, files: _*)
         // an empty manifest (empty snapshot) has no cols row to check —
         // it prunes correctly regardless of the column choice
         m.select("cols").limit(1).collect().headOption match {

@@ -79,22 +79,34 @@ object ValidTimeIndex {
         TemporalTable.parseField(json, "granularity").toLong))
     }
 
-  /** Commit hook ([[TemporalTable]] calls this before logging the
-    * commit): writes `_vindex/rev=N` when the policy is set and the
-    * revision's schema carries both axis columns. An empty revision (or
-    * one whose axis columns the schema lacks) records no sidecar —
-    * [[validAt]] falls back to the plain scan for it. */
+  /** Whether a revision with `schema` is indexed under `policy`: it must
+    * carry both axis columns. A revision that lacks one records no
+    * sidecar — [[validAt]] falls back to the plain scan for it. */
+  private[graft] def hasAxes(policy: (String, String, Long),
+                             schema: org.apache.spark.sql.types.StructType): Boolean =
+    schema.fieldNames.contains(policy._1) && schema.fieldNames.contains(policy._2)
+
+  /** Write `_vindex/rev=N` from the revision's rows under `policy`. An
+    * empty revision records no sidecar ([[validAt]] falls back). The
+    * snapshot commit path runs this as one of its concurrent sidecar jobs
+    * ([[TemporalTable]]'s `writeRevisionSidecars`), before logging the
+    * commit. */
+  private[graft] def writeSidecar(snap: DataFrame, path: String, rev: Int,
+                                  policy: (String, String, Long)): Unit = {
+    Intervals.tryWriteIndexed(snap, revDir(path, rev), policy._1, policy._2, policy._3)
+    ()
+  }
+
+  /** Commit hook for delta chains' epoch-boundary fulls: writes
+    * `_vindex/rev=N` when the policy is set and the revision carries both
+    * axis columns. */
   private[graft] def maybeWrite(spark: SparkSession, path: String, rev: Int,
                                 snap: => DataFrame): Unit =
     // by-name snap: the no-policy fast path (one metadata existence
     // probe) must not pay the frame's parquet footer read
-    policy(path).foreach { case (fromCol, toCol, gran) =>
+    policy(path).foreach { p =>
       val s = snap
-      val names = s.schema.fieldNames.toSet
-      if (names.contains(fromCol) && names.contains(toCol)) {
-        Intervals.tryWriteIndexed(s, revDir(path, rev), fromCol, toCol, gran)
-        ()
-      }
+      if (hasAxes(p, s.schema)) writeSidecar(s, path, rev, p)
     }
 
   /** `jn:valid-at` over a revisioned table: stab the revision current at

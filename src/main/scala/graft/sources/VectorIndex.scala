@@ -22,17 +22,21 @@ import org.apache.spark.sql.functions._
   * when `m` > 0). MAINTAIN (the commit-hook body) brings the index to the
   * newest committed revision WITHOUT a rebuild:
   *
-  *  1. the new revision's NEW rows (ids absent from the last indexed
-  *     revision — one anti-join on the id, both sides snapshots) are
-  *     assigned to the STORED model's cells by [[IvfIndex.assignCells]]
-  *     (same argmin as the original fit, pure codegen, no refit);
+  *  1. the new revision's NEW and RE-EMBEDDED rows (one left join on the
+  *     id against the last indexed revision, both sides snapshots — the
+  *     increment, pinned so it is computed once) minus the (id, vector)
+  *     pairs the layout already stores are assigned to the STORED
+  *     model's cells by [[IvfIndex.assignCells]] (same argmin as the
+  *     original fit, pure codegen, no refit);
   *  2. plain IVF (`m` = 0): the assigned rows APPEND into their cell
   *     partitions — untouched cells' files are not rewritten;
-  *  3. NSW (`m` > 0): only the AFFECTED cells (those receiving new
-  *     vectors) re-derive their in-cell adjacency — existing members gain
-  *     edges to the new vectors and vice versa — and dynamic partition
-  *     overwrite rewrites exactly those `ivf_cell=` directories; every
-  *     other cell's files stay byte-identical (spec-pinned).
+  *  3. NSW (`m` > 0): one aggregate over the assigned rows yields the
+  *     AFFECTED cells (those receiving new vectors) and the indexed
+  *     count; only those cells re-derive their in-cell adjacency —
+  *     existing members gain edges to the new vectors and vice versa —
+  *     and dynamic partition overwrite rewrites exactly those `ivf_cell=`
+  *     directories; every other cell's files stay byte-identical
+  *     (spec-pinned).
   *
   * Search stays [[IvfIndex.searchClustered]] / [[NswGraph.searchGraph]]
   * over the index path — they see maintained vectors with no API change.
@@ -200,46 +204,52 @@ object VectorIndex {
     // on the id with an array-equality filter; array<double> compares
     // element-wise). A re-embedded row appends its new vector next to the
     // stale one: search(exact = true) recomputes from the snapshot, and
-    // rebuild purges.
+    // rebuild purges. Pinned: the increment feeds both the guard's id set
+    // and the anti-join below, and its two snapshot scans plus their join
+    // run once instead of once per use.
     val changed = snapshotVectors(spark, tablePath, latest, spec)
       .join(snapshotVectors(spark, tablePath, upTo, spec)
         .select(col(spec.idCol), col(spec.vecCol).as("__prev_vec")),
         Seq(spec.idCol), "left_outer")
       .filter(col("__prev_vec").isNull || col("__prev_vec") =!= col(spec.vecCol))
       .drop("__prev_vec")
-    // a row that re-embeds BACK to a vector already in the layout (A→B→A
-    // across maintains: rev-over-rev diff sees B→A as changed, but the A
-    // copy from the first index pass is still stored) must not append a
-    // byte-identical duplicate — raw search would return the id twice.
-    // The guard anti-joins the increment against the layout's (id, vec)
-    // pairs for exactly the increment's ids (semi-join first so only the
-    // touched ids' index rows join, not the whole layout).
-    val incrementIds = broadcast(changed.select(spec.idCol).distinct())
-    val alreadyStored = spark.read.parquet(path)
-      .select(col(spec.idCol), col(spec.vecCol))
-      .join(incrementIds, Seq(spec.idCol), "left_semi")
-    val newRows = changed.join(alreadyStored,
-      Seq(spec.idCol, spec.vecCol), "left_anti")
-    val assigned = IvfIndex.assignCells(newRows, model, spec.vecCol)
-      .withColumn("ivf_cell", col("ivf_cell").cast("int"))
+      .persist()
     val count =
-      if (spec.m > 0) patchGraphCells(spark, path, assigned, spec)
-      else {
-        // plain IVF / IVF-PQ: append into the cell partitions — no
-        // existing file is rewritten, untouched cells aren't even listed.
-        // PQ rows encode with the STORED codebooks (no refit — same
-        // fixed-quantizer discipline as the centroids; drift degrades
-        // recall, not correctness, until rebuild)
-        val rows =
-          if (spec.pqM > 0) Pq.encode(assigned, spec.vecCol, Pq.readModel(path))
-          else assigned
-        val pinned = rows.persist()
-        try {
-          val n = pinned.count()
-          if (n > 0) pinned.write.mode("append").partitionBy("ivf_cell").parquet(path)
-          n
-        } finally { pinned.unpersist(); () }
-      }
+      try {
+        // a row that re-embeds BACK to a vector already in the layout
+        // (A→B→A across maintains: rev-over-rev diff sees B→A as changed,
+        // but the A copy from the first index pass is still stored) must
+        // not append a byte-identical duplicate — raw search would return
+        // the id twice. The guard anti-joins the increment against the
+        // layout's (id, vec) pairs for exactly the increment's ids
+        // (semi-join first so only the touched ids' index rows join, not
+        // the whole layout).
+        val incrementIds = broadcast(changed.select(spec.idCol).distinct())
+        val alreadyStored = graft.plans.FooterSchemas.readParquet(spark, path)
+          .select(col(spec.idCol), col(spec.vecCol))
+          .join(incrementIds, Seq(spec.idCol), "left_semi")
+        val newRows = changed.join(alreadyStored,
+          Seq(spec.idCol, spec.vecCol), "left_anti")
+        val assigned = IvfIndex.assignCells(newRows, model, spec.vecCol)
+          .withColumn("ivf_cell", col("ivf_cell").cast("int"))
+        if (spec.m > 0) patchGraphCells(spark, path, assigned, spec)
+        else {
+          // plain IVF / IVF-PQ: append into the cell partitions — no
+          // existing file is rewritten, untouched cells aren't even
+          // listed. PQ rows encode with the STORED codebooks (no refit —
+          // same fixed-quantizer discipline as the centroids; drift
+          // degrades recall, not correctness, until rebuild)
+          val rows =
+            if (spec.pqM > 0) Pq.encode(assigned, spec.vecCol, Pq.readModel(path))
+            else assigned
+          val pinned = rows.persist()
+          try {
+            val n = pinned.count()
+            if (n > 0) pinned.write.mode("append").partitionBy("ivf_cell").parquet(path)
+            n
+          } finally { pinned.unpersist(); () }
+        }
+      } finally { changed.unpersist(); () }
     writeWatermark(tablePath, name, latest)
     count
   }
@@ -253,11 +263,12 @@ object VectorIndex {
                               assigned: DataFrame, spec: Spec): Long = {
     val pinned = assigned.persist()
     try {
-      val affected = pinned.select("ivf_cell").distinct()
-        .collect().map(_.getInt(0)).sorted
-      if (affected.isEmpty) return 0L
-      val n = pinned.count()
-      val existing = spark.read.parquet(path)
+      // the affected cells and the indexed count from ONE aggregate job
+      val perCell = pinned.groupBy("ivf_cell").count().collect()
+      if (perCell.isEmpty) return 0L
+      val affected = perCell.map(_.getInt(0)).sorted
+      val n = perCell.map(_.getLong(1)).sum
+      val existing = graft.plans.FooterSchemas.readParquet(spark, path)
         .filter(col("ivf_cell").isin(affected.toSeq: _*))
         .select(col(spec.idCol), col(spec.vecCol), col("ivf_cell").cast("int"))
       val merged = existing.unionByName(pinned)

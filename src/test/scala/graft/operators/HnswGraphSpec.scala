@@ -195,6 +195,68 @@ class HnswGraphSpec extends SparkSpec {
     }
   }
 
+  /** Adjacency (every node, every layer) plus the eval count, hashed —
+    * the build's exact output, pinned across kernel rewrites. */
+  private def buildDigest(vecs: Array[Array[Double]], levels: Array[Int],
+                          m: Int, ef: Int): String = {
+    val (adj, evals) = HnswGraph.insertBuild(vecs, levels, m, ef)
+    val sb = new StringBuilder
+    adj.zipWithIndex.foreach { case (layers, i) =>
+      sb.append(i).append(':')
+      layers.foreach(l => sb.append(l.mkString(",")).append('|'))
+      sb.append('\n')
+    }
+    sb.append("evals=").append(evals)
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(sb.toString.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+  }
+
+  test("insertion build reproduces the pinned adjacency and eval count") {
+    def gauss(n: Int, dim: Int, seed: Long): Array[Array[Double]] = {
+      val r = new scala.util.Random(seed)
+      Array.fill(n)(Array.fill(dim)(r.nextGaussian()))
+    }
+    def flat(n: Int) = Array.fill(n)(0)
+    def layered(n: Int, mL: Int) = Array.tabulate(n)(i => HnswGraph.levelOf(i.toLong, mL))
+    // coarse values: many exactly tied similarities, so every tie-break
+    // on (sim, index) shows in the adjacency
+    val coarse = {
+      val r = new scala.util.Random(6)
+      Array.fill(300)(Array.fill(4)((r.nextInt(5) - 2).toDouble))
+    }
+    // zero vectors and NaN components spread through a normal population
+    val weird = gauss(120, 8, 7).zipWithIndex.map { case (v, i) =>
+      if (i % 7 == 0) Array.fill(8)(0.0)
+      else if (i % 11 == 0) v.updated(i % 8, Double.NaN)
+      else v
+    }
+    // vectors of unequal length: cosine over the common prefix
+    val ragged = {
+      val r = new scala.util.Random(8)
+      Array.tabulate(200)(i => Array.fill(8 + i % 3)(r.nextGaussian()))
+    }
+    val got = Seq(
+      "flat260" -> buildDigest(gauss(260, 16, 1), flat(260), 8, 64),
+      "flat1040" -> buildDigest(gauss(1040, 16, 2), flat(1040), 8, 64),
+      "layered-mL4" -> buildDigest(gauss(600, 16, 3), layered(600, 4), 6, 48),
+      "layered-mL16" -> buildDigest(gauss(1040, 16, 4), layered(1040, 16), 8, 64),
+      "duplicates" -> buildDigest(Array.fill(64)(Array(1.0, 2.0, 3.0)),
+        layered(64, 16), 4, 16),
+      "zero-nan" -> buildDigest(weird, layered(120, 4), 4, 16),
+      "tiny-zero-nan" -> buildDigest(Array(Array(0.0, 0.0), Array(1.0, 0.0),
+        Array(Double.NaN, 1.0), Array(0.0, 1.0), Array(0.0, 0.0)), flat(5), 2, 8),
+      "ties" -> buildDigest(coarse, layered(300, 4), 6, 32),
+      "ragged-flat" -> buildDigest(ragged, flat(200), 6, 32),
+      "ragged-layered" -> buildDigest(ragged, layered(200, 4), 6, 32))
+    val pinned = Seq(
+      "flat260" -> "74d2810641f65466", "flat1040" -> "d89592a1cdfa3409",
+      "layered-mL4" -> "98d6f6d1de9792e6", "layered-mL16" -> "f212e95bf803e10a",
+      "duplicates" -> "d45fe64146dd91f6", "zero-nan" -> "df1294e16a192476",
+      "tiny-zero-nan" -> "b7ca6e42235a5f94", "ties" -> "e7b2cc46773fc284",
+      "ragged-flat" -> "1ea9c2ce34aff4c3", "ragged-layered" -> "20295a9c078c165e")
+    assert(got == pinned, got.map { case (k, v) => s"$k -> $v" }.mkString("\n"))
+  }
+
   test("search is deterministic run to run") {
     val p = freshPath()
     val (model, assigned) = IvfIndex.fit(emb, "embedding", nLists = 4)

@@ -116,4 +116,24 @@ class PlanCacheSpec extends SparkSpec {
       case None => sys.props.remove("graft.shred.min"); ()
     }
   }
+
+  test("a burst of new texts evicts the coldest plans, never the hot one") {
+    val st = freshStore("graft-plancache")
+    st.store("c", "d", doc(3))
+    val hot = "jn:doc('c','d').a"
+    val plan = JsoniqRun.run(st, hot)
+    val burst = (1 to 70).map { i =>
+      val p = JsoniqRun.run(st, s"jn:doc('c','d').a + $i")
+      assert(st.planCacheSize <= JsoniqRun.PlanCacheCap)
+      // the hot text keeps being used while the burst goes by
+      if (i % 10 == 0) assert(JsoniqRun.run(st, hot) eq plan, s"hot plan evicted after $i texts")
+      p
+    }
+    assert(st.planCacheSize == JsoniqRun.PlanCacheCap)
+    assert(JsoniqRun.run(st, hot) eq plan)
+    assert(JsoniqRun.serialize(st, hot) === "3")
+    // the burst's oldest text was evicted; its newest is still a hit
+    assert(JsoniqRun.run(st, "jn:doc('c','d').a + 1") ne burst.head)
+    assert(JsoniqRun.run(st, "jn:doc('c','d').a + 70") eq burst.last)
+  }
 }

@@ -106,6 +106,52 @@ class TemporalTableSpec extends SparkSpec {
     assert(d.contains((3L, "delete")) && d.contains((1L, "update")))
   }
 
+  test("snapshot opens take the schema from one footer, with no Spark job") {
+    val p = freshPath()
+    val meta = new org.apache.spark.sql.types.MetadataBuilder().putString("unit", "eur").build()
+    TemporalTable.write(rev1.withColumn("price", $"price".as("price", meta)), p)
+    TemporalTable.write(rev2, p)
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(pr =>
+          Option(pr.getProperty("spark.job.description"))).getOrElse("?"))
+    }
+    sc.addSparkListener(listener)
+    val opened =
+      try {
+        val dfs = Seq(TemporalTable.read(spark, p, Some(1)), TemporalTable.read(spark, p, Some(2)),
+          graft.plans.FooterSchemas.readParquet(spark, s"$p/rev=1"))
+        // listener events arrive in order: once the marker job shows up,
+        // every job the opens launched has too
+        sc.setJobDescription("marker")
+        try sc.parallelize(Seq(1)).count() finally sc.setJobDescription(null)
+        val deadline = System.nanoTime() + 10000000000L
+        while (!seen.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
+        dfs
+      } finally sc.removeSparkListener(listener)
+    assert(seen.toArray.toSeq == Seq("marker"), s"jobs launched while opening: $seen")
+    // the resolved schema is inference's, column metadata included
+    Seq(1, 2).foreach { r =>
+      assert(opened(r - 1).drop("revision", "commit_ts", "author").schema ==
+        spark.read.parquet(s"$p/rev=$r").schema)
+    }
+    assert(opened(2).schema("price").metadata == meta)
+    // partitioned layouts and explicit file lists resolve the same way
+    val parts = s"$p/_parts"
+    rev2.write.partitionBy("name").parquet(parts)
+    assert(graft.plans.FooterSchemas.readParquet(spark, parts).schema ==
+      spark.read.parquet(parts).schema)
+    val files = MetaIO.listFiles(s"$p/rev=2").map { case (n, _) => s"$p/rev=2/$n" }
+    assert(graft.plans.FooterSchemas.readParquet(spark, files: _*).schema ==
+      spark.read.parquet(files: _*).schema)
+    // a directory with no data file still fails like inference does
+    val empty = Files.createTempDirectory("graft-tt-empty").toString
+    intercept[org.apache.spark.sql.AnalysisException](
+      graft.plans.FooterSchemas.readParquet(spark, empty))
+  }
+
   test("unknown revision raises") {
     val p = freshPath()
     TemporalTable.write(rev1, p)

@@ -42,6 +42,60 @@ class ValidTimeIndexSpec extends SparkSpec {
       ValidTimeIndex.validAt(spark, p, 555L, Some(2)).count())
   }
 
+  test("merge writes the fork sidecar writeIndexed builds from the committed revision") {
+    val p = tmp("graft-vti-merge")
+    TemporalTable.write(frame(300), p)
+    ValidTimeIndex.setPolicy(p, "vf", "vt", granularity = 64)
+    val ups = Seq((5L, 7000L, Option(7400L)), (120L, 12000L, None),
+        (301L, 30100L, Option(30250L)), (302L, 150L, Option(29000L)))
+      .toDF("node_key", "vf", "vt")
+    val rev = TemporalTable.merge(spark, p, ups, Some(Seq(10L, 11L, 300L).toDF("node_key")))
+    val ref = tmp("graft-vti-merge-ref")
+    Intervals.writeIndexed(TemporalTable.read(spark, p, Some(rev))
+      .drop("revision", "commit_ts", "author"), ref, "vf", "vt", 64)
+    val got = Intervals.readIndexed(spark, s"$p/_vindex/rev=$rev")
+    val want = Intervals.readIndexed(spark, ref)
+    assert(got.schema == want.schema)
+    assert(got.schema(Intervals.ForkCol).metadata == want.schema(Intervals.ForkCol).metadata)
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.select("node_key", "vf", "vt", Intervals.ForkCol, Intervals.ForkPartCol)
+        .collect().map(_.toString).sorted.toSeq
+    assert(rowsOf(got) == rowsOf(want) && rowsOf(got).size == 299)
+    // and the sidecar serves stabs as the plain scan answers them
+    val snap = TemporalTable.read(spark, p, Some(rev)).select("node_key", "vf", "vt")
+      .as[(Long, Long, Option[Long])].collect()
+    (0 until 20).map(i => i * 1543L % 31000L).foreach { ts =>
+      val stab = ValidTimeIndex.validAt(spark, p, ts).select("node_key").as[Long]
+        .collect().sorted.toSeq
+      val scan = snap.filter { case (_, vf, vt) => vf <= ts && vt.forall(_ > ts) }
+        .map(_._1).sorted.toSeq
+      assert(stab == scan && (ts == 0L || scan.nonEmpty), s"ts=$ts")
+    }
+  }
+
+  test("a failing fork-sidecar job aborts the commit and leaves no sidecar") {
+    val p = tmp("graft-vti-abort")
+    TemporalTable.write(frame(50), p)
+    // a policy on a text column: the data write, manifest and key index
+    // all succeed, only the fork job's numeric cast fails (ANSI mode)
+    ValidTimeIndex.setPolicy(p, "label", "vt", granularity = 64)
+    val bad = frame(60).withColumn("label", lit("not-a-number"))
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try intercept[Exception](TemporalTable.write(bad, p))
+    finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert(TemporalTable.commits(p).map(_.revision) == Seq(1))
+    Seq(s"$p/rev=2", s"$p/_keyindex/rev=2", s"$p/_vindex/rev=2").foreach(d =>
+      assert(!MetaIO.exists(d), s"aborted commit left $d"))
+    assert(!MetaIO.list(p).exists(_.startsWith(".manifest-tmp")), "manifest temp dir left")
+    // the table stays writable once the policy is repaired
+    ValidTimeIndex.setPolicy(p, "vf", "vt", granularity = 64)
+    val rev = TemporalTable.write(frame(60), p)
+    assert(MetaIO.exists(s"$p/_vindex/rev=$rev"))
+    assert(ValidTimeIndex.validAt(spark, p, 555L).count() ==
+      TemporalTable.read(spark, p).filter($"vf" <= 555L && ($"vt".isNull || $"vt" > 555L)).count())
+  }
+
   test("the stab plan reads only the fork partitions on the instant's root path") {
     val p = tmp("graft-vti-prune")
     ValidTimeIndex.setPolicy(p, "vf", "vt", granularity = 64)

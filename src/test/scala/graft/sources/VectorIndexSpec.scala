@@ -361,6 +361,32 @@ class VectorIndexSpec extends SparkSpec {
     assert(top.contains(2L), s"graph search broken after purge: ${top.toSeq}")
   }
 
+  test("NSW maintain after three merges reproduces the pinned layout rows") {
+    val p = Files.createTempDirectory("graft-vecidx-golden").resolve("tbl").toString
+    TemporalTable.write(rows(0L until 240L), p)
+    VectorIndex.create(spark, p, "gold", "node_key", "embedding", nLists = 4, m = 4)
+    // each merge inserts fresh ids, re-embeds a few existing ones (a new
+    // wobble slot, same cluster) and deletes a few
+    def reEmbed(ids: Seq[Long]) =
+      ids.map(id => (id, vec((id % 4).toInt, id + 1000L).toSeq)).toDF("node_key", "embedding")
+    Seq((300L, 0L), (330L, 60L), (360L, 120L)).foreach { case (fresh, touched) =>
+      val ups = rows(fresh until fresh + 12L).unionByName(reEmbed(touched until touched + 6L))
+      val dels = Seq(touched + 20L, touched + 21L).toDF("node_key")
+      TemporalTable.merge(spark, p, ups, Some(dels))
+    }
+    assert(VectorIndex.maintain(spark, p, "gold") == 54L)
+    val lines = spark.read.parquet(s"$p/_vecidx/gold")
+      .select("node_key", "embedding", "ivf_cell", "nsw_neighbors")
+      .as[(Long, Seq[Double], Int, Seq[Long])].collect()
+      .map { case (id, v, cell, nbrs) =>
+        s"$id|${v.map(d => java.lang.Double.doubleToLongBits(d).toHexString).mkString(",")}" +
+          s"|$cell|${nbrs.mkString(",")}"
+      }.sorted
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(lines.mkString("\n").getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+    assert((lines.length, digest) == ((294, "b25aa8f4d8bd803c")), s"${lines.length} rows, digest $digest")
+  }
+
   test("commit hook wires maintenance into the write path") {
     val p = Files.createTempDirectory("graft-vecidx-hook").resolve("tbl").toString
     TemporalTable.write(rows(0L until 32L), p)
