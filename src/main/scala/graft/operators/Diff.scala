@@ -28,9 +28,9 @@ object Diff {
     * isNull flag (always non-null) makes the folded input sequence differ
     * whenever the null pattern differs. Zero columns digest to a constant
     * (pure existence diff). */
-  private def rowDigest(cols: Seq[String]): org.apache.spark.sql.Column =
+  private def rowDigest(cols: Seq[org.apache.spark.sql.Column]): org.apache.spark.sql.Column =
     if (cols.isEmpty) lit(0L)
-    else xxhash64(cols.flatMap(c => Seq(col(c), col(c).isNull)): _*)
+    else xxhash64(cols.flatMap(c => Seq(c, c.isNull)): _*)
 
   /** Change records between two snapshots of the same logical table.
     *
@@ -58,13 +58,11 @@ object Diff {
     // from the same DataFrame (adjacent snapshots of one changelog — the
     // common case), dataset-apply conditions like l(k) === r(k) hit
     // Spark's ambiguous-self-join resolution and can silently degenerate.
-    // Unique names make the condition unambiguous by construction.
-    def prep(df: DataFrame, p: String): DataFrame = {
-      val base = df.select((keys ++ cmp).map(col): _*)
-        .withColumn("__hash", rowDigest(cmp))
-        .withColumn("__present", lit(true))
-      base.toDF(base.columns.map(p + _): _*)
-    }
+    // Unique names make the condition unambiguous by construction. One
+    // projection per side: every Dataset step re-analyzes the whole plan.
+    def prep(df: DataFrame, p: String): DataFrame =
+      df.select((keys ++ cmp).map(c => col(c).as(p + c)) ++
+        Seq(rowDigest(cmp.map(col)).as(p + "__hash"), lit(true).as(p + "__present")): _*)
     val l = prep(left, "__l_")
     val r = prep(right, "__r_")
 
@@ -132,7 +130,7 @@ object Diff {
                      compare: Seq[String],
                      numBuckets: Int = 65536): DataFrame = {
     df.withColumn("__bucket", bucketExpr(keys, numBuckets))
-      .withColumn("__rowhash", rowDigest(keys ++ compare))
+      .withColumn("__rowhash", rowDigest((keys ++ compare).map(col)))
       .groupBy("__bucket")
       .agg(expr("bit_xor(__rowhash)").as("digest"),
         sum(pmod(col("__rowhash"), lit(1000003L))).as("digest_sum"),
@@ -146,15 +144,18 @@ object Diff {
     (keys ++ compare).mkString(",") + s"|buckets=$numBuckets"
 
   /** Bucket ids that provably differ between two manifests (missing on
-    * either side, or any digest/count mismatch). */
-  def changedBuckets(ml: DataFrame, mr: DataFrame): DataFrame =
-    ml.select(col("__bucket"), col("digest").as("ld"),
-        col("digest_sum").as("ls"), col("cnt").as("lc"))
-      .join(mr.select(col("__bucket"), col("digest").as("rd"),
-        col("digest_sum").as("rs"), col("cnt").as("rc")), Seq("__bucket"), "full_outer")
-      .filter(col("ld").isNull || col("rd").isNull ||
-        col("ld") =!= col("rd") || col("ls") =!= col("rs") || col("lc") =!= col("rc"))
-      .select("__bucket")
+    * either side, or any digest/count mismatch), as a local relation:
+    * a manifest has at most `numBuckets` rows by construction, so both
+    * are compared on the driver — one collect each, and the slice's
+    * broadcast of the result needs no job of its own. */
+  def changedBuckets(ml: DataFrame, mr: DataFrame): DataFrame = {
+    def load(m: DataFrame) =
+      m.select("__bucket", "digest", "digest_sum", "cnt").collect()
+        .map(r => r.getLong(0) -> r).toMap
+    val (l, r) = (load(ml), load(mr))
+    val ids = (l.keySet ++ r.keySet).filter(b => l.get(b) != r.get(b)).toSeq.sorted
+    ml.sparkSession.createDataFrame(ids.map(Tuple1(_))).toDF("__bucket")
+  }
 
   /** [[prunedDiff]] driven by STORED manifests: each snapshot is scanned
     * ONCE, and the manifests themselves are `numBuckets`-row sidecars —
@@ -162,18 +163,19 @@ object Diff {
     * files plus the changed slice, instead of scanning both snapshots
     * twice to recompute what the writer already knew.
     *
-    * The broadcast semi-join slice is KEPT deliberately — two
-    * alternatives were measured same-JVM (r17) and both lost:
+    * The slice is a broadcast semi-join against the changed bucket ids.
+    * Two alternatives were measured same-JVM (r17) and both lost:
     * (a) a write-time materialized, cluster-sorted bucket COLUMN, which
     * would have made the slice a pushed scan predicate, costs ~45% on
     * every snapshot write and bloats files 9-20% (random hash ids do not
     * compress, and sorting by them destroys every other column's natural
-    * run-length); (b) collecting the changed set and slicing with a
-    * literal IN — with or without an adaptive size cutoff — pays an
-    * extra eager probe-collect job (~0.2 s) that exceeds the saved
-    * broadcast exchanges at every change-set size, and past ~1000
-    * literals adds ~0.4 s of planning/codegen per call besides.
-    * OPTIMIZATION_r17.md has the numbers. */
+    * run-length); (b) slicing with a literal IN of the changed ids adds
+    * ~0.4 s of planning/codegen per call past ~1000 literals.
+    * OPTIMIZATION_r17.md has the numbers. The ids themselves come from
+    * [[changedBuckets]]'s driver-side comparison: at commit time, where
+    * this runs beside the other sidecar jobs, the two manifest collects
+    * and a job-free local broadcast shortened the change set's chain of
+    * dependent jobs against a shuffle join of the manifests. */
   def prunedDiffFromManifests(left: DataFrame, right: DataFrame,
                               leftManifest: DataFrame, rightManifest: DataFrame,
                               keys: Seq[String], compare: Seq[String] = Seq.empty,
@@ -182,11 +184,46 @@ object Diff {
       if (compare.nonEmpty) compare
       else left.columns.toSeq.intersect(right.columns.toSeq).filterNot(keys.contains)
     val changed = changedBuckets(leftManifest, rightManifest)
-    def slice(df: DataFrame) = df
-      .withColumn("__bucket", bucketExpr(keys, numBuckets))
-      .join(broadcast(changed), Seq("__bucket"), "left_semi")
-      .drop("__bucket")
+    def slice(df: DataFrame) =
+      df.join(broadcast(changed), bucketExpr(keys, numBuckets) === changed("__bucket"), "left_semi")
     diff(slice(left), slice(right), keys, cmp)
+  }
+
+  /** Compose per-revision change records into the change records between
+    * the state before the first revision and the state after the last —
+    * how stored change sets (a temporal table's `rev=N/_changes`, each
+    * revision's [[diff]] against its predecessor) serve a diff across
+    * several revisions, or a vector index's increment, without a
+    * snapshot scan. Per key, the first record's `old_*` is the state
+    * before (absent when that record is an insert) and the last record's
+    * `new_*` the state after (absent when it is a delete); the pair then
+    * classifies exactly as [[diff]] does, by the same row digest over
+    * `compare`, so a key that changed and changed back drops out. The
+    * digest equates values SQL equality equates (0.0 and -0.0): a
+    * revision that only flips such a value records no change, so the
+    * composed `old_*` can carry the later of two equal encodings.
+    *
+    * @param changes [[diff]]'s rows over `keys` and `compare`, plus
+    *                `revCol` ordering each key's records
+    * @return [[diff]]'s rows for the composed change
+    */
+  def composeChanges(changes: DataFrame, keys: Seq[String], compare: Seq[String],
+                     revCol: String): DataFrame = {
+    def side(prefix: String) =
+      struct(col("change_type") +: compare.map(c => col(s"$prefix$c").as(c)): _*)
+    val before = col("__first.change_type") =!= "insert"
+    val after = col("__last.change_type") =!= "delete"
+    def digest(s: String) = rowDigest(compare.map(c => col(s).getField(c)))
+    val changeType = when(!before && after, "insert")
+      .when(before && !after, "delete")
+      .when(before && after && digest("__first") =!= digest("__last"), "update")
+    changes.groupBy(keys.map(col): _*)
+      .agg(min_by(side("old_"), col(revCol)).as("__first"),
+        max_by(side("new_"), col(revCol)).as("__last"))
+      .select(keys.map(col) ++ Seq(changeType.as("change_type")) ++
+        compare.flatMap(c => Seq(col("__first").getField(c).as(s"old_$c"),
+          col("__last").getField(c).as(s"new_$c"))): _*)
+      .filter(col("change_type").isNotNull)
   }
 
   /** Change records in delta-storage shape (DeltaTemporalTable): keys

@@ -349,10 +349,11 @@ private[graft] class GraftTable(options: CaseInsensitiveStringMap)
             // sidecars BEFORE the log entry: a committed revision always
             // carries its key index + manifest, so a V2 append never
             // degrades recordRevisions / manifest-pruned diff fast paths
-            TemporalTable.writeSidecars(spark, tablePath, nextRev, dataSchema)
+            val sidecars =
+              TemporalTable.writeSidecars(spark, tablePath, nextRev, dataSchema)
             // log AFTER data commit: a failed job never becomes a revision
             TemporalTable.logCommit(tablePath, nextRev, author, message,
-              Some(dataSchema))
+              Some(dataSchema), sidecars)
             TemporalTable.maybeAutoCompactKeyIndex(spark, tablePath)
             RevisionCompaction.maybeAutoCompact(spark, tablePath)
           }

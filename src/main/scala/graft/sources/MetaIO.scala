@@ -289,7 +289,7 @@ private[graft] object MetaIO {
     // there would stall concurrent commit-log readers for nothing.
     val name = new Path(path).getName
     val dataSubtree = name.matches(
-      "rev=\\d+|_c\\d+|ivf_cell=[-\\d]+|compact_upto=\\d+|_keyindex|_vecidx|_vindex|_stats")
+      "rev=\\d+|_c\\d+|ivf_cell=[-\\d]+|compact_upto=\\d+|_keyindex|_vecidx|_vindex|_stats|_changes")
     if ((recursive && !dataSubtree) || path.endsWith(".json")) purgeCached(path)
     try fs(path).delete(new Path(path), recursive)
     catch { case _: FileNotFoundException => false }

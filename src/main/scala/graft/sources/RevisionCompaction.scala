@@ -44,10 +44,13 @@ import org.apache.spark.sql.SparkSession
   *   rev=3/_c1/part-*.parquet        // generation 1 (bin-packed)
   *   rev=3/_manifest/                // diff sidecar — content-addressed,
   *                                   // survives compaction untouched
+  *   rev=3/_changes/                 // rev 3's change rows against its
+  *                                   // predecessor — content, untouched
   * }}}
   *
   * Sidecars: the diff `_manifest` digests CONTENT (bucket hashes), not
-  * files, so it stays valid; the `_stats` sidecar fingerprints the file
+  * files, so it stays valid, as do the `_changes` change rows; the
+  * `_stats` sidecar fingerprints the file
   * set, so compaction regenerates it inside the generation directory with
   * the same recipe (AggFromStatsRule probes the scan's root path — the
   * generation dir — and keeps folding); the `_keyindex` tree is keyed by
@@ -231,8 +234,8 @@ object RevisionCompaction {
   /** Delete the files a revision's newest generation superseded: older
     * generation directories, and — when the live generation replaced the
     * ORIGINAL layout — the original data files named in the commit
-    * manifest (only those: the `_manifest` diff sidecar and any other
-    * underscore children of `rev=N/` stay). Idempotent. */
+    * manifest (only those: the `_manifest` and `_changes` diff sidecars
+    * and any other underscore children of `rev=N/` stay). Idempotent. */
   private def vacuumRevision(path: String, rev: Int,
                              originalFiles: Seq[(String, Long)], keepGen: Int): Unit = {
     // superseded generations

@@ -15,6 +15,8 @@ import org.apache.spark.sql.functions._
   *   _commits/00000001.json   // {"revision":1,"commitTsMs":...,"author":...}
   *   rev=1/part-*.parquet     // full snapshot at revision 1
   *   rev=2/part-*.parquet
+  *   rev=2/_manifest/         // bucket digests of rev 2 (diff pruning)
+  *   rev=2/_changes/          // rev 2's change rows against rev 1
   * }}}
   *
   * One JSON file per commit keeps the log append-only without read-modify-
@@ -292,11 +294,14 @@ object TemporalTable {
     * commit log alone — zero per-revision directory listings on an aged
     * table, the same move the reference makes by keeping page references
     * in its UberPage instead of scanning storage
-    * (bundles/sirix-core/src/main/java/io/sirix/page/UberPage.java). */
+    * (bundles/sirix-core/src/main/java/io/sirix/page/UberPage.java).
+    * `sidecars` records the revision's manifest signature and change-set
+    * base ([[DiffSidecars]]) for the diff, feed and vector readers. */
   private[graft] def logCommit(path: String, rev: Int, author: String,
                                message: String,
                                schema: Option[org.apache.spark.sql.types.StructType]
-                                 = None): Unit = {
+                                 = None,
+                               sidecars: DiffSidecars = DiffSidecars.none): Unit = {
     requireOwnership(path, rev)
     MetaIO.mkdirs(commitsDir(path))
     val ts = System.currentTimeMillis()
@@ -310,9 +315,13 @@ object TemporalTable {
     // schemaless — any revision may shape its documents differently)
     val schemaField = schema
       .map(s => s""""schemaDdl":"${escapeJson(s.toDDL)}",""").getOrElse("")
+    val sidecarFields =
+      sidecars.manifestCols.map(c => s""""manifestCols":"${escapeJson(c)}",""")
+        .getOrElse("") +
+        sidecars.changesBase.map(b => s""""changesBase":$b,""").getOrElse("")
     val json = s"""{"revision":$rev,"commitTsMs":$ts,""" +
       s""""author":"${escapeJson(author)}","message":"${escapeJson(message)}",""" +
-      s""""files":"${escapeJson(files)}",$schemaField""" +
+      s""""files":"${escapeJson(files)}",$schemaField$sidecarFields""" +
       s""""writerId":"$token"}"""
     MetaIO.createNew(s"${commitsDir(path)}/${"%08d".format(rev)}.json", json)
     clearReservation(path, rev)
@@ -386,6 +395,42 @@ object TemporalTable {
 
   private[graft] def manifestDir(path: String, rev: Int): String =
     s"$path/rev=$rev/_manifest"
+
+  private[graft] def changesDir(path: String, rev: Int): String =
+    s"$path/rev=$rev/_changes"
+
+  /** The bucket count every stored manifest is digested at. */
+  private val ManifestBuckets = 65536
+
+  /** What a commit-log entry records about its revision's diff sidecars:
+    * the `_manifest` signature ([[graft.operators.Diff.manifestSignature]]
+    * — key and compared columns, in order) and the base revision the
+    * `_changes` change set was computed against. Absent on entries
+    * written before they were recorded, and on revisions without the
+    * sidecar in question. */
+  private[graft] final case class DiffSidecars(manifestCols: Option[String],
+                                               changesBase: Option[Int])
+  private[graft] object DiffSidecars { val none: DiffSidecars = DiffSidecars(None, None) }
+
+  /** Per-revision [[DiffSidecars]] from the commit log (same metadata
+    * pass as [[commits]]). */
+  private[graft] def commitDiffSidecars(path: String): Map[Int, DiffSidecars] =
+    commitEntryJsons(path).map { s =>
+      parseField(s, "revision").toInt -> DiffSidecars(
+        Option(parseField(s, "manifestCols")).filter(_.nonEmpty),
+        scala.util.Try(parseField(s, "changesBase").toInt).toOption)
+    }.toMap
+
+  /** Names and sizes of a sidecar directory's parquet part files. Readers
+    * open the files, never the directory: DataSource ignores an
+    * underscore- or dot-named directory as a hidden path. */
+  private def partFiles(dir: String): Seq[(String, Long)] =
+    MetaIO.listFiles(dir).filter(_._1.endsWith(".parquet"))
+
+  /** A sidecar directory's parquet part files as one frame. */
+  private def readPartFiles(spark: SparkSession, dir: String): DataFrame =
+    graft.plans.FooterSchemas.readParquet(spark,
+      partFiles(dir).map { case (n, _) => s"$dir/$n" }: _*)
 
   /** Append a new revision: reserve the revision number, write the full
     * snapshot plus its bucket-manifest sidecar (the reference's
@@ -516,12 +561,11 @@ object TemporalTable {
       onReserve(rev, writerToken(path, rev).getOrElse(""))
       // content-identical commit (compactHead): the manifest is bucket
       // digests over row CONTENT, independent of file layout — a byte
-      // copy of the source revision's sidecar replaces the full snapshot
-      // scan + shuffle the recomputation costs
+      // copy of the source revision's sidecar (made by the sidecar block,
+      // after the data write) replaces the full snapshot scan + shuffle
+      // the recomputation costs
       val copyManifest = manifestFromRev.filter(r =>
-        withManifest && MetaIO.exists(manifestDir(path, r)))
-      copyManifest.foreach(r =>
-        MetaIO.copyDir(manifestDir(path, r), manifestDir(path, rev)))
+        withManifest && partFiles(manifestDir(path, r)).nonEmpty)
       val wantManifest = withManifest && copyManifest.isEmpty &&
         manifestEligible(df.schema)
       // same contract for the key-index sidecar: rows are the snapshot's
@@ -553,7 +597,7 @@ object TemporalTable {
       // numbers. Diff keeps its broadcast semi-join slice over the
       // manifests instead (see Diff.prunedDiffFromManifests).
       val stats = if (withStats) Some((statsNdvCols, statsGroupCols)) else None
-      try {
+      val written = try {
         if (fromCache) {
           // digest source is the pinned frame: the revision write and the
           // sidecar digests (manifest, key index, valid-time forks) run as
@@ -566,7 +610,7 @@ object TemporalTable {
           // plan still runs once.
           writeRevisionSidecars(df.sparkSession, path, rev, src = frame,
             wantManifest = wantManifest, wantKeys = wantKeys, pinSrc = false,
-            explicitStats = stats,
+            explicitStats = stats, copiedManifest = copyManifest,
             alongside = () => frame.write.mode("overwrite").parquet(s"$path/rev=$rev"))
         } else {
           // a nondeterministic plan could recompute other rows than it
@@ -576,10 +620,10 @@ object TemporalTable {
           writeRevisionSidecars(df.sparkSession, path, rev,
             src = graft.plans.FooterSchemas.readParquet(df.sparkSession, s"$path/rev=$rev"),
             wantManifest = wantManifest, wantKeys = wantKeys, pinSrc = true,
-            explicitStats = stats)
+            explicitStats = stats, copiedManifest = copyManifest)
         }
       } finally if (pinHere) { frame.unpersist(); () }
-      logCommit(path, rev, author, message, Some(df.schema))
+      logCommit(path, rev, author, message, Some(df.schema), written)
     } catch {
       case e: Throwable => abortReservation(path, rev); throw e
     }
@@ -617,18 +661,83 @@ object TemporalTable {
         // every sidecar empty (no parquet part files) — nothing to scan
         spark.range(0).select(col("id").as("node_key"),
           col("id").cast("int").as("rev"))
-      case Some(rel) =>
-        val dataSchema = graft.plans.FooterSchemas.readParquet(spark, s"$kiDir/$rel").schema
-        // commit timestamps as the fabricated mtimes: stable, non-1970
-        // (path, len, mtime) cache keys — the CommitLogFileIndex rule
-        val index = new CommitLogFileIndex(kiDir, revFiles, revTimesMs)
-        val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-          index, index.partitionSchema, dataSchema, None,
-          new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
-          Map("basePath" -> kiDir))(spark)
-        spark.baseRelationToDataFrame(relation)
+      case Some(rel) => revisionFileScan(spark, kiDir, revFiles, revTimesMs, rel)
     }
   }
+
+  /** Per-revision parquet files under `root` (paths relative to it) as
+    * ONE relation with `rev` as the partition column: an explicit
+    * [[CommitLogFileIndex]], so planning lists nothing, infers no
+    * partitions, and reads one footer — `probe`'s — for the schema. */
+  private def revisionFileScan(spark: SparkSession, root: String,
+                               revFiles: Seq[(Int, Seq[(String, Long)])],
+                               revTimesMs: Map[Int, Long],
+                               probe: String): DataFrame = {
+    val dataSchema = graft.plans.FooterSchemas.readParquet(spark, s"$root/$probe").schema
+    // commit timestamps as the fabricated mtimes: stable, non-1970
+    // (path, len, mtime) cache keys — the CommitLogFileIndex rule
+    val index = new CommitLogFileIndex(root, revFiles, revTimesMs)
+    val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+      index, index.partitionSchema, dataSchema, None,
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+      Map("basePath" -> root))(spark)
+    spark.baseRelationToDataFrame(relation)
+  }
+
+  /** The stored change sets of the commit-log revisions after `from` up
+    * to `to`, as ONE relation: [[graft.operators.Diff.diff]]'s rows over
+    * `node_key`, each revision's against its commit-log predecessor, plus
+    * the revision as the partition column `rev`; with the compared
+    * columns, in order, and the number of revisions. None unless every
+    * one of them can be trusted: its entry names the predecessor as its
+    * base (a concurrent reservation, or [[commitCopyOf]]'s directory
+    * copy, can leave a change set against another revision) and carries
+    * the predecessor's manifest signature, and every revision of the run
+    * has one schema (so the sidecars share theirs). Callers then
+    * recompute from snapshots. */
+  private[graft] def changeSets(spark: SparkSession, path: String, from: Int,
+                                to: Int): Option[(DataFrame, Seq[String], Int)] = {
+    // one commit-log pass; fields are parsed for the run's entries only
+    val entries = commitEntryJsons(path).map(e => parseField(e, "revision").toInt -> e).toMap
+    val log = entries.keys.toSeq.sorted
+    val (i, j) = (log.indexOf(from), log.indexOf(to))
+    if (i < 0 || j <= i) return None
+    val run = log.slice(i, j + 1)
+    def field(r: Int, name: String) = parseField(entries(r), name)
+    val signature = field(from, "manifestCols")
+    val trusted = signature.nonEmpty && run.zip(run.tail).forall { case (p, r) =>
+      field(r, "changesBase") == p.toString && field(r, "manifestCols") == signature
+    }
+    val schemas = if (!trusted) Nil else run.map(r => scala.util.Try(
+      org.apache.spark.sql.types.StructType.fromDDL(field(r, "schemaDdl"))).toOption)
+    // nullability aside: every sidecar file is written all-nullable
+    if (!trusted || schemas.exists(_.isEmpty) ||
+        schemas.flatten.map(_.catalogString).distinct.size != 1) return None
+    val revFiles = MetaIO.parallelMap(run.tail)(r =>
+      r -> partFiles(changesDir(path, r)).map { case (n, size) =>
+        (s"rev=$r/_changes/$n", size) })
+    if (revFiles.exists(_._2.isEmpty)) return None
+    val times = run.map(r => r -> field(r, "commitTsMs").toLong).toMap
+    Some((revisionFileScan(spark, path, revFiles, times, revFiles.head._2.head._1),
+      schemas.head.get.fieldNames.toSeq.filterNot(_ == "node_key"), revFiles.size))
+  }
+
+  /** The change rows from revision `from` to a later `to` out of the
+    * stored change sets ([[changeSets]]) — [[graft.operators.Diff.diff]]'s
+    * rows over `node_key` and `compare` (default: every column) — or None
+    * when they are not all stored and trusted, or lack a `compare`
+    * column. An adjacent pair is its one change set; a longer run
+    * composes them per key ([[graft.operators.Diff.composeChanges]]). */
+  private[graft] def storedChanges(spark: SparkSession, path: String, from: Int, to: Int,
+                                   compare: Option[Seq[String]] = None): Option[DataFrame] =
+    changeSets(spark, path, from, to).collect {
+      case (changes, cols, revs) if compare.forall(_.forall(cols.contains)) =>
+        val cmp = compare.getOrElse(cols)
+        val rows = changes.select((Seq("node_key", "change_type") ++
+          cmp.flatMap(c => Seq(s"old_$c", s"new_$c"))).map(col) :+ col("rev"): _*)
+        if (revs == 1) rows.drop("rev")
+        else graft.operators.Diff.composeChanges(rows, Seq("node_key"), cmp, "rev")
+    }
 
   private[graft] def keyIndexCompactDir(path: String, upTo: Int): String =
     s"${keyIndexDir(path)}/compact_upto=$upTo"
@@ -756,7 +865,8 @@ object TemporalTable {
     * revision always carries its sidecars and the record-lookup /
     * manifest-diff fast paths never silently degrade after a V2 write. */
   private[graft] def writeSidecars(spark: SparkSession, path: String, rev: Int,
-                                   schema: org.apache.spark.sql.types.StructType): Unit =
+                                   schema: org.apache.spark.sql.types.StructType)
+      : DiffSidecars =
     writeRevisionSidecars(spark, path, rev,
       src = graft.plans.FooterSchemas.readParquet(spark, s"$path/rev=$rev"),
       wantManifest = manifestEligible(schema),
@@ -777,67 +887,106 @@ object TemporalTable {
     *     `alongside` runs on the calling thread meanwhile — the data
     *     write, when `src` is the pinned frame being committed. `pinSrc`
     *     pins `src` when more than one digest reads it (a fresh re-read
-    *     of the revision; the pinned frame is passed unpinned).
-    *  2. Then the stats policy (explicit opt-in or inherited recipe),
+    *     of the revision; the pinned frame is passed unpinned). With
+    *     `copiedManifest` (a content-identical commit) the manifest is a
+    *     byte copy of that revision's instead.
+    *  2. Beside them, the change set (the reference's CHANGED_NODES
+    *     index, written at commit): `src`'s change rows against the
+    *     newest committed revision, when that revision's manifest has the
+    *     same signature — [[graft.operators.Diff.prunedDiffFromManifests]]
+    *     of its stored manifest and the one this commit computes (pinned,
+    *     so the manifest job and this one aggregate it once), so only
+    *     changed buckets are sliced — renamed into `rev=N/_changes` like
+    *     the manifest.
+    *  3. Then the stats policy (explicit opt-in or inherited recipe),
     *     computed from the just-written files so the fingerprint
     *     provably covers the stats (StatsSidecar contract).
     *
     * A failure anywhere drains the in-flight digests BOUNDED before
     * rethrowing, and the caller's abort deletes `rev=N`, the key index
     * and `_vindex/rev=N`. `src` is by-name: the no-sidecar fast path must
-    * not pay its construction. */
+    * not pay its construction. Returns what the commit entry records
+    * about the manifest and change set. */
   private def writeRevisionSidecars(spark: SparkSession, path: String, rev: Int,
       src: => DataFrame, wantManifest: Boolean, wantKeys: Boolean,
       pinSrc: Boolean,
       explicitStats: Option[(Seq[String], Seq[Seq[String]])],
-      alongside: () => Unit = () => ()): Unit = {
+      copiedManifest: Option[Int] = None,
+      alongside: () => Unit = () => ()): DiffSidecars = {
     val policy = ValidTimeIndex.policy(path)
-    if (wantManifest || wantKeys || policy.isDefined) {
-      val s = src
-      val fork = policy.filter(ValidTimeIndex.hasAxes(_, s.schema))
-      val pin = pinSrc && Seq(wantManifest, wantKeys, fork.isDefined).count(identity) > 1
-      if (pin) s.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val manifestTmp = s"$path/.manifest-tmp-$rev"
-        val fMan =
-          if (wantManifest) Some(Future {
-            writeManifest(s, manifestTmp)
-          }) else None
-        val fKeys =
-          if (wantKeys) Some(Future {
-            s.select(col("node_key"))
-              .write.mode("overwrite").parquet(s"${keyIndexDir(path)}/rev=$rev")
-          }) else None
-        val fFork = fork.map(p => Future(ValidTimeIndex.writeSidecar(s, path, rev, p)))
+    val hasManifest = wantManifest || copiedManifest.isDefined
+    val recorded =
+      if (hasManifest || wantKeys || policy.isDefined) {
+        val s = src
+        val fork = policy.filter(ValidTimeIndex.hasAxes(_, s.schema))
+        val signature = graft.operators.Diff.manifestSignature(Seq("node_key"),
+          manifestCompare(s), ManifestBuckets)
+        val base = if (hasManifest) changeSetBase(path, rev, signature) else None
+        val pin = pinSrc &&
+          Seq(wantManifest, base.isDefined, wantKeys, fork.isDefined).count(identity) > 1
+        if (pin) s.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // the change set prunes by the manifest this commit computes: pinned,
+        // so the manifest job and the change set aggregate it once
+        val manifest = if (wantManifest) Some(graft.operators.Diff.bucketManifest(s,
+          Seq("node_key"), manifestCompare(s), ManifestBuckets)) else None
+        val pinManifest = manifest.isDefined && base.isDefined
+        if (pinManifest) manifest.get.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          alongside()
-          fMan.foreach { f =>
-            Await.result(f, Duration.Inf)
-            if (!MetaIO.rename(manifestTmp, manifestDir(path, rev)))
-              throw new java.io.IOException(
-                s"manifest rename $manifestTmp -> ${manifestDir(path, rev)} failed")
+          import scala.concurrent.{Await, Future}
+          import scala.concurrent.duration.Duration
+          import scala.concurrent.ExecutionContext.Implicits.global
+          val manifestTmp = s"$path/.manifest-tmp-$rev"
+          val changesTmp = s"$path/.changes-tmp-$rev"
+          // one sidecar file, not one tiny file per shuffle partition: the
+          // partial aggregation stays parallel (coalesce only merges the
+          // final agg), and every manifest READER — adjacent diff opens
+          // two manifests per call, aged histories thousands — pays one
+          // file open instead of spark.sql.shuffle.partitions of them
+          val fMan = manifest.map(m => Future(
+            m.coalesce(1).write.mode("overwrite").parquet(manifestTmp)))
+          val fChanges = base.map(b => Future(changeSet(spark, path, b, s,
+              manifest.getOrElse(readPartFiles(spark, manifestDir(path, copiedManifest.get))))
+            .write.mode("overwrite").parquet(changesTmp)))
+          val fKeys =
+            if (wantKeys) Some(Future {
+              s.select(col("node_key"))
+                .write.mode("overwrite").parquet(s"${keyIndexDir(path)}/rev=$rev")
+            }) else None
+          val fFork = fork.map(p => Future(ValidTimeIndex.writeSidecar(s, path, rev, p)))
+          val all = fMan.toSeq ++ fChanges.toSeq ++ fKeys.toSeq ++ fFork.toSeq
+          try {
+            alongside()
+            all.foreach(Await.result(_, Duration.Inf))
+            def publish(tmp: String, dst: String): Unit =
+              if (!MetaIO.rename(tmp, dst))
+                throw new java.io.IOException(s"sidecar rename $tmp -> $dst failed")
+            fMan.foreach(_ => publish(manifestTmp, manifestDir(path, rev)))
+            copiedManifest.foreach(r => MetaIO.copyDir(manifestDir(path, r), manifestDir(path, rev)))
+            fChanges.foreach(_ => publish(changesTmp, changesDir(path, rev)))
+          } catch {
+            case e: Throwable =>
+              // drain the in-flight sidecar jobs BOUNDED before the abort:
+              // a hung sidecar (stuck FS/task) must not delay
+              // abortReservation and the original error forever, and a
+              // fast data-write failure must not wait out full digests
+              // (ADVICE r16). A job still running past the bound races the
+              // abort's delete only on sidecar paths the abort re-deletes.
+              all.foreach(f =>
+                scala.util.Try(Await.result(
+                  f, scala.concurrent.duration.Duration(60, "s"))))
+              MetaIO.delete(manifestTmp, recursive = true)
+              MetaIO.delete(changesTmp, recursive = true)
+              throw e
           }
-          fKeys.foreach(Await.result(_, Duration.Inf))
-          fFork.foreach(Await.result(_, Duration.Inf))
-        } catch {
-          case e: Throwable =>
-            // drain the in-flight sidecar jobs BOUNDED before the abort:
-            // a hung sidecar (stuck FS/task) must not delay
-            // abortReservation and the original error forever, and a
-            // fast data-write failure must not wait out full digests
-            // (ADVICE r16). A job still running past the bound races the
-            // abort's delete only on sidecar paths the abort re-deletes.
-            (fMan.toSeq ++ fKeys.toSeq ++ fFork.toSeq).foreach(f =>
-              scala.util.Try(Await.result(
-                f, scala.concurrent.duration.Duration(60, "s"))))
-            MetaIO.delete(manifestTmp, recursive = true)
-            throw e
+        } finally {
+          if (pinManifest) manifest.get.unpersist()
+          if (pin) s.unpersist()
         }
-      } finally if (pin) { s.unpersist(); () }
-    } else alongside()
+        DiffSidecars(if (hasManifest) Some(signature) else None, base)
+      } else {
+        alongside()
+        DiffSidecars.none
+      }
     explicitStats match {
       case Some((ndv, groups)) =>
         StatsSidecar.write(spark, s"$path/rev=$rev",
@@ -847,6 +996,7 @@ object TemporalTable {
           ndvCols = ndv, groupCols = groups)
       }
     }
+    recorded
   }
 
   /** True iff every expression in the plan is deterministic — the
@@ -860,19 +1010,37 @@ object TemporalTable {
   private def planDeterministic(df: DataFrame): Boolean =
     !df.queryExecution.optimizedPlan.exists(_.expressions.exists(_.exists(!_.deterministic)))
 
-  /** The bucket-manifest sidecar of `snap`, written to `target` (the
-    * commit's temp dir, renamed into `rev=N/_manifest` by
-    * [[writeRevisionSidecars]]). */
-  private def writeManifest(snap: DataFrame, target: String): Unit =
-    graft.operators.Diff.bucketManifest(snap, Seq("node_key"),
-        snap.columns.toSeq.filterNot(_ == "node_key"))
-      // one 65536-row sidecar file, not one tiny file per shuffle
-      // partition: the partial aggregation stays parallel (coalesce only
-      // merges the final agg), and every manifest READER — adjacent diff
-      // opens two manifests per call, aged histories thousands — pays one
-      // file open instead of spark.sql.shuffle.partitions of them
-      .coalesce(1)
-      .write.mode("overwrite").parquet(target)
+  /** The columns a stored manifest digests beside the key, in order. */
+  private def manifestCompare(snap: DataFrame): Seq[String] =
+    snap.columns.toSeq.filterNot(_ == "node_key")
+
+  /** The change-set base for a commit of `rev` whose manifest has
+    * `signature`: the newest committed revision before it (one `_commits`
+    * name listing — numbering can have gaps), when its commit entry
+    * records the same signature and its manifest has a part file. None
+    * otherwise (first revision, a schema change, a base without a
+    * recorded manifest): readers then recompute. */
+  private def changeSetBase(path: String, rev: Int, signature: String): Option[Int] =
+    MetaIO.list(commitsDir(path))
+      .flatMap(n =>
+        if (n.endsWith(".json")) scala.util.Try(n.stripSuffix(".json").toInt).toOption
+        else None)
+      .filter(_ < rev).maxOption
+      .filter(b => commitDiffSidecars(path).get(b).flatMap(_.manifestCols).contains(signature) &&
+        partFiles(manifestDir(path, b)).nonEmpty)
+
+  /** `snap`'s change rows against revision `base` — in
+    * [[graft.operators.Diff.diff]]'s shape over `node_key` — pruned by
+    * `base`'s stored manifest and `snap`'s, `newManifest`. Adaptive
+    * execution sizes the output through the diff's own join shuffle: one
+    * file for a small change set, parallel writers for a rewrite of the
+    * table. */
+  private def changeSet(spark: SparkSession, path: String, base: Int,
+                        snap: DataFrame, newManifest: DataFrame): DataFrame =
+    graft.operators.Diff.prunedDiffFromManifests(rawSnapshot(spark, path, base), snap,
+        readPartFiles(spark, manifestDir(path, base)), newManifest,
+        Seq("node_key"),
+        manifestCompare(snap), ManifestBuckets)
 
   /** `jn:load` (reference: bundles/sirix-query/src/main/java/io/sirix/query/
     * function/jn/io/Load.java): ingest JSON document file(s) into a
@@ -1034,6 +1202,9 @@ object TemporalTable {
             MetaIO.copyFile(s"$dir/$n", s"$path/rev=$rev/$n") }
         case None =>
           MetaIO.copyDir(s"$path/rev=$srcRev", s"$path/rev=$rev")
+          // the source's change set is against the source's predecessor,
+          // not this revision's
+          MetaIO.delete(changesDir(path, rev), recursive = true)
       }
       if (MetaIO.exists(manifestDir(path, srcRev)))
         MetaIO.copyDir(manifestDir(path, srcRev), manifestDir(path, rev))
@@ -1041,7 +1212,8 @@ object TemporalTable {
         MetaIO.copyDir(s"${keyIndexDir(path)}/rev=$srcRev",
           s"${keyIndexDir(path)}/rev=$rev")
       val msg = if (message.nonEmpty) message else s"copy of r$srcRev"
-      logCommit(path, rev, author, msg, commitSchemas(path).get(srcRev))
+      logCommit(path, rev, author, msg, commitSchemas(path).get(srcRev),
+        DiffSidecars(commitDiffSidecars(path).get(srcRev).flatMap(_.manifestCols), None))
     } catch {
       case e: Throwable => abortReservation(path, rev); throw e
     }
@@ -1253,12 +1425,24 @@ object TemporalTable {
   }
 
   /** Semantic diff of two revisions (`jn:diff`, SURVEY.md §2.9) — hash-
-    * pruned by default (adjacent revisions are mostly identical, so the
-    * bucket-manifest pass drops the unchanged bulk before the join; the
-    * reference's DiffOptimized.HASHED motivation). When both revisions
-    * carry the write-time manifest sidecar for the requested key/compare
-    * columns, the pruning reads those instead of recomputing digests —
-    * each snapshot is scanned once, and only for its changed slice. */
+    * pruned by default. Served from what the commits stored, cheapest
+    * first:
+    *
+    *  1. the `rev=N/_changes` change sets (the reference's CHANGED_NODES
+    *     index): an adjacent pair is ONE sidecar read, a later pair the
+    *     per-key composition of the sidecars between
+    *     ([[graft.operators.Diff.composeChanges]]) — no snapshot is
+    *     scanned. Needs the default `node_key` key and a trusted sidecar
+    *     for every revision after `rev1` up to `rev2` ([[changeSets]]);
+    *  2. the `_manifest` bucket digests of both revisions, when their
+    *     commit entries record the signature of the requested key/compare
+    *     columns (entries written before signatures were recorded are
+    *     checked against the manifest's own `cols`): each snapshot is
+    *     scanned once, for its changed slice only (the reference's
+    *     DiffOptimized.HASHED);
+    *  3. digests recomputed from both snapshots.
+    *
+    * All three return [[graft.operators.Diff.diff]]'s rows. */
   def diff(spark: SparkSession, path: String, rev1: Int, rev2: Int,
            keys: Seq[String] = Seq("node_key"),
            hashPruned: Boolean = true): DataFrame = {
@@ -1268,28 +1452,38 @@ object TemporalTable {
     val log = commits(path)
     Seq(rev1, rev2).foreach(r => require(log.exists(_.revision == r),
       s"unknown revision $r at $path"))
-    // RAW frames: diff never needs the revision/commit_ts/author
-    // decoration the public read attaches (the old shape added the three
-    // literal columns only to drop them)
+    (if (hashPruned && keys == Seq("node_key") && rev1 < rev2)
+      storedChanges(spark, path, rev1, rev2) else None)
+      .getOrElse(recomputedDiff(spark, path, rev1, rev2, keys, hashPruned))
+  }
+
+  /** [[diff]] from the snapshots, pruned by stored or recomputed bucket
+    * manifests. RAW frames: diff never needs the revision/commit_ts/author
+    * decoration the public read attaches. */
+  private def recomputedDiff(spark: SparkSession, path: String, rev1: Int, rev2: Int,
+                             keys: Seq[String], hashPruned: Boolean): DataFrame = {
     val a = rawSnapshot(spark, path, rev1)
     val b = rawSnapshot(spark, path, rev2)
     if (!hashPruned) return graft.operators.Diff.diff(a, b, keys)
     val cmp = a.columns.toSeq.intersect(b.columns.toSeq).filterNot(keys.contains)
-    val expected = graft.operators.Diff.manifestSignature(keys, cmp, 65536)
+    val expected = graft.operators.Diff.manifestSignature(keys, cmp, ManifestBuckets)
+    val recorded = commitDiffSidecars(path)
     def storedManifest(rev: Int): Option[DataFrame] = {
       val dir = manifestDir(path, rev)
-      // the manifest's part files, listed explicitly: opening the
-      // underscore-named dir itself logs DataSource's hidden-path warning
-      val files = MetaIO.listFiles(dir).map { case (n, _) => s"$dir/$n" }
-      if (files.isEmpty) None
+      if (partFiles(dir).isEmpty) None
       else {
-        val m = graft.plans.FooterSchemas.readParquet(spark, files: _*)
-        // an empty manifest (empty snapshot) has no cols row to check —
-        // it prunes correctly regardless of the column choice
-        m.select("cols").limit(1).collect().headOption match {
-          case Some(r) if r.getString(0) == expected => Some(m)
-          case None => Some(m)
-          case _ => None
+        val m = readPartFiles(spark, dir)
+        recorded.get(rev).flatMap(_.manifestCols) match {
+          case Some(cols) => if (cols == expected) Some(m) else None
+          case None =>
+            // an entry from before signatures were recorded: check the
+            // manifest's own `cols`. An empty manifest (empty snapshot)
+            // has no row to check — it prunes correctly regardless
+            m.select("cols").limit(1).collect().headOption match {
+              case Some(r) if r.getString(0) == expected => Some(m)
+              case None => Some(m)
+              case _ => None
+            }
         }
       }
     }

@@ -22,12 +22,15 @@ import org.apache.spark.sql.functions._
   * when `m` > 0). MAINTAIN (the commit-hook body) brings the index to the
   * newest committed revision WITHOUT a rebuild:
   *
-  *  1. the new revision's NEW and RE-EMBEDDED rows (one left join on the
-  *     id against the last indexed revision, both sides snapshots — the
-  *     increment, pinned so it is computed once) minus the (id, vector)
-  *     pairs the layout already stores are assigned to the STORED
-  *     model's cells by [[IvfIndex.assignCells]] (same argmin as the
-  *     original fit, pure codegen, no refit);
+  *  1. the new revision's NEW and RE-EMBEDDED rows — the increment,
+  *     pinned so it is computed once: the composed change sets of the
+  *     revisions since the watermark ([[TemporalTable.changeSets]],
+  *     [[graft.operators.Diff.composeChanges]]) when they are stored
+  *     and keyed on the index's id, else one left join on the id of the
+  *     newest snapshot against the last indexed one — minus the (id,
+  *     vector) pairs the layout already stores are assigned to the
+  *     STORED model's cells by [[IvfIndex.assignCells]] (same argmin as
+  *     the original fit, pure codegen, no refit);
   *  2. plain IVF (`m` = 0): the assigned rows APPEND into their cell
   *     partitions — untouched cells' files are not rewritten;
   *  3. NSW (`m` > 0): one aggregate over the assigned rows yields the
@@ -191,7 +194,13 @@ object VectorIndex {
   /** Bring one index up to the newest committed revision incrementally
     * (see object scaladoc). Returns the number of newly indexed vectors
     * (0 when already current). */
-  def maintain(spark: SparkSession, tablePath: String, name: String): Long = {
+  def maintain(spark: SparkSession, tablePath: String, name: String): Long =
+    maintainFrom(spark, tablePath, name, changeSets = true)
+
+  /** [[maintain]], with the increment from the snapshots alone when
+    * `changeSets` is false (the differential specs' reference). */
+  private[sources] def maintainFrom(spark: SparkSession, tablePath: String, name: String,
+                                    changeSets: Boolean): Long = {
     val spec = list(tablePath).find(_.name == name)
       .getOrElse(throw new IllegalArgumentException(s"unknown vector index $name"))
     val latest = TemporalTable.mostRecentRevision(tablePath)
@@ -200,20 +209,9 @@ object VectorIndex {
     if (latest <= upTo) return 0L
     val path = dataDir(tablePath, name)
     val model = IvfIndex.readModel(path)
-    // NEW ids plus RE-EMBEDDED ids (same id, changed vector — the join is
-    // on the id with an array-equality filter; array<double> compares
-    // element-wise). A re-embedded row appends its new vector next to the
-    // stale one: search(exact = true) recomputes from the snapshot, and
-    // rebuild purges. Pinned: the increment feeds both the guard's id set
-    // and the anti-join below, and its two snapshot scans plus their join
-    // run once instead of once per use.
-    val changed = snapshotVectors(spark, tablePath, latest, spec)
-      .join(snapshotVectors(spark, tablePath, upTo, spec)
-        .select(col(spec.idCol), col(spec.vecCol).as("__prev_vec")),
-        Seq(spec.idCol), "left_outer")
-      .filter(col("__prev_vec").isNull || col("__prev_vec") =!= col(spec.vecCol))
-      .drop("__prev_vec")
-      .persist()
+    // Pinned: the increment feeds both the guard's id set and the
+    // anti-join below, and is computed once instead of once per use.
+    val changed = increment(spark, tablePath, spec, upTo, latest, changeSets).persist()
     val count =
       try {
         // a row that re-embeds BACK to a vector already in the layout
@@ -224,7 +222,7 @@ object VectorIndex {
         // layout's (id, vec) pairs for exactly the increment's ids
         // (semi-join first so only the touched ids' index rows join, not
         // the whole layout).
-        val incrementIds = broadcast(changed.select(spec.idCol).distinct())
+        val incrementIds = broadcast(changed.select(spec.idCol))
         val alreadyStored = graft.plans.FooterSchemas.readParquet(spark, path)
           .select(col(spec.idCol), col(spec.vecCol))
           .join(incrementIds, Seq(spec.idCol), "left_semi")
@@ -253,6 +251,43 @@ object VectorIndex {
     writeWatermark(tablePath, name, latest)
     count
   }
+
+  /** The rows revision `latest` adds to an index current at `upTo`: NEW
+    * ids plus RE-EMBEDDED ids (same id, changed vector; array<double>
+    * compares element-wise), with a non-null vector — `(id, vec)`
+    * normalized like [[snapshotVectors]]. A re-embedded row appends its
+    * new vector next to the stale one: search(exact = true) recomputes
+    * from the snapshot, and rebuild purges. */
+  private[sources] def increment(spark: SparkSession, tablePath: String, spec: Spec,
+                                 upTo: Int, latest: Int,
+                                 changeSets: Boolean = true): DataFrame = {
+    val prevVec = "__prev_vec"
+    val pairs = (if (changeSets) storedIncrement(spark, tablePath, spec, upTo, latest) else None)
+      .getOrElse(snapshotVectors(spark, tablePath, latest, spec)
+        .join(snapshotVectors(spark, tablePath, upTo, spec)
+          .select(col(spec.idCol), col(spec.vecCol).as(prevVec)),
+          Seq(spec.idCol), "left_outer"))
+    pairs
+      .filter(col(spec.vecCol).isNotNull &&
+        (col(prevVec).isNull || col(prevVec) =!= col(spec.vecCol)))
+      .drop(prevVec)
+  }
+
+  /** [[increment]]'s (id, vec, previous vec) candidates from the stored
+    * change rows between `upTo` and `latest` over the vector column
+    * (deleted keys drop out). None when the index is not keyed on
+    * `node_key` or a revision lacks a trusted change set. */
+  private def storedIncrement(spark: SparkSession, tablePath: String, spec: Spec,
+                              upTo: Int, latest: Int): Option[DataFrame] =
+    (if (spec.idCol == "node_key")
+      TemporalTable.storedChanges(spark, tablePath, upTo, latest, Some(Seq(spec.vecCol)))
+     else None).map { changes =>
+      def vec(c: String) = expr(s"transform(`$c`, x -> CAST(x AS DOUBLE))")
+      changes.filter(col("change_type") =!= "delete")
+        .select(col("node_key").cast("long").as(spec.idCol),
+          vec(s"new_${spec.vecCol}").as(spec.vecCol),
+          vec(s"old_${spec.vecCol}").as("__prev_vec"))
+    }
 
   /** NSW maintenance: re-derive the in-cell adjacency for exactly the
     * cells that received new vectors (existing members must gain edges TO
