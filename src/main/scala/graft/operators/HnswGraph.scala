@@ -84,14 +84,24 @@ object HnswGraph {
       .groupByKey(_.cell)
       .flatMapGroups { (_, rows) =>
         val arr = rows.toArray.sortBy(_.id)
-        val levels = arr.map(r => levelOf(r.id, mL))
-        val (adj, _) = insertBuild(arr.map(_.vec), levels, m, efConstruction)
+        val (levels, layers) = cellLayers(arr.map(_.id), arr.map(_.vec), m, mL, efConstruction)
         arr.indices.iterator.map { i =>
-          HnswRow(arr(i).id, arr(i).vec, arr(i).cell, levels(i),
-            adj(i).map(_.map(j => arr(j).id)))
+          HnswRow(arr(i).id, arr(i).vec, arr(i).cell, levels(i), layers(i))
         }
       }
       .toDF(idCol, vecCol, "ivf_cell", "hnsw_level", "hnsw_layers")
+  }
+
+  /** One cell's levels and per-layer neighbour ids, the per-cell kernel of
+    * [[buildGraph]] (also run by [[graft.sources.VectorIndex]]'s
+    * maintenance): `ids`/`vecs` in insertion order — id order, as the
+    * callers sort them. */
+  private[graft] def cellLayers(ids: Array[Long], vecs: Array[Array[Double]], m: Int,
+                                mL: Int, efConstruction: Int = 64
+                               ): (Array[Int], Array[Array[Array[Long]]]) = {
+    val levels = ids.map(levelOf(_, mL))
+    val (adj, _) = insertBuild(vecs, levels, m, efConstruction)
+    (levels, adj.map(_.map(_.map(j => ids(j)))))
   }
 
   /** Search-based incremental insertion over one cell (the reference's
@@ -409,7 +419,7 @@ object HnswGraph {
     import spark.implicits._
     val model = IvfIndex.readModel(path)
     val probes = model.nearestCentroids(query, nProbe)
-    val hits = spark.read.parquet(path)
+    val hits = graft.plans.FooterSchemas.readParquet(spark, path)
       .filter(col("ivf_cell").isin(probes: _*))
       .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"),
         col("ivf_cell").cast("int"), col("hnsw_level"), col("hnsw_layers"))

@@ -213,6 +213,6 @@ object IvfIndex {
   def searchClustered(spark: SparkSession, path: String, idCol: String,
                       vecCol: String, query: Array[Double], k: Int,
                       nProbe: Int): DataFrame =
-    search(spark.read.parquet(path), readModel(path), idCol, vecCol,
+    search(graft.plans.FooterSchemas.readParquet(spark, path), readModel(path), idCol, vecCol,
       query, k, nProbe)
 }

@@ -93,14 +93,20 @@ object NswGraph {
       .groupByKey(_.cell)
       .flatMapGroups { (_, rows) =>
         val arr = rows.toArray.sortBy(_.id)
-        val (adj, _) = HnswGraph.insertBuild(arr.map(_.vec),
-          Array.fill(arr.length)(0), m, efConstruction)
-        arr.indices.iterator.map { i =>
-          GraphRow(arr(i).id, arr(i).vec, arr(i).cell,
-            adj(i)(0).map(j => arr(j).id))
-        }
+        val nbrs = cellNeighbors(arr.map(_.id), arr.map(_.vec), m, efConstruction)
+        arr.indices.iterator.map(i => GraphRow(arr(i).id, arr(i).vec, arr(i).cell, nbrs(i)))
       }
       .toDF(idCol, vecCol, "ivf_cell", "nsw_neighbors")
+  }
+
+  /** One cell's adjacency, the per-cell kernel of [[buildGraph]] (also
+    * run by [[graft.sources.VectorIndex]]'s maintenance): `ids`/`vecs` in
+    * insertion order — id order, as the callers sort them — and each
+    * node's neighbour ids. */
+  private[graft] def cellNeighbors(ids: Array[Long], vecs: Array[Array[Double]],
+                                   m: Int, efConstruction: Int = 64): Array[Array[Long]] = {
+    val (adj, _) = HnswGraph.insertBuild(vecs, Array.fill(vecs.length)(0), m, efConstruction)
+    adj.map(_(0).map(j => ids(j)))
   }
 
   /** Build the graph over a [[IvfIndex.fit]] output and persist it
@@ -122,7 +128,7 @@ object NswGraph {
     import spark.implicits._
     val model = IvfIndex.readModel(path)
     val probes = model.nearestCentroids(query, nProbe)
-    val hits = spark.read.parquet(path)
+    val hits = graft.plans.FooterSchemas.readParquet(spark, path)
       .filter(col("ivf_cell").isin(probes: _*))
       .select(col(idCol).cast("long"), col(vecCol),
         col("ivf_cell").cast("int"), col("nsw_neighbors"))

@@ -233,7 +233,7 @@ object Pq {
     val ivf = IvfIndex.readModel(path)
     val pq = readModel(path)
     val probes = ivf.nearestCentroids(query, nProbe)
-    val pruned = spark.read.parquet(path)
+    val pruned = graft.plans.FooterSchemas.readParquet(spark, path)
       .filter(col("ivf_cell").isin(probes: _*))
     searchCosine(pruned, pq, idCol, query, k, refine, vecCol = vecCol)
   }

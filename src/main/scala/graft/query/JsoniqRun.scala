@@ -1319,7 +1319,7 @@ object JsoniqRun {
       val dir = if (entry.dir.isEmpty) shredDir(path, r)
         else s"${shredDir(path, r)}/${entry.dir}"
       shredDfCache.getOrElseUpdate((path, r, entry.dir), {
-        val base = spark.read.parquet(dir)
+        val base = graft.plans.FooterSchemas.readParquet(spark, dir)
         // member-local fast commits overlay touched rows under _patch
         // (underscore: invisible to the base parquet scan) — compose
         // base-minus-patched ∪ patch. With a run translation
@@ -1329,7 +1329,7 @@ object JsoniqRun {
         val pdir = s"$dir/_patch"
         if (!graft.sources.MetaIO.exists(s"$pdir/_SUCCESS")) base
         else {
-          val patch = spark.read.parquet(pdir)
+          val patch = graft.plans.FooterSchemas.readParquet(spark, pdir)
           readPatchRuns(pdir) match {
             case None =>
               val idxs = patch.select("idx").collect()

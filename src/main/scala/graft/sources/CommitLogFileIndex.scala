@@ -20,14 +20,21 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   * Exposes `rev` as the single partition column, so Catalyst partition
   * pruning works exactly as on the listed layout: a `rev = N` predicate
   * reaches [[listFiles]] as a partition filter and drops every other
-  * revision's files before the scan plans splits. */
+  * revision's files before the scan plans splits.
+  *
+  * The same explicit index serves other hive layouts whose files the
+  * caller already knows: `partitionColumn` names the int partition column
+  * (a vector index's `ivf_cell`), or is None for a plain file list (the
+  * stab's fork files of a valid-time sidecar, whose `__fork` data column
+  * already carries the partition value); the keys are then ignored. */
 private[graft] class CommitLogFileIndex(
     tablePath: String,
     revFiles: Seq[(Int, Seq[(String, Long)])],
-    revTimesMs: Map[Int, Long] = Map.empty) extends FileIndex {
+    revTimesMs: Map[Int, Long] = Map.empty,
+    partitionColumn: Option[String] = Some("rev")) extends FileIndex {
 
   override val partitionSchema: StructType =
-    StructType(Seq(StructField("rev", IntegerType, nullable = true)))
+    StructType(partitionColumn.toSeq.map(StructField(_, IntegerType, nullable = true)))
 
   override def rootPaths: Seq[Path] = Seq(new Path(tablePath))
 
@@ -41,7 +48,8 @@ private[graft] class CommitLogFileIndex(
       // _metadata.file_modification_time read 1970-01-01 and weakened
       // (path, len, mtime) cache keys derived from this index's listing
       val mtime = revTimesMs.getOrElse(rev, 0L)
-      PartitionDirectory(InternalRow(rev), files.map { case (rel, size) =>
+      PartitionDirectory(if (partitionColumn.isEmpty) InternalRow.empty else InternalRow(rev),
+        files.map { case (rel, size) =>
         new FileStatus(size, false, 1, blockSize, mtime,
           new Path(s"$tablePath/$rel"))
       }.toArray)
@@ -49,10 +57,10 @@ private[graft] class CommitLogFileIndex(
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-    if (partitionFilters.isEmpty) partitions
+    if (partitionFilters.isEmpty || partitionColumn.isEmpty) partitions
     else {
       // single partition column: every attribute in a partition filter is
-      // `rev`, bound to slot 0 of the partition values row
+      // it, bound to slot 0 of the partition values row
       val bound = Predicate.createInterpreted(
         partitionFilters.reduce(And).transform {
           case _: AttributeReference =>
@@ -70,4 +78,29 @@ private[graft] class CommitLogFileIndex(
 
   override def sizeInBytes: Long =
     revFiles.iterator.flatMap(_._2.iterator.map(_._2)).sum
+}
+
+private[graft] object CommitLogFileIndex {
+
+  /** Per-partition parquet files under `root` (paths relative to it) as
+    * ONE relation: an explicit [[CommitLogFileIndex]], so planning lists
+    * nothing, infers no partitions and runs no Spark job. `dataSchema` is
+    * the files' own ([[probeSchema]]). */
+  def scan(spark: org.apache.spark.sql.SparkSession, root: String,
+           revFiles: Seq[(Int, Seq[(String, Long)])], revTimesMs: Map[Int, Long],
+           dataSchema: StructType, partitionColumn: Option[String] = Some("rev")
+          ): org.apache.spark.sql.DataFrame = {
+    // commit timestamps as the fabricated mtimes: stable, non-1970
+    // (path, len, mtime) cache keys (see the partitions above)
+    val index = new CommitLogFileIndex(root, revFiles, revTimesMs, partitionColumn)
+    val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+      index, index.partitionSchema, dataSchema, None,
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+      Map("basePath" -> root))(spark)
+    spark.baseRelationToDataFrame(relation)
+  }
+
+  /** The data schema of one parquet file, from its footer (no job). */
+  def probeSchema(spark: org.apache.spark.sql.SparkSession, file: String): StructType =
+    graft.plans.FooterSchemas.readParquet(spark, file).schema
 }

@@ -661,27 +661,9 @@ object TemporalTable {
         // every sidecar empty (no parquet part files) — nothing to scan
         spark.range(0).select(col("id").as("node_key"),
           col("id").cast("int").as("rev"))
-      case Some(rel) => revisionFileScan(spark, kiDir, revFiles, revTimesMs, rel)
+      case Some(rel) => CommitLogFileIndex.scan(spark, kiDir, revFiles, revTimesMs,
+        CommitLogFileIndex.probeSchema(spark, s"$kiDir/$rel"))
     }
-  }
-
-  /** Per-revision parquet files under `root` (paths relative to it) as
-    * ONE relation with `rev` as the partition column: an explicit
-    * [[CommitLogFileIndex]], so planning lists nothing, infers no
-    * partitions, and reads one footer — `probe`'s — for the schema. */
-  private def revisionFileScan(spark: SparkSession, root: String,
-                               revFiles: Seq[(Int, Seq[(String, Long)])],
-                               revTimesMs: Map[Int, Long],
-                               probe: String): DataFrame = {
-    val dataSchema = graft.plans.FooterSchemas.readParquet(spark, s"$root/$probe").schema
-    // commit timestamps as the fabricated mtimes: stable, non-1970
-    // (path, len, mtime) cache keys — the CommitLogFileIndex rule
-    val index = new CommitLogFileIndex(root, revFiles, revTimesMs)
-    val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-      index, index.partitionSchema, dataSchema, None,
-      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
-      Map("basePath" -> root))(spark)
-    spark.baseRelationToDataFrame(relation)
   }
 
   /** The stored change sets of the commit-log revisions after `from` up
@@ -718,7 +700,8 @@ object TemporalTable {
         (s"rev=$r/_changes/$n", size) })
     if (revFiles.exists(_._2.isEmpty)) return None
     val times = run.map(r => r -> field(r, "commitTsMs").toLong).toMap
-    Some((revisionFileScan(spark, path, revFiles, times, revFiles.head._2.head._1),
+    Some((CommitLogFileIndex.scan(spark, path, revFiles, times,
+        CommitLogFileIndex.probeSchema(spark, s"$path/${revFiles.head._2.head._1}")),
       schemas.head.get.fieldNames.toSeq.filterNot(_ == "node_key"), revFiles.size))
   }
 

@@ -146,11 +146,32 @@ object ValidTimeIndex {
     * with different columns or granularity after the sidecar was written
     * would otherwise prune with constants its forks were not computed
     * under — silently dropping rows. (The policy is the write-side recipe
-    * only.) None when the sidecar's metadata is unreadable. */
+    * only.) None when the sidecar's metadata is unreadable.
+    *
+    * Planning lists on the driver and runs no Spark job: one LIST of the
+    * sidecar names its `__fork_part=` directories, one footer gives the
+    * schema and the `__fork` metadata, and only the fork directories on
+    * the stab's root path are listed and scanned through an explicit file
+    * index (Spark's own listing of a sidecar with more than
+    * `parallelPartitionDiscovery.threshold` fork directories is a
+    * distributed job). */
   private def stabSidecarDir(spark: SparkSession, rdir: String,
                              ts: Long): Option[(DataFrame, String, String)] = {
-    val idx = Intervals.readIndexed(spark, rdir)
-    val meta = idx.schema(Intervals.ForkCol).metadata
+    val prefix = s"${Intervals.ForkPartCol}="
+    val forks = MetaIO.listDirs(rdir).filter(_.startsWith(prefix))
+      .flatMap(d => scala.util.Try(d.stripPrefix(prefix).toLong).toOption.map(d -> _))
+      .sortBy(_._2)
+    def files(dir: String): Seq[(String, Long)] =
+      MetaIO.listFiles(s"$rdir/$dir").filter(_._1.endsWith(".parquet"))
+        .map { case (n, size) => (s"$dir/$n", size) }
+    val probe = forks.headOption.flatMap(f => files(f._1).headOption)
+    if (probe.isEmpty) return None
+    val schema = CommitLogFileIndex.probeSchema(spark, s"$rdir/${probe.get._1}")
+    def scan(dirs: Seq[String]): DataFrame = CommitLogFileIndex.scan(spark, rdir,
+      Seq(0 -> MetaIO.parallelMap(dirs)(files).flatten), Map.empty, schema,
+      partitionColumn = None)
+    if (!schema.fieldNames.contains(Intervals.ForkCol)) return None
+    val meta = schema(Intervals.ForkCol).metadata
     if (!meta.contains(Intervals.MetaFrom) || !meta.contains(Intervals.MetaTo) ||
         !meta.contains(Intervals.MetaGranularity)) return None
     val fromCol = meta.getString(Intervals.MetaFrom)
@@ -165,14 +186,14 @@ object ValidTimeIndex {
     // forks are off the instant's root path) — same bail as the rule
     val pruned =
       if (ts < 0 || ts / gran > axisMax)
-        idx.filter(stab).drop(Intervals.ForkCol, Intervals.ForkPartCol)
+        scan(forks.map(_._1)).filter(stab)
       else {
         val nodes = Intervals.stabNodes(ts, gran).filter(_ <= axisMax)
-        idx.filter(col(Intervals.ForkPartCol).isin(nodes: _*) &&
-            col(Intervals.ForkCol).isin(nodes: _*) && stab)
-          .drop(Intervals.ForkCol, Intervals.ForkPartCol)
+        val onPath = nodes.toSet
+        scan(forks.collect { case (d, f) if onPath(f) => d })
+          .filter(col(Intervals.ForkCol).isin(nodes: _*) && stab)
       }
-    Some((pruned, fromCol, toCol))
+    Some((pruned.drop(Intervals.ForkCol), fromCol, toCol))
   }
 
   /** Delta-chain stab (see object scaladoc): fork-pruned read of the
@@ -213,7 +234,7 @@ object ValidTimeIndex {
     }
   }
 
-  private def fallbackScan(spark: SparkSession, path: String, ts: Long,
+  private[sources] def fallbackScan(spark: SparkSession, path: String, ts: Long,
                            rev: Int): DataFrame =
     policy(path) match {
       case Some((fromCol, toCol, _)) =>

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.operators.{IvfIndex, NswGraph, Pq}
+import graft.operators.{HnswGraph, IvfIndex, NswGraph, Pq}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,26 +20,39 @@ import org.apache.spark.sql.functions._
   * CREATE fits the coarse quantizer over the current latest revision and
   * persists the cell-clustered layout (with the per-cell NSW adjacency
   * when `m` > 0). MAINTAIN (the commit-hook body) brings the index to the
-  * newest committed revision WITHOUT a rebuild:
+  * newest committed revision WITHOUT a rebuild, in one planned pass that
+  * reads and rewrites only the cells the increment reaches, for every
+  * tier:
   *
-  *  1. the new revision's NEW and RE-EMBEDDED rows — the increment,
-  *     pinned so it is computed once: the composed change sets of the
-  *     revisions since the watermark ([[TemporalTable.changeSets]],
-  *     [[graft.operators.Diff.composeChanges]]) when they are stored
-  *     and keyed on the index's id, else one left join on the id of the
-  *     newest snapshot against the last indexed one — minus the (id,
-  *     vector) pairs the layout already stores are assigned to the
+  *  1. the increment — the newest revision's NEW and RE-EMBEDDED rows
+  *     with a non-null vector: the composed change sets of the revisions
+  *     since the watermark ([[TemporalTable.changeSets]],
+  *     [[graft.operators.Diff.composeChanges]]) when they are stored and
+  *     keyed on the index's id, else one left join on the id of the
+  *     newest snapshot against the last indexed one — is assigned to the
   *     STORED model's cells by [[IvfIndex.assignCells]] (same argmin as
-  *     the original fit, pure codegen, no refit);
-  *  2. plain IVF (`m` = 0): the assigned rows APPEND into their cell
-  *     partitions — untouched cells' files are not rewritten;
-  *  3. NSW (`m` > 0): one aggregate over the assigned rows yields the
-  *     AFFECTED cells (those receiving new vectors) and the indexed
-  *     count; only those cells re-derive their in-cell adjacency —
+  *     the original fit, pure codegen, no refit) and pinned;
+  *  2. one bounded aggregate over it yields the AFFECTED cells (at most
+  *     `nLists`);
+  *  3. only those cells' files are opened, and each affected cell is one
+  *     task holding its stored rows and its candidates. A candidate whose
+  *     (id, vector) the cell already stores is dropped — the guard an
+  *     A→B→A re-embed needs, since the revision diff sees B→A as a change
+  *     while A is still stored. Checking the one cell is enough:
+  *     assignment is a deterministic argmin with a first-minimal
+  *     tie-break under the fixed stored model, so a stored (id, vector)
+  *     always sits in the cell its vector is assigned to now;
+  *  4. the graph tiers (`m` > 0) re-derive each cell's adjacency over its
+  *     stored and new rows through the build's own per-cell kernel —
   *     existing members gain edges to the new vectors and vice versa —
   *     and dynamic partition overwrite rewrites exactly those `ivf_cell=`
-  *     directories; every other cell's files stay byte-identical
-  *     (spec-pinned).
+  *     directories; a cell whose candidates were all stored emits nothing
+  *     and keeps its files. Plain IVF and IVF-PQ APPEND the new rows into
+  *     their cell partitions. Every other cell's files stay
+  *     byte-identical (spec-pinned).
+  *
+  * The returned count is exact: the vectors newly indexed after the
+  * guard.
   *
   * Search stays [[IvfIndex.searchClustered]] / [[NswGraph.searchGraph]]
   * over the index path — they see maintained vectors with no API change.
@@ -191,9 +204,11 @@ object VectorIndex {
     r.head.getInt(0)
   }
 
-  /** Bring one index up to the newest committed revision incrementally
-    * (see object scaladoc). Returns the number of newly indexed vectors
-    * (0 when already current). */
+  /** Bring one index up to the newest committed revision incrementally,
+    * reading and rewriting only the cells the increment reaches (see the
+    * object scaladoc for the plan). Returns the number of newly indexed
+    * vectors: the increment minus the (id, vector) pairs the layout
+    * already stores (0 when already current). */
   def maintain(spark: SparkSession, tablePath: String, name: String): Long =
     maintainFrom(spark, tablePath, name, changeSets = true)
 
@@ -201,6 +216,7 @@ object VectorIndex {
     * `changeSets` is false (the differential specs' reference). */
   private[sources] def maintainFrom(spark: SparkSession, tablePath: String, name: String,
                                     changeSets: Boolean): Long = {
+    import spark.implicits._
     val spec = list(tablePath).find(_.name == name)
       .getOrElse(throw new IllegalArgumentException(s"unknown vector index $name"))
     val latest = TemporalTable.mostRecentRevision(tablePath)
@@ -208,46 +224,21 @@ object VectorIndex {
     val upTo = indexedUpTo(tablePath, name)
     if (latest <= upTo) return 0L
     val path = dataDir(tablePath, name)
-    val model = IvfIndex.readModel(path)
-    // Pinned: the increment feeds both the guard's id set and the
-    // anti-join below, and is computed once instead of once per use.
-    val changed = increment(spark, tablePath, spec, upTo, latest, changeSets).persist()
+    // the increment routed to the STORED model's cells, pinned: the
+    // affected-cell aggregate and the per-cell step both read it
+    val candidates = IvfIndex.assignCells(
+        increment(spark, tablePath, spec, upTo, latest, changeSets),
+        IvfIndex.readModel(path), spec.vecCol)
+      .withColumn("ivf_cell", col("ivf_cell").cast("int"))
+      .persist()
     val count =
       try {
-        // a row that re-embeds BACK to a vector already in the layout
-        // (A→B→A across maintains: rev-over-rev diff sees B→A as changed,
-        // but the A copy from the first index pass is still stored) must
-        // not append a byte-identical duplicate — raw search would return
-        // the id twice. The guard anti-joins the increment against the
-        // layout's (id, vec) pairs for exactly the increment's ids
-        // (semi-join first so only the touched ids' index rows join, not
-        // the whole layout).
-        val incrementIds = broadcast(changed.select(spec.idCol))
-        val alreadyStored = graft.plans.FooterSchemas.readParquet(spark, path)
-          .select(col(spec.idCol), col(spec.vecCol))
-          .join(incrementIds, Seq(spec.idCol), "left_semi")
-        val newRows = changed.join(alreadyStored,
-          Seq(spec.idCol, spec.vecCol), "left_anti")
-        val assigned = IvfIndex.assignCells(newRows, model, spec.vecCol)
-          .withColumn("ivf_cell", col("ivf_cell").cast("int"))
-        if (spec.m > 0) patchGraphCells(spark, path, assigned, spec)
-        else {
-          // plain IVF / IVF-PQ: append into the cell partitions — no
-          // existing file is rewritten, untouched cells aren't even
-          // listed. PQ rows encode with the STORED codebooks (no refit —
-          // same fixed-quantizer discipline as the centroids; drift
-          // degrades recall, not correctness, until rebuild)
-          val rows =
-            if (spec.pqM > 0) Pq.encode(assigned, spec.vecCol, Pq.readModel(path))
-            else assigned
-          val pinned = rows.persist()
-          try {
-            val n = pinned.count()
-            if (n > 0) pinned.write.mode("append").partitionBy("ivf_cell").parquet(path)
-            n
-          } finally { pinned.unpersist(); () }
-        }
-      } finally { changed.unpersist(); () }
+        // the affected cells (≤ nLists) from one job with no shuffle:
+        // each task's distinct cells, merged on the driver
+        val affected = candidates.select("ivf_cell").as[Int]
+          .mapPartitions(_.toSet.iterator).collect().distinct.sorted
+        if (affected.isEmpty) 0L else patchCells(spark, path, candidates, affected, spec)
+      } finally { candidates.unpersist(); () }
     writeWatermark(tablePath, name, latest)
     count
   }
@@ -289,35 +280,106 @@ object VectorIndex {
           vec(s"old_${spec.vecCol}").as("__prev_vec"))
     }
 
-  /** NSW maintenance: re-derive the in-cell adjacency for exactly the
-    * cells that received new vectors (existing members must gain edges TO
-    * the new vectors — appending adjacency-less rows would leave them
-    * unreachable), then dynamic-partition-overwrite rewrites only those
-    * `ivf_cell=` directories. */
-  private def patchGraphCells(spark: SparkSession, path: String,
-                              assigned: DataFrame, spec: Spec): Long = {
-    val pinned = assigned.persist()
-    try {
-      // the affected cells and the indexed count from ONE aggregate job
-      val perCell = pinned.groupBy("ivf_cell").count().collect()
-      if (perCell.isEmpty) return 0L
-      val affected = perCell.map(_.getInt(0)).sorted
-      val n = perCell.map(_.getLong(1)).sum
-      val existing = graft.plans.FooterSchemas.readParquet(spark, path)
-        .filter(col("ivf_cell").isin(affected.toSeq: _*))
-        .select(col(spec.idCol), col(spec.vecCol), col("ivf_cell").cast("int"))
-      val merged = existing.unionByName(pinned)
-      val patched = graphOf(merged, spec)
-      // rewrite ONLY the affected cell directories; reading and writing
-      // the same path needs the read fully materialized WITH ITS LINEAGE
-      // CUT first (a lazily recomputed block would re-scan files the
-      // overwrite is replacing) — localCheckpoint truncates the plan to
-      // the materialized blocks
-      patched.localCheckpoint(true).write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
+  /** One candidate or stored row of the per-cell step: (id, vector,
+    * cell, whether it is a candidate). */
+  private type CellRow = (Long, Array[Double], Int, Boolean)
+
+  /** Routes each affected cell (sorted) to a task of its own. */
+  private final class CellPartitioner(cells: Array[Int]) extends org.apache.spark.Partitioner {
+    override def numPartitions: Int = cells.length
+    override def getPartition(key: Any): Int =
+      java.util.Arrays.binarySearch(cells, key.asInstanceOf[Int])
+  }
+
+  /** The guard's identity of a vector: its bits, with Spark SQL's
+    * equality (-0.0 equals 0.0, every NaN equals every NaN). */
+  private def vecKey(v: Array[Double]): Seq[Long] =
+    v.toSeq.map(d => if (d == 0.0) 0L
+      else if (d.isNaN) java.lang.Double.doubleToLongBits(Double.NaN)
+      else java.lang.Double.doubleToLongBits(d))
+
+  /** One affected cell's task: its stored rows (in scan order) and the
+    * candidates it does not store yet, which `added` counts. */
+  private def guardCell(rows: Iterator[CellRow], added: org.apache.spark.util.LongAccumulator
+                       ): (Array[CellRow], Array[CellRow]) = {
+    val (stored, candidates) = rows.toArray.partition(!_._4)
+    val have = stored.iterator.map(r => (r._1, vecKey(r._2))).toSet
+    val news = candidates.filterNot(r => have((r._1, vecKey(r._2))))
+    added.add(news.length)
+    (stored, news)
+  }
+
+  /** A graph cell's rows to rebuild — stored then new, id-sorted (a
+    * stable sort: same-id copies keep that order) — or None when the
+    * guard left it nothing new. */
+  private def cellToRebuild(rows: Iterator[CellRow], added: org.apache.spark.util.LongAccumulator
+                           ): Option[Array[CellRow]] = {
+    val (stored, news) = guardCell(rows, added)
+    if (news.isEmpty) None else Some((stored ++ news).sortBy(_._1))
+  }
+
+  /** [[maintain]]'s per-cell step over the affected cells (steps 3–4 of
+    * the object scaladoc). Only those cells' files are opened: an
+    * explicit file index of their `ivf_cell=` directories, listed on the
+    * driver, with the schema of one footer. A [[CellPartitioner]] gives
+    * each affected cell a task of its own. The graph tiers rebuild through
+    * the build's per-cell kernels ([[NswGraph.cellNeighbors]],
+    * [[HnswGraph.cellLayers]]); PQ rows encode with the STORED codebooks
+    * (no refit: drift degrades recall, not correctness, until rebuild).
+    * Read and write are one job: the dynamic overwrite replaces a cell
+    * only when the job commits, after every read. Returns the number of
+    * new rows, counted in the write's own tasks (an action's accumulator
+    * counts each task once). */
+  private def patchCells(spark: SparkSession, path: String, candidates: DataFrame,
+                         affected: Array[Int], spec: Spec): Long = {
+    import spark.implicits._
+    val cellFiles = MetaIO.parallelMap(affected.toSeq) { c =>
+      c -> MetaIO.listFiles(s"$path/ivf_cell=$c").filter(_._1.endsWith(".parquet"))
+        .sortBy(_._1).map { case (n, size) => (s"ivf_cell=$c/$n", size) }
+    }.filter(_._2.nonEmpty)
+    val fresh = candidates
+      .select(col(spec.idCol), col(spec.vecCol), col("ivf_cell"), lit(true))
+    // stored rows first: a cell's task sees them in scan order ahead of
+    // its candidates, the order the id-sorted (stable) build inserts
+    // same-id copies in
+    val rows = cellFiles.headOption.fold(fresh) { case (_, files) =>
+      CommitLogFileIndex.scan(spark, path, cellFiles, Map.empty,
+          CommitLogFileIndex.probeSchema(spark, s"$path/${files.head._1}"),
+          partitionColumn = Some("ivf_cell"))
+        .select(col(spec.idCol), col(spec.vecCol), col("ivf_cell"), lit(false))
+        .union(fresh)
+    }
+    val perCell = rows.as[CellRow].rdd
+      .map(r => (r._3, r))
+      .partitionBy(new CellPartitioner(affected))
+      .values
+    val added = spark.sparkContext.longAccumulator
+    val (idCol, vecCol, m, mL) = (spec.idCol, spec.vecCol, spec.m, spec.hnswMl)
+    val out =
+      if (m > 0 && mL > 0)
+        spark.createDataset(perCell.mapPartitions(cell =>
+          cellToRebuild(cell, added).iterator.flatMap { arr =>
+            val (levels, layers) = HnswGraph.cellLayers(arr.map(_._1), arr.map(_._2), m, mL)
+            arr.indices.map(i =>
+              HnswGraph.HnswRow(arr(i)._1, arr(i)._2, arr(i)._3, levels(i), layers(i)))
+          })).toDF(idCol, vecCol, "ivf_cell", "hnsw_level", "hnsw_layers")
+      else if (m > 0)
+        spark.createDataset(perCell.mapPartitions(cell =>
+          cellToRebuild(cell, added).iterator.flatMap { arr =>
+            val nbrs = NswGraph.cellNeighbors(arr.map(_._1), arr.map(_._2), m)
+            arr.indices.map(i => NswGraph.GraphRow(arr(i)._1, arr(i)._2, arr(i)._3, nbrs(i)))
+          })).toDF(idCol, vecCol, "ivf_cell", "nsw_neighbors")
+      else {
+        val news = spark.createDataset(perCell.mapPartitions(cell =>
+          guardCell(cell, added)._2.iterator.map(r => (r._1, r._2, r._3))))
+          .toDF(idCol, vecCol, "ivf_cell")
+        if (spec.pqM > 0) Pq.encode(news, vecCol, Pq.readModel(path)) else news
+      }
+    if (m > 0)
+      out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         .partitionBy("ivf_cell").parquet(path)
-      n
-    } finally { pinned.unpersist(); () }
+    else out.write.mode("append").partitionBy("ivf_cell").parquet(path)
+    added.value
   }
 
   /** Top-k search over a maintained index. `exact = false` searches the
@@ -422,7 +484,7 @@ object VectorIndex {
     // copy and raw search returns the id twice
     val dupRank = org.apache.spark.sql.expressions.Window
       .partitionBy(col(spec.idCol), col(spec.vecCol)).orderBy(col("ivf_cell"))
-    val flagged = spark.read.parquet(path)
+    val flagged = graft.plans.FooterSchemas.readParquet(spark, path)
       .join(live, Seq(spec.idCol), "left_outer")
       .withColumn("__ghost",
         col("__live_vec").isNull || col("__live_vec") =!= col(spec.vecCol) ||

@@ -217,8 +217,14 @@ class ValidTimeIndexSpec extends SparkSpec {
     assert(deltaPlan.contains("_vindex"), s"sidecar absent from plan:\n$deltaPlan")
     assert(!deltaPlan.contains(s"$p/rev=1"),
       "stab scanned the raw full revision instead of the fork sidecar")
-    assert(deltaPlan.contains(Intervals.ForkPartCol),
-      s"no fork partition filter in the delta stab plan:\n$deltaPlan")
+    // and the sidecar files it plans to read all lie in stab-node fork
+    // directories (the scan lists no other)
+    val deltaForks = ValidTimeIndex.validAt(spark, p, 555L, Some(3)).inputFiles
+      .filter(_.contains("/_vindex/")).map { f =>
+        f.split("/").find(_.startsWith(s"${Intervals.ForkPartCol}=")).getOrElse("?")
+      }.toSet
+    assert(deltaForks.nonEmpty && deltaForks.subsetOf(allowed),
+      s"delta stab reads fork directories off the root path: $deltaForks")
     // compaction mints a new indexed epoch and later stabs use it
     val cRev = DeltaTemporalTable.compact(spark, p)
     assert(MetaIO.exists(s"$p/_vindex/rev=$cRev"),
@@ -272,5 +278,25 @@ class ValidTimeIndexSpec extends SparkSpec {
     // read — correctness over pruning)
     assert(ValidTimeIndex.validAt(spark, p, 100000L).select("node_key").as[Long]
       .collect().toSet == Set(2L))
+  }
+
+  test("a stab plans with no Spark job and equals the full scan across the axis") {
+    val p = tmp("graft-vti-nojob")
+    ValidTimeIndex.setPolicy(p, "vf", "vt", granularity = 8)
+    TemporalTable.write(frame(400), p)
+    val parts = MetaIO.listDirs(s"$p/_vindex/rev=1")
+      .count(_.startsWith(s"${Intervals.ForkPartCol}="))
+    // more fork directories than Spark lists without a distributed job
+    assert(parts > spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt,
+      s"fixture has only $parts fork directories")
+    // the axis ends at 40,000 (the open interval starts there): stabs
+    // inside it, on its edges and past it, where the fork index bails
+    for (ts <- Seq(0L, 7L, 999L, 12345L, 39999L, 40000L, 40100L, 1000000L)) {
+      val (stab, jobs) = jobsDuring(ValidTimeIndex.validAt(spark, p, ts))
+      assert(jobs == 0, s"ts=$ts: $jobs jobs before the action")
+      val want = ValidTimeIndex.fallbackScan(spark, p, ts, 1)
+      assert(stab.columns.toSeq == want.columns.toSeq, s"ts=$ts")
+      assert(stab.collect().toSet == want.collect().toSet, s"ts=$ts")
+    }
   }
 }

@@ -6,6 +6,40 @@ import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
 
+/** Local disk under the `vrec` scheme: records the path of every file
+  * opened for reading, and fails every create whose path `failCreate`
+  * accepts. Registered through `fs.vrec.impl`. */
+class RecordingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.Path
+  override def getScheme: String = "vrec"
+  override def getUri: java.net.URI = java.net.URI.create("vrec:///")
+  override def open(f: Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    RecordingFs.opened.add(f.toUri.getPath)
+    super.open(f, bufferSize)
+  }
+  private def check(f: Path): Unit =
+    if (RecordingFs.failCreate(f.toUri.getPath))
+      throw new java.io.IOException(s"injected create failure: $f")
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+                      blockSize: Long, progress: org.apache.hadoop.util.Progressable
+                     ): org.apache.hadoop.fs.FSDataOutputStream = {
+    check(f)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(f: Path, permission: org.apache.hadoop.fs.permission.FsPermission,
+                      overwrite: Boolean, bufferSize: Int, replication: Short,
+                      blockSize: Long, progress: org.apache.hadoop.util.Progressable
+                     ): org.apache.hadoop.fs.FSDataOutputStream = {
+    check(f)
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object RecordingFs {
+  val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]
+  @volatile var failCreate: String => Boolean = _ => false
+}
+
 /** Incremental vector-index maintenance (the VectorIndexListener analog):
   * commit a new revision into an indexed table, maintain, and the
   * IVF/NSW search paths see the new vectors WITHOUT a rebuild — untouched
@@ -403,5 +437,244 @@ class VectorIndexSpec extends SparkSpec {
         "embedding", q, k = 2, nProbe = 1).select("node_key").as[Long].collect()
       assert(top.contains(202L))
     } finally TemporalTable.removeCommitHook(hook)
+  }
+
+  // ---- maintain histories (fixed seeds) ------------------------------
+
+  /** One index per tier on the same table: flat NSW, layered HNSW, plain
+    * IVF and IVF-PQ. */
+  private val tiers = Seq(
+    ("nsw", 4, 0, 0), ("hnsw", 4, 0, 4), ("ivf", 0, 0, 0), ("pq", 0, 2, 0))
+
+  /** A row's embedding is a (cluster, salt) pair, or null. */
+  private type Emb = Option[(Int, Long)]
+
+  private def embFrame(state: Seq[(Long, Emb)]): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("node_key", LongType, nullable = false),
+      StructField("embedding", ArrayType(DoubleType, containsNull = false))))
+    spark.createDataFrame(spark.sparkContext.parallelize(state.sortBy(_._1).map {
+      case (k, e) => Row(k, e.map { case (c, s) => vec(c, s).toSeq }.orNull)
+    }, 2), schema)
+  }
+
+  /** Layout rows of one index as sorted text lines: id, vector bits,
+    * cell and the tier's extra columns (adjacency, level, codes). */
+  private def layoutLines(idxPath: String): Seq[String] = {
+    val df = spark.read.parquet(idxPath)
+    val extra = Seq("nsw_neighbors", "hnsw_level", "hnsw_layers", "pq_codes", "pq_norm")
+      .filter(df.columns.contains)
+    df.select((Seq(col("node_key").cast("long"), col("embedding"),
+        col("ivf_cell").cast("int")) ++ extra.map(c => to_json(array(col(c))))): _*)
+      .collect().toSeq
+      .map { r =>
+        val v = r.getSeq[Double](1)
+        s"${r.getLong(0)}|${Option(v).map(_.map(d =>
+          java.lang.Double.doubleToLongBits(d).toHexString).mkString(",")).orNull}" +
+          s"|${r.getInt(2)}|" + (3 until r.length).map(r.getString).mkString("|")
+      }.sorted
+  }
+
+  private def digest(lines: Seq[String]): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(lines.mkString("\n").getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+
+  /** A random history on one table carrying an index of every tier:
+    * merges that insert (some null vectors), delete, re-embed within the
+    * same cell or into another, null a vector out, and re-embed back to
+    * an earlier vector (A→B→A); a maintain of every index after most of
+    * them. Each maintain's count is checked against a model of what the
+    * layout stores (an (id, vector) pair enters once, ever), and each
+    * layout must hold exactly the model's pairs. Returns, per tier, the
+    * counts, the row count and the layout digest. */
+  private def runMaintainHistory(seed: Long): Map[String, (Seq[Long], Int, String)] = {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val p = Files.createTempDirectory(s"graft-vecidx-hist-$seed").resolve("tbl").toString
+    val params = Gen.Parameters.default
+    var rng = Seed(seed)
+    def draw[A](g: Gen[A]): A = {
+      val (r, next) = (g.pureApply(params, rng), rng.next)
+      rng = next
+      r
+    }
+    var state: Map[Long, Emb] = (1L to 40L).map(k => k -> Option(((k % 4).toInt, k))).toMap
+    // every non-null embedding a key has ever had, for A→B→A reverts
+    val past = scala.collection.mutable.Map.empty[Long, Set[(Int, Long)]]
+    state.foreach { case (k, e) => past(k) = e.toSet }
+    TemporalTable.write(embFrame(state.toSeq), p)
+    tiers.foreach { case (name, m, pqM, ml) =>
+      VectorIndex.create(spark, p, name, "node_key", "embedding", nLists = 4,
+        m = m, pqM = pqM, pqK = 8, hnswMl = ml)
+    }
+    // the model: the (id, vector) pairs each layout stores, and the state
+    // each index was last maintained at
+    var stored: Set[(Long, (Int, Long))] = state.toSeq.collect { case (k, Some(e)) => (k, e) }.toSet
+    var indexedState = state
+    val counts = scala.collection.mutable.Map.empty[String, Seq[Long]].withDefaultValue(Nil)
+    var nextKey = 41L
+    (1 to 4).foreach { _ =>
+      val keys = state.keys.toSeq.sorted
+      val stepGen = for {
+        upd <- Gen.someOf(keys).map(_.take(8))
+        kinds <- Gen.listOfN(upd.size, Gen.frequency((3, "same"), (2, "other"),
+          (2, "revert"), (1, "null"), (1, "keep")))
+        salts <- Gen.listOfN(upd.size, Gen.choose(1000L, 100000L))
+        del <- Gen.someOf(keys.filterNot(upd.contains)).map(_.take(3))
+        nIns <- Gen.choose(0, 4)
+        insNull <- Gen.listOfN(nIns, Gen.prob(0.2))
+        insCells <- Gen.listOfN(nIns, Gen.choose(0, 3))
+        maintainNow <- Gen.prob(0.75)
+      } yield (upd.toSeq.sorted.zip(kinds).zip(salts), del.toSeq, insNull.zip(insCells), maintainNow)
+      val (updates, dels, inserts, maintainNow) = draw(stepGen)
+      val ups = updates.map { case ((k, kind), salt) =>
+        val cur = state(k)
+        val cell = cur.map(_._1).getOrElse((k % 4).toInt)
+        val e: Emb = kind match {
+          case "same" => Some((cell, salt))
+          case "other" => Some(((cell + 1 + (salt % 3).toInt) % 4, salt))
+          case "revert" => (past(k) -- cur).toSeq.sorted.headOption.orElse(Some((cell, salt)))
+          case "null" => None
+          case _ => cur
+        }
+        k -> e
+      } ++ inserts.zipWithIndex.map { case ((isNull, c), i) =>
+        (nextKey + i) -> (if (isNull) None else Some((c, nextKey + i)))
+      }
+      nextKey += inserts.size
+      ups.foreach { case (k, e) => past(k) = past.getOrElse(k, Set.empty) ++ e }
+      TemporalTable.merge(spark, p, embFrame(ups),
+        Some(spark.createDataFrame(dels.map(Tuple1(_))).toDF("node_key")))
+      state = state -- dels ++ ups
+      if (maintainNow) {
+        val incoming = state.toSeq.collect {
+          case (k, Some(e)) if !indexedState.get(k).contains(Some(e)) => (k, e) }
+        val expected = incoming.count(pair => !stored.contains(pair)).toLong
+        stored ++= incoming
+        indexedState = state
+        tiers.foreach { case (name, _, _, _) =>
+          val n = VectorIndex.maintain(spark, p, name)
+          assert(n == expected, s"seed $seed: $name indexed $n, model says $expected")
+          counts(name) = counts(name) :+ n
+        }
+      }
+    }
+    val storedVecs = stored.map { case (k, (c, s)) => (k, vec(c, s).toSeq) }
+    tiers.map { case (name, _, _, _) =>
+      val lines = layoutLines(s"$p/_vecidx/$name")
+      val pairs = spark.read.parquet(s"$p/_vecidx/$name")
+        .select(col("node_key").cast("long"), col("embedding"))
+        .as[(Long, Seq[Double])].collect().toSeq
+      assert(pairs.size == pairs.distinct.size, s"seed $seed: $name stores a duplicate pair")
+      assert(pairs.toSet == storedVecs, s"seed $seed: $name layout differs from the model")
+      name -> ((counts(name), lines.size, digest(lines)))
+    }.toMap
+  }
+
+  test("maintain histories: counts, layout rows and adjacency pinned per tier") {
+    // pinned from the whole-layout-guard implementation this plan replaced
+    val pinned = Map(
+      7L -> Map(
+        "nsw" -> ((Seq(11L, 5L, 8L, 3L), 67, "35ab88261d6e4261")),
+        "hnsw" -> ((Seq(11L, 5L, 8L, 3L), 67, "33a7186ce7a531a0")),
+        "ivf" -> ((Seq(11L, 5L, 8L, 3L), 67, "284109055a5e66d2")),
+        "pq" -> ((Seq(11L, 5L, 8L, 3L), 67, "3ac6581a36f645f1"))),
+      8L -> Map(
+        "nsw" -> ((Seq(6L, 8L, 5L, 7L), 66, "3a4fcd1333844164")),
+        "hnsw" -> ((Seq(6L, 8L, 5L, 7L), 66, "922b5f9adbb6d855")),
+        "ivf" -> ((Seq(6L, 8L, 5L, 7L), 66, "ee267a177da56cc7")),
+        "pq" -> ((Seq(6L, 8L, 5L, 7L), 66, "18105164c7799a8a"))))
+    pinned.foreach { case (seed, want) =>
+      assert(runMaintainHistory(seed) == want, s"seed $seed")
+    }
+  }
+
+  // ---- what one maintain touches ------------------------------------
+
+  /** A table on the recording file system (see [[RecordingFs]]): its
+    * `vrec://` path and its local directory. */
+  private def recordedTable(prefix: String): (String, String) = {
+    spark.sparkContext.hadoopConfiguration.set("fs.vrec.impl", classOf[RecordingFs].getName)
+    val dir = Files.createTempDirectory(prefix).resolve("tbl").toString
+    (s"vrec://$dir", dir)
+  }
+
+  /** Every layout file's bytes, per `ivf_cell=` directory. */
+  private def cellBytes(dir: String): Map[String, Map[String, Seq[Byte]]] =
+    cellFiles(dir).map { case (cell, files) =>
+      cell -> files.map(f => f -> Files.readAllBytes(
+        java.nio.file.Paths.get(s"$dir/$cell/$f")).toSeq).toMap
+    }
+
+  test("maintain opens only the affected cells' files, in at most 6 jobs") {
+    val (p, dir) = recordedTable("graft-vecidx-rec")
+    TemporalTable.write(rows(0L until 64L), p)
+    Seq(("rn", 4, 0, 0), ("rh", 4, 0, 4), ("ri", 0, 0, 0), ("rq", 0, 2, 0)).foreach {
+      case (name, m, pqM, ml) =>
+        VectorIndex.create(spark, p, name, "node_key", "embedding", nLists = 4,
+          m = m, pqM = pqM, pqK = 8, hnswMl = ml)
+    }
+    // two new vectors and a same-cell re-embed, all in cluster 1
+    TemporalTable.merge(spark, p, rows(Seq(101L, 105L)).unionByName(
+      Seq((9L, vec(1, 5000L).toSeq)).toDF("node_key", "embedding")), None)
+    Seq("rn", "rh", "ri", "rq").foreach { name =>
+      val idxDir = s"$dir/_vecidx/$name"
+      val model = IvfIndex.readModel(idxDir)
+      val cell = s"ivf_cell=${IvfIndex.assignCells(rows(Seq(101L)), model, "embedding")
+        .select("ivf_cell").as[Int].head()}"
+      val before = cellBytes(idxDir)
+      RecordingFs.opened.clear()
+      val (n, jobs) = jobsDuring(VectorIndex.maintain(spark, p, name))
+      assert(n == 3L, s"$name indexed $n")
+      assert(jobs <= 6, s"$name maintain ran $jobs jobs")
+      val cellsOpened = RecordingFs.opened.toArray.toSeq.map(_.toString)
+        .filter(_.startsWith(s"$idxDir/ivf_cell="))
+        .map(_.stripPrefix(s"$idxDir/").takeWhile(_ != '/')).toSet
+      assert(cellsOpened.subsetOf(Set(cell)), s"$name opened $cellsOpened, affected $cell")
+      if (name == "rn" || name == "rh") assert(cellsOpened == Set(cell), s"$name read no stored row")
+      val after = cellBytes(idxDir)
+      before.foreach { case (c, files) =>
+        if (c != cell) assert(after(c) == files, s"$name: untouched $c changed")
+      }
+      assert(after(cell) != before(cell), s"$name: affected $cell unchanged")
+    }
+  }
+
+  test("a failed maintain write, then another maintain, stores no duplicate") {
+    val (p, dir) = recordedTable("graft-vecidx-fail")
+    TemporalTable.write(rows(0L until 64L), p)
+    Seq(("fn", 4, 0), ("fi", 0, 0), ("fq", 0, 2)).foreach { case (name, m, pqM) =>
+      VectorIndex.create(spark, p, name, "node_key", "embedding", nLists = 4,
+        m = m, pqM = pqM, pqK = 8)
+    }
+    // new vectors in two cells, and id 8 re-embedded within its cell
+    TemporalTable.merge(spark, p, rows(Seq(100L, 101L, 105L)).unionByName(
+      Seq((8L, vec(0, 7000L).toSeq)).toDF("node_key", "embedding")), None)
+    def pairs(name: String) = spark.read.parquet(s"$dir/_vecidx/$name")
+      .select(col("node_key").cast("long"), col("embedding"))
+      .as[(Long, Seq[Double])].collect().toSeq
+    try Seq("fn", "fi", "fq").foreach { name =>
+      val idxDir = s"$dir/_vecidx/$name"
+      val stored = pairs(name)
+      // the data write fails: nothing lands, the watermark stays
+      RecordingFs.failCreate = f => f.startsWith(idxDir) && !f.startsWith(s"$idxDir/_ivf")
+      intercept[Exception](VectorIndex.maintain(spark, p, name))
+      RecordingFs.failCreate = _ => false
+      assert(VectorIndex.indexedUpTo(p, name) == 1)
+      assert(pairs(name).groupBy(identity).map(g => g._1 -> g._2.size) ==
+        stored.groupBy(identity).map(g => g._1 -> g._2.size), s"$name: a failed write changed the layout")
+      // the data write lands but the watermark does not: the next
+      // maintain redoes the increment and must find it stored
+      RecordingFs.failCreate = f => f.startsWith(s"$idxDir/_ivf/")
+      assert(VectorIndex.maintain(spark, p, name) == 4L)
+      RecordingFs.failCreate = _ => false
+      assert(VectorIndex.indexedUpTo(p, name) == 1)
+      assert(VectorIndex.maintain(spark, p, name) == 0L, s"$name re-indexed stored vectors")
+      assert(VectorIndex.indexedUpTo(p, name) == 2)
+      val now = pairs(name)
+      assert(now.size == now.distinct.size && now.size == stored.size + 4,
+        s"$name: ${now.size} rows after maintains, ${stored.size} before")
+    } finally RecordingFs.failCreate = _ => false
   }
 }
