@@ -82,26 +82,23 @@ object HnswGraph {
         expr(s"transform($vecCol, x -> CAST(x AS DOUBLE))").as("vec"),
         col("ivf_cell").cast("int").as("cell")).as[VecRow]
       .groupByKey(_.cell)
-      .flatMapGroups { (_, rows) =>
+      .flatMapGroups { (cell, rows) =>
         val arr = rows.toArray.sortBy(_.id)
-        val (levels, layers) = cellLayers(arr.map(_.id), arr.map(_.vec), m, mL, efConstruction)
-        arr.indices.iterator.map { i =>
-          HnswRow(arr(i).id, arr(i).vec, arr(i).cell, levels(i), layers(i))
-        }
+        cellRows(arr.map(_.id), arr.map(_.vec), cell, m, mL, efConstruction)
       }
       .toDF(idCol, vecCol, "ivf_cell", "hnsw_level", "hnsw_layers")
   }
 
-  /** One cell's levels and per-layer neighbour ids, the per-cell kernel of
-    * [[buildGraph]] (also run by [[graft.sources.VectorIndex]]'s
-    * maintenance): `ids`/`vecs` in insertion order — id order, as the
-    * callers sort them. */
-  private[graft] def cellLayers(ids: Array[Long], vecs: Array[Array[Double]], m: Int,
-                                mL: Int, efConstruction: Int = 64
-                               ): (Array[Int], Array[Array[Array[Long]]]) = {
+  /** One cell's layered graph rows, the per-cell kernel of [[buildGraph]]
+    * (also run by [[graft.sources.VectorIndex]]'s maintenance):
+    * `ids`/`vecs` in insertion order — id order, as the callers sort
+    * them — each with its level and per-layer neighbour ids. */
+  private[graft] def cellRows(ids: Array[Long], vecs: Array[Array[Double]], cell: Int,
+                              m: Int, mL: Int, efConstruction: Int = 64): Iterator[HnswRow] = {
     val levels = ids.map(levelOf(_, mL))
     val (adj, _) = insertBuild(vecs, levels, m, efConstruction)
-    (levels, adj.map(_.map(_.map(j => ids(j)))))
+    ids.indices.iterator.map(i =>
+      HnswRow(ids(i), vecs(i), cell, levels(i), adj(i).map(_.map(j => ids(j)))))
   }
 
   /** Search-based incremental insertion over one cell (the reference's

@@ -91,22 +91,21 @@ object NswGraph {
     // documented memory contract.
     toVecRows(assigned, idCol, vecCol)
       .groupByKey(_.cell)
-      .flatMapGroups { (_, rows) =>
+      .flatMapGroups { (cell, rows) =>
         val arr = rows.toArray.sortBy(_.id)
-        val nbrs = cellNeighbors(arr.map(_.id), arr.map(_.vec), m, efConstruction)
-        arr.indices.iterator.map(i => GraphRow(arr(i).id, arr(i).vec, arr(i).cell, nbrs(i)))
+        cellRows(arr.map(_.id), arr.map(_.vec), cell, m, efConstruction)
       }
       .toDF(idCol, vecCol, "ivf_cell", "nsw_neighbors")
   }
 
-  /** One cell's adjacency, the per-cell kernel of [[buildGraph]] (also
+  /** One cell's graph rows, the per-cell kernel of [[buildGraph]] (also
     * run by [[graft.sources.VectorIndex]]'s maintenance): `ids`/`vecs` in
-    * insertion order — id order, as the callers sort them — and each
-    * node's neighbour ids. */
-  private[graft] def cellNeighbors(ids: Array[Long], vecs: Array[Array[Double]],
-                                   m: Int, efConstruction: Int = 64): Array[Array[Long]] = {
+    * insertion order — id order, as the callers sort them — each with its
+    * neighbour ids. */
+  private[graft] def cellRows(ids: Array[Long], vecs: Array[Array[Double]], cell: Int,
+                              m: Int, efConstruction: Int = 64): Iterator[GraphRow] = {
     val (adj, _) = HnswGraph.insertBuild(vecs, Array.fill(vecs.length)(0), m, efConstruction)
-    adj.map(_(0).map(j => ids(j)))
+    ids.indices.iterator.map(i => GraphRow(ids(i), vecs(i), cell, adj(i)(0).map(j => ids(j))))
   }
 
   /** Build the graph over a [[IvfIndex.fit]] output and persist it

@@ -22,19 +22,20 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   * reaches [[listFiles]] as a partition filter and drops every other
   * revision's files before the scan plans splits.
   *
-  * The same explicit index serves other hive layouts whose files the
-  * caller already knows: `partitionColumn` names the int partition column
-  * (a vector index's `ivf_cell`), or is None for a plain file list (the
-  * stab's fork files of a valid-time sidecar, whose `__fork` data column
-  * already carries the partition value); the keys are then ignored. */
+  * `groups` holds the files per revision, and `groupTimesMs` each
+  * revision's commit time. With `revColumn` false the same explicit index
+  * serves a plain file list whose groups are not revisions (the fork
+  * directories on a valid-time stab's root path, each with its directory
+  * mtime): no partition column is exposed, and a group's key only names
+  * its mtime. */
 private[graft] class CommitLogFileIndex(
     tablePath: String,
-    revFiles: Seq[(Int, Seq[(String, Long)])],
-    revTimesMs: Map[Int, Long] = Map.empty,
-    partitionColumn: Option[String] = Some("rev")) extends FileIndex {
+    groups: Seq[(Int, Seq[(String, Long)])],
+    groupTimesMs: Map[Int, Long] = Map.empty,
+    revColumn: Boolean = true) extends FileIndex {
 
   override val partitionSchema: StructType =
-    StructType(partitionColumn.toSeq.map(StructField(_, IntegerType, nullable = true)))
+    StructType(if (revColumn) Seq(StructField("rev", IntegerType, nullable = true)) else Nil)
 
   override def rootPaths: Seq[Path] = Seq(new Path(tablePath))
 
@@ -43,12 +44,12 @@ private[graft] class CommitLogFileIndex(
   private val blockSize = 128L * 1024 * 1024
 
   private lazy val partitions: Seq[PartitionDirectory] =
-    revFiles.map { case (rev, files) =>
-      // mtime = the revision's commit timestamp: a fabricated 0 made
+    groups.map { case (rev, files) =>
+      // mtime = the group's time (a revision's commit timestamp): a 0 made
       // _metadata.file_modification_time read 1970-01-01 and weakened
       // (path, len, mtime) cache keys derived from this index's listing
-      val mtime = revTimesMs.getOrElse(rev, 0L)
-      PartitionDirectory(if (partitionColumn.isEmpty) InternalRow.empty else InternalRow(rev),
+      val mtime = groupTimesMs.getOrElse(rev, 0L)
+      PartitionDirectory(if (revColumn) InternalRow(rev) else InternalRow.empty,
         files.map { case (rel, size) =>
         new FileStatus(size, false, 1, blockSize, mtime,
           new Path(s"$tablePath/$rel"))
@@ -57,10 +58,10 @@ private[graft] class CommitLogFileIndex(
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-    if (partitionFilters.isEmpty || partitionColumn.isEmpty) partitions
+    if (partitionFilters.isEmpty || !revColumn) partitions
     else {
       // single partition column: every attribute in a partition filter is
-      // it, bound to slot 0 of the partition values row
+      // `rev`, bound to slot 0 of the partition values row
       val bound = Predicate.createInterpreted(
         partitionFilters.reduce(And).transform {
           case _: AttributeReference =>
@@ -70,29 +71,29 @@ private[graft] class CommitLogFileIndex(
     }
 
   override def inputFiles: Array[String] =
-    revFiles.flatMap { case (_, files) =>
+    groups.flatMap { case (_, files) =>
       files.map { case (rel, _) => s"$tablePath/$rel" }
     }.toArray
 
   override def refresh(): Unit = ()
 
   override def sizeInBytes: Long =
-    revFiles.iterator.flatMap(_._2.iterator.map(_._2)).sum
+    groups.iterator.flatMap(_._2.iterator.map(_._2)).sum
 }
 
 private[graft] object CommitLogFileIndex {
 
-  /** Per-partition parquet files under `root` (paths relative to it) as
-    * ONE relation: an explicit [[CommitLogFileIndex]], so planning lists
+  /** Grouped parquet files under `root` (paths relative to it) as ONE
+    * relation: an explicit [[CommitLogFileIndex]], so planning lists
     * nothing, infers no partitions and runs no Spark job. `dataSchema` is
     * the files' own ([[probeSchema]]). */
   def scan(spark: org.apache.spark.sql.SparkSession, root: String,
-           revFiles: Seq[(Int, Seq[(String, Long)])], revTimesMs: Map[Int, Long],
-           dataSchema: StructType, partitionColumn: Option[String] = Some("rev")
+           groups: Seq[(Int, Seq[(String, Long)])], groupTimesMs: Map[Int, Long],
+           dataSchema: StructType, revColumn: Boolean = true
           ): org.apache.spark.sql.DataFrame = {
-    // commit timestamps as the fabricated mtimes: stable, non-1970
-    // (path, len, mtime) cache keys (see the partitions above)
-    val index = new CommitLogFileIndex(root, revFiles, revTimesMs, partitionColumn)
+    // stable, non-1970 fabricated mtimes: (path, len, mtime) cache keys
+    // (see the partitions above)
+    val index = new CommitLogFileIndex(root, groups, groupTimesMs, revColumn)
     val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
       index, index.partitionSchema, dataSchema, None,
       new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,

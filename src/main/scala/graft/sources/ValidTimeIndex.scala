@@ -158,8 +158,10 @@ object ValidTimeIndex {
   private def stabSidecarDir(spark: SparkSession, rdir: String,
                              ts: Long): Option[(DataFrame, String, String)] = {
     val prefix = s"${Intervals.ForkPartCol}="
-    val forks = MetaIO.listDirs(rdir).filter(_.startsWith(prefix))
-      .flatMap(d => scala.util.Try(d.stripPrefix(prefix).toLong).toOption.map(d -> _))
+    // (dir, fork node, dir mtime)
+    val forks = MetaIO.listDirsAged(rdir).filter(_._1.startsWith(prefix))
+      .flatMap { case (d, mtime) =>
+        scala.util.Try(d.stripPrefix(prefix).toLong).toOption.map((d, _, mtime)) }
       .sortBy(_._2)
     def files(dir: String): Seq[(String, Long)] =
       MetaIO.listFiles(s"$rdir/$dir").filter(_._1.endsWith(".parquet"))
@@ -167,9 +169,12 @@ object ValidTimeIndex {
     val probe = forks.headOption.flatMap(f => files(f._1).headOption)
     if (probe.isEmpty) return None
     val schema = CommitLogFileIndex.probeSchema(spark, s"$rdir/${probe.get._1}")
-    def scan(dirs: Seq[String]): DataFrame = CommitLogFileIndex.scan(spark, rdir,
-      Seq(0 -> MetaIO.parallelMap(dirs)(files).flatten), Map.empty, schema,
-      partitionColumn = None)
+    // one file group per fork directory, its mtime the directory's
+    def scan(dirs: Seq[(String, Long, Long)]): DataFrame = {
+      val listed = MetaIO.parallelMap(dirs)(d => files(d._1)).zipWithIndex.map(_.swap)
+      CommitLogFileIndex.scan(spark, rdir, listed,
+        dirs.indices.map(i => i -> dirs(i)._3).toMap, schema, revColumn = false)
+    }
     if (!schema.fieldNames.contains(Intervals.ForkCol)) return None
     val meta = schema(Intervals.ForkCol).metadata
     if (!meta.contains(Intervals.MetaFrom) || !meta.contains(Intervals.MetaTo) ||
@@ -186,11 +191,11 @@ object ValidTimeIndex {
     // forks are off the instant's root path) — same bail as the rule
     val pruned =
       if (ts < 0 || ts / gran > axisMax)
-        scan(forks.map(_._1)).filter(stab)
+        scan(forks).filter(stab)
       else {
         val nodes = Intervals.stabNodes(ts, gran).filter(_ <= axisMax)
         val onPath = nodes.toSet
-        scan(forks.collect { case (d, f) if onPath(f) => d })
+        scan(forks.filter(f => onPath(f._2)))
           .filter(col(Intervals.ForkCol).isin(nodes: _*) && stab)
       }
     Some((pruned.drop(Intervals.ForkCol), fromCol, toCol))

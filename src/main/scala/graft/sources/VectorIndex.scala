@@ -35,7 +35,9 @@ import org.apache.spark.sql.functions._
   *  2. one bounded aggregate over it yields the AFFECTED cells (at most
   *     `nLists`);
   *  3. only those cells' files are opened, and each affected cell is one
-  *     task holding its stored rows and its candidates. A candidate whose
+  *     task holding its candidates and its stored rows: all of them on
+  *     the graph tiers, which rebuild the cell, and only those with a
+  *     candidate's id on plain IVF and IVF-PQ. A candidate whose
   *     (id, vector) the cell already stores is dropped — the guard an
   *     A→B→A re-embed needs, since the revision diff sees B→A as a change
   *     while A is still stored. Checking the one cell is enough:
@@ -145,9 +147,27 @@ object VectorIndex {
   /** The spec's graph build: flat NSW, or the layered HNSW adjacency. */
   private def graphOf(assigned: DataFrame, spec: Spec): DataFrame =
     if (spec.hnswMl > 0)
-      graft.operators.HnswGraph.buildGraph(assigned, spec.idCol, spec.vecCol,
-        spec.m, spec.hnswMl)
+      HnswGraph.buildGraph(assigned, spec.idCol, spec.vecCol, spec.m, spec.hnswMl)
     else NswGraph.buildGraph(assigned, spec.idCol, spec.vecCol, spec.m)
+
+  /** [[graphOf]] over cells already grouped: each an id-sorted array of
+    * one cell's rows, through the same per-cell kernel as the build
+    * ([[NswGraph.cellRows]] / [[HnswGraph.cellRows]]), with the same
+    * output columns. */
+  private def graphOfCells(spark: SparkSession,
+                           cells: org.apache.spark.rdd.RDD[Array[CellRow]],
+                           spec: Spec): DataFrame = {
+    import spark.implicits._
+    val (m, mL) = (spec.m, spec.hnswMl)
+    if (mL > 0)
+      spark.createDataset(cells.flatMap(c =>
+          HnswGraph.cellRows(c.map(_._1), c.map(_._2), c.head._3, m, mL)))
+        .toDF(spec.idCol, spec.vecCol, "ivf_cell", "hnsw_level", "hnsw_layers")
+    else
+      spark.createDataset(cells.flatMap(c =>
+          NswGraph.cellRows(c.map(_._1), c.map(_._2), c.head._3, m)))
+        .toDF(spec.idCol, spec.vecCol, "ivf_cell", "nsw_neighbors")
+  }
 
   /** Declare + build the index over the table's current latest revision.
     * `m` = 0 → plain IVF layout; `m` > 0 → per-cell graph adjacency rides
@@ -299,11 +319,13 @@ object VectorIndex {
       else java.lang.Double.doubleToLongBits(d))
 
   /** One affected cell's task: its stored rows (in scan order) and the
-    * candidates it does not store yet, which `added` counts. */
+    * candidates it does not store yet, which `added` counts. Only stored
+    * rows with a candidate's id can match, so only they are keyed. */
   private def guardCell(rows: Iterator[CellRow], added: org.apache.spark.util.LongAccumulator
                        ): (Array[CellRow], Array[CellRow]) = {
     val (stored, candidates) = rows.toArray.partition(!_._4)
-    val have = stored.iterator.map(r => (r._1, vecKey(r._2))).toSet
+    val ids = candidates.iterator.map(_._1).toSet
+    val have = stored.iterator.filter(r => ids(r._1)).map(r => (r._1, vecKey(r._2))).toSet
     val news = candidates.filterNot(r => have((r._1, vecKey(r._2))))
     added.add(news.length)
     (stored, news)
@@ -319,34 +341,34 @@ object VectorIndex {
   }
 
   /** [[maintain]]'s per-cell step over the affected cells (steps 3–4 of
-    * the object scaladoc). Only those cells' files are opened: an
-    * explicit file index of their `ivf_cell=` directories, listed on the
-    * driver, with the schema of one footer. A [[CellPartitioner]] gives
-    * each affected cell a task of its own. The graph tiers rebuild through
-    * the build's per-cell kernels ([[NswGraph.cellNeighbors]],
-    * [[HnswGraph.cellLayers]]); PQ rows encode with the STORED codebooks
-    * (no refit: drift degrades recall, not correctness, until rebuild).
-    * Read and write are one job: the dynamic overwrite replaces a cell
-    * only when the job commits, after every read. Returns the number of
-    * new rows, counted in the write's own tasks (an action's accumulator
-    * counts each task once). */
+    * the object scaladoc). Only those cells' files are opened: the layout
+    * is read with the schema of one of their footers and pruned to their
+    * `ivf_cell=` partitions. The graph tiers take each cell's stored rows
+    * whole; plain IVF and IVF-PQ take only the stored rows with a
+    * candidate's id (a broadcast semi-join), the only ones the guard can
+    * match. A [[CellPartitioner]] gives each affected cell a task of its
+    * own. The graph tiers rebuild through [[graphOfCells]]; PQ rows encode
+    * with the STORED codebooks (no refit: drift degrades recall, not
+    * correctness, until rebuild). Read and write are one job: the dynamic
+    * overwrite replaces a cell only when the job commits, after every
+    * read. Returns the number of new rows, counted in the write's own
+    * tasks (an action's accumulator counts each task once). */
   private def patchCells(spark: SparkSession, path: String, candidates: DataFrame,
                          affected: Array[Int], spec: Spec): Long = {
     import spark.implicits._
-    val cellFiles = MetaIO.parallelMap(affected.toSeq) { c =>
-      c -> MetaIO.listFiles(s"$path/ivf_cell=$c").filter(_._1.endsWith(".parquet"))
-        .sortBy(_._1).map { case (n, size) => (s"ivf_cell=$c/$n", size) }
-    }.filter(_._2.nonEmpty)
     val fresh = candidates
       .select(col(spec.idCol), col(spec.vecCol), col("ivf_cell"), lit(true))
-    // stored rows first: a cell's task sees them in scan order ahead of
-    // its candidates, the order the id-sorted (stable) build inserts
-    // same-id copies in
-    val rows = cellFiles.headOption.fold(fresh) { case (_, files) =>
-      CommitLogFileIndex.scan(spark, path, cellFiles, Map.empty,
-          CommitLogFileIndex.probeSchema(spark, s"$path/${files.head._1}"),
-          partitionColumn = Some("ivf_cell"))
-        .select(col(spec.idCol), col(spec.vecCol), col("ivf_cell"), lit(false))
+    val probe = affected.iterator.flatMap(c =>
+      MetaIO.listFiles(s"$path/ivf_cell=$c").collectFirst {
+        case (n, _) if n.endsWith(".parquet") => s"$path/ivf_cell=$c/$n"
+      }).nextOption()
+    val rows = probe.fold(fresh) { file =>
+      val stored = spark.read.schema(graft.plans.FooterSchemas.readParquet(spark, file).schema)
+        .parquet(path)
+        .filter(col("ivf_cell").isin(affected.toSeq: _*))
+        .select(col(spec.idCol), col(spec.vecCol), col("ivf_cell").cast("int"), lit(false))
+      (if (spec.m > 0) stored
+       else stored.join(broadcast(candidates.select(spec.idCol)), Seq(spec.idCol), "left_semi"))
         .union(fresh)
     }
     val perCell = rows.as[CellRow].rdd
@@ -354,31 +376,17 @@ object VectorIndex {
       .partitionBy(new CellPartitioner(affected))
       .values
     val added = spark.sparkContext.longAccumulator
-    val (idCol, vecCol, m, mL) = (spec.idCol, spec.vecCol, spec.m, spec.hnswMl)
-    val out =
-      if (m > 0 && mL > 0)
-        spark.createDataset(perCell.mapPartitions(cell =>
-          cellToRebuild(cell, added).iterator.flatMap { arr =>
-            val (levels, layers) = HnswGraph.cellLayers(arr.map(_._1), arr.map(_._2), m, mL)
-            arr.indices.map(i =>
-              HnswGraph.HnswRow(arr(i)._1, arr(i)._2, arr(i)._3, levels(i), layers(i)))
-          })).toDF(idCol, vecCol, "ivf_cell", "hnsw_level", "hnsw_layers")
-      else if (m > 0)
-        spark.createDataset(perCell.mapPartitions(cell =>
-          cellToRebuild(cell, added).iterator.flatMap { arr =>
-            val nbrs = NswGraph.cellNeighbors(arr.map(_._1), arr.map(_._2), m)
-            arr.indices.map(i => NswGraph.GraphRow(arr(i)._1, arr(i)._2, arr(i)._3, nbrs(i)))
-          })).toDF(idCol, vecCol, "ivf_cell", "nsw_neighbors")
-      else {
-        val news = spark.createDataset(perCell.mapPartitions(cell =>
-          guardCell(cell, added)._2.iterator.map(r => (r._1, r._2, r._3))))
-          .toDF(idCol, vecCol, "ivf_cell")
-        if (spec.pqM > 0) Pq.encode(news, vecCol, Pq.readModel(path)) else news
-      }
-    if (m > 0)
-      out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+    if (spec.m > 0)
+      graphOfCells(spark, perCell.mapPartitions(cell => cellToRebuild(cell, added).iterator), spec)
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         .partitionBy("ivf_cell").parquet(path)
-    else out.write.mode("append").partitionBy("ivf_cell").parquet(path)
+    else {
+      val news = spark.createDataset(perCell.mapPartitions(cell =>
+          guardCell(cell, added)._2.iterator.map(r => (r._1, r._2, r._3))))
+        .toDF(spec.idCol, spec.vecCol, "ivf_cell")
+      (if (spec.pqM > 0) Pq.encode(news, spec.vecCol, Pq.readModel(path)) else news)
+        .write.mode("append").partitionBy("ivf_cell").parquet(path)
+    }
     added.value
   }
 

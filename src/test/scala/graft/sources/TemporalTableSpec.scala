@@ -111,27 +111,10 @@ class TemporalTableSpec extends SparkSpec {
     val meta = new org.apache.spark.sql.types.MetadataBuilder().putString("unit", "eur").build()
     TemporalTable.write(rev1.withColumn("price", $"price".as("price", meta)), p)
     TemporalTable.write(rev2, p)
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).flatMap(pr =>
-          Option(pr.getProperty("spark.job.description"))).getOrElse("?"))
-    }
-    sc.addSparkListener(listener)
-    val opened =
-      try {
-        val dfs = Seq(TemporalTable.read(spark, p, Some(1)), TemporalTable.read(spark, p, Some(2)),
-          graft.plans.FooterSchemas.readParquet(spark, s"$p/rev=1"))
-        // listener events arrive in order: once the marker job shows up,
-        // every job the opens launched has too
-        sc.setJobDescription("marker")
-        try sc.parallelize(Seq(1)).count() finally sc.setJobDescription(null)
-        val deadline = System.nanoTime() + 10000000000L
-        while (!seen.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
-        dfs
-      } finally sc.removeSparkListener(listener)
-    assert(seen.toArray.toSeq == Seq("marker"), s"jobs launched while opening: $seen")
+    val (opened, jobs) = jobsDuring(
+      Seq(TemporalTable.read(spark, p, Some(1)), TemporalTable.read(spark, p, Some(2)),
+        graft.plans.FooterSchemas.readParquet(spark, s"$p/rev=1")))
+    assert(jobs == 0, s"$jobs jobs launched while opening")
     // the resolved schema is inference's, column metadata included
     Seq(1, 2).foreach { r =>
       assert(opened(r - 1).drop("revision", "commit_ts", "author").schema ==

@@ -298,5 +298,11 @@ class ValidTimeIndexSpec extends SparkSpec {
       assert(stab.columns.toSeq == want.columns.toSeq, s"ts=$ts")
       assert(stab.collect().toSet == want.collect().toSet, s"ts=$ts")
     }
+    // the explicit index gives the files their fork directory's mtime,
+    // not 1970-01-01
+    val mtimes = ValidTimeIndex.validAt(spark, p, 12345L)
+      .select(col("_metadata.file_modification_time").cast("long")).distinct()
+      .as[Long].collect()
+    assert(mtimes.nonEmpty && mtimes.forall(_ > 0L), s"fork file mtimes ${mtimes.toSeq}")
   }
 }
