@@ -1,6 +1,36 @@
 package graft.query
 
 import graft.SparkSpec
+import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
+
+/** Local-disk FileSystem on which every commit-log entry write fails
+  * (the hidden temp file [[graft.sources.MetaIO.createNew]] writes for a
+  * `_commits/NNNNNNNN.json` entry): a doc-row commit that reaches its
+  * commit point throws, everything else writes normally. Registered
+  * under the `shredfail` scheme via `fs.shredfail.impl`. */
+class CommitLogFailFs extends RawLocalFileSystem {
+  override def getScheme: String = "shredfail"
+  override def getUri: java.net.URI = java.net.URI.create("shredfail:///")
+  private def check(f: Path): Unit =
+    if (f.getParent.getName == "_commits" &&
+        f.getName.matches("\\.\\d{8}\\.json\\.tmp-.*"))
+      throw new java.io.IOException(s"injected commit-log failure: $f")
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream = {
+    check(f)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+                      bufferSize: Int, replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream = {
+    check(f)
+    super.create(f, permission, overwrite, bufferSize, replication,
+      blockSize, progress)
+  }
+}
 
 /** The shredded member-table serving layout, exercised at a tiny
   * threshold (-Dgraft.shred.min): member rows must agree with the
@@ -516,4 +546,202 @@ class ShredStoreSpec extends SparkSpec {
         "count(jn:doc('c','d.jn', 1)[][?$$.v gt 15])") === "5")
     }
   }
+
+  // ---- the commit's crash contract --------------------------------------
+
+  private def withShredMin[A](body: => A): A = {
+    val prev = sys.props.get("graft.shred.min")
+    sys.props("graft.shred.min") = "1"
+    try body
+    finally prev match {
+      case Some(v) => sys.props("graft.shred.min") = v
+      case None => sys.props.remove("graft.shred.min"); ()
+    }
+  }
+
+  private val xmlDoc = "<site><people>" +
+    (1 to 20).map(i =>
+      s"""<person id="p$i"><name>n$i</name><age>${18 + i}</age></person>""")
+      .mkString + "</people></site>"
+
+  /** The two document kinds: a JSON root array and an XML document, each
+    * with its store call and a query the doc row and the shred agree on. */
+  private val kinds: Seq[(String, (JsoniqRun.Store, String) => Unit, String)] = Seq(
+    ("d.jn", (st, d) => st.store("c", d, doc), "count(jn:doc('c','d.jn')[][?$$.v gt 15])"),
+    ("a.xml", (st, d) => { st.storeXml("c", d, xmlDoc); () },
+      "count(jn:doc('c','a.xml')/site/people/person[?xs:integer($$/age/text()) ge 30])"))
+  private val answers = Map("d.jn" -> "5", "a.xml" -> "9")
+
+  private def tmpDirs(shredRoot: String): Seq[String] =
+    Option(new java.io.File(shredRoot).list()).toSeq.flatten
+      .filter(_.startsWith(".tmp-"))
+
+  test("crash contract: a failing doc-row commit rethrows, leaves no temp dir and no revision") {
+    withShredMin {
+      spark.sparkContext.hadoopConfiguration
+        .set("fs.shredfail.impl", classOf[CommitLogFailFs].getName)
+      kinds.foreach { case (d, store, _) =>
+        val local = java.nio.file.Files.createTempDirectory("graft-shred-fail").toString
+        val st = new JsoniqRun.Store(spark, s"shredfail://$local")
+        val e = intercept[java.io.IOException](store(st, d))
+        assert(e.getMessage.contains("injected commit-log failure"), d)
+        assert(tmpDirs(s"$local/c/$d/_shred").isEmpty, d)
+        assert(!new java.io.File(s"$local/c/$d/_shred/r1").exists, d)
+        assert(st.headRevision("c", d).isEmpty, d)
+      }
+    }
+  }
+
+  test("crash contract: a failing member write still commits and reads serve the doc row") {
+    kinds.foreach { case (d, store, q) =>
+      withShredded { st =>
+        // a plain file where the revision's sidecar directory must go
+        val root = new java.io.File(s"${st.baseDir}/c/$d/_shred")
+        root.mkdirs()
+        new java.io.File(root, "r1").createNewFile()
+        store(st, d)
+        assert(st.headRevision("c", d) === Some(1), d)
+        assert(!new java.io.File(root, "r1").exists, d)
+        assert(tmpDirs(root.toString).isEmpty, d)
+        assert(!st.isShredded("c", d), d)
+        assert(JsoniqRun.serialize(st, q) === answers(d), d)
+      }
+    }
+  }
+
+  test("crash contract: an aged temp dir is swept, a fresh one is kept") {
+    kinds.foreach { case (d, store, q) =>
+      withShredded { st =>
+        store(st, d)
+        val root = new java.io.File(s"${st.baseDir}/c/$d/_shred")
+        val aged = new java.io.File(root, ".tmp-aged")
+        new java.io.File(aged, "s0").mkdirs()
+        assert(aged.setLastModified(System.currentTimeMillis() - 2 * 3600 * 1000L))
+        val fresh = new java.io.File(root, ".tmp-fresh")
+        new java.io.File(fresh, "s0").mkdirs()
+        store(st, d)
+        assert(!aged.exists, d)
+        assert(fresh.exists, d)
+        assert(st.headRevision("c", d) === Some(2), d)
+        assert(st.isShredded("c", d), d)
+        assert(JsoniqRun.serialize(st, q) === answers(d), d)
+      }
+    }
+  }
+
+  test("crash contract: a member-local commit whose sidecar fails serves the head by reconstruction") {
+    val obj = """{"meta": {"name": "corpus"}, "items": [""" +
+      (1 to 30).map(i => s"""{"v": $i, "w": {"x": ${i % 3}}}""").mkString(",") +
+      """], "tags": [""" + (1 to 20).map(i => s""""t$i"""").mkString(",") + "]}"
+    val update = "replace json value of jn:doc('c','m').items[3].v with 999"
+    val want = {
+      val plain = new JsoniqRun.Store(spark,
+        java.nio.file.Files.createTempDirectory("graft-shred-plain").toString)
+      plain.store("c", "m", obj)
+      JsoniqRun.serialize(plain, update)
+      JsoniqRun.serialize(plain, "jn:doc('c','m')")
+    }
+    withShredded { st =>
+      st.store("c", "m", obj)
+      new java.io.File(s"${st.baseDir}/c/m/_shred/r2").createNewFile()
+      JsoniqRun.serialize(st, update)
+      assert(st.headRevision("c", "m") === Some(2))
+      assert(st.isMemberLocalCommit("c", "m", 2))
+      assert(!new java.io.File(s"${st.baseDir}/c/m/_shred/r2").exists)
+      assert(!st.isShredded("c", "m"))
+      assert(JsoniqRun.serialize(st, "jn:doc('c','m')") === want)
+      assert(JsoniqRun.serialize(st, "jn:doc('c','m').items[3].v") === "999")
+    }
+  }
+
+  // ---- the on-disk layout, pinned -----------------------------------------
+
+  /** One revision's shred sidecar as text: the `_meta.json` content, the
+    * sidecar root's entries, and per member table its schema, row count
+    * and a digest of its rows (every column, as JSON, sorted). */
+  private def layoutOf(st: JsoniqRun.Store, d: String, rev: Int)
+      : (String, Seq[String], Seq[(String, String, Int, String)]) = {
+    import org.apache.spark.sql.functions.{col, struct, to_json}
+    import spark.implicits._
+    val dir = s"${st.baseDir}/c/$d/_shred/r$rev"
+    val entries = new java.io.File(dir).list().toSeq.sorted
+    val tables = entries.filter(_.matches("s\\d+")).map { sub =>
+      val df = spark.read.parquet(s"$dir/$sub")
+      val lines = df.select(to_json(struct(df.columns.toSeq.map(col): _*)))
+        .as[String].collect().toSeq.sorted
+      val digest = java.security.MessageDigest.getInstance("SHA-256")
+        .digest(lines.mkString("\n").getBytes("UTF-8")).take(8)
+        .map("%02x".format(_)).mkString
+      (sub, df.schema.simpleString, lines.size, digest)
+    }
+    (graft.sources.MetaIO.readString(s"$dir/_meta.json"), entries, tables)
+  }
+
+  test("layout pin: root-array JSON sidecar") {
+    withShredded { st =>
+      val arr = (1 to 40).map(i =>
+        if (i % 10 == 0) s"""{"v": $i, "s": "x$i", "n": [$i, {"k": null}]}"""
+        else s"""{"v": $i, "w": ${i % 3}, "f": ${i * 0.5}, "s": "x$i"}""")
+        .mkString("[", ",", "]")
+      st.store("c", "r.jn", arr)
+      val got = layoutOf(st, "r.jn", 1)
+      assert(got === PINNED_ROOT, s"\n$got")
+    }
+  }
+
+  test("layout pin: object-rooted JSON sidecar") {
+    withShredded { st =>
+      val obj = """{"meta": {"name": "corpus"}, "items": [""" +
+        (1 to 30).map(i => s"""{"v": $i, "w": {"x": ${i % 3}}, "t": "i$i"}""")
+          .mkString(",") +
+        """], "tags": [""" + (1 to 20).map(i => s""""t$i"""").mkString(",") +
+        """], "small": [1, 2], "tail": 9}"""
+      st.store("c", "o.jn", obj)
+      val got = layoutOf(st, "o.jn", 1)
+      assert(got === PINNED_OBJECT, s"\n$got")
+    }
+  }
+
+  test("layout pin: XML sidecar") {
+    withShredded { st =>
+      // two qualifying lists, one chain repeated (not addressable, so not
+      // shredded) and one list too short to qualify
+      val xml = "<site><people>" +
+        (1 to 20).map(i =>
+          s"""<person id="p$i"><name>n$i</name><age>${18 + i}</age></person>""")
+          .mkString + "</people><items>" +
+        (1 to 18).map(i => s"""<item k="$i">v${i * 7}</item>""").mkString +
+        "</items><regions>" +
+        (1 to 2).map(_ => "<r>" + (1 to 16).map(j => s"<x>$j</x>").mkString + "</r>")
+          .mkString + "</regions><few><y>1</y><y>2</y></few></site>"
+      st.storeXml("c", "x.xml", xml)
+      val got = layoutOf(st, "x.xml", 1)
+      assert(got === PINNED_XML, s"\n$got")
+    }
+  }
+
+  // pinned from the store paths before they shared one commit
+  private val sidecarFiles =
+    Seq("._graft_shredded.crc", "._meta.json.crc", "_graft_shredded", "_meta.json")
+  private val PINNED_ROOT = (
+    """[{"dir":"s0","kind":"json","steps":[]}]""",
+    sidecarFiles :+ "s0",
+    Seq(("s0", "struct<idx:bigint,member:variant,member_raw:string,__nk_n:bigint," +
+      "t:struct<f:double,n:array<variant>,s:string,v:bigint,w:bigint>>", 40, "e7d7cab8ae1e17d8")))
+  private val PINNED_OBJECT = (
+    """[{"dir":"s0","kind":"json","steps":["items"]},""" +
+      """{"dir":"s1","kind":"json","steps":["tags"]}]""",
+    sidecarFiles ++ Seq("s0", "s1"),
+    Seq(("s0", "struct<idx:bigint,member:variant,member_raw:string,__nk_n:bigint," +
+        "t:struct<t:string,v:bigint,w:struct<x:bigint>>>", 30, "0e5ab1435f9246b3"),
+      ("s1", "struct<idx:bigint,member:variant,member_raw:string,__nk_n:bigint>",
+        20, "1c53cbbdb8378264")))
+  private val PINNED_XML = (
+    """[{"dir":"s0","kind":"xml","steps":["site","people"]},""" +
+      """{"dir":"s1","kind":"xml","steps":["site","items"]}]""",
+    sidecarFiles ++ Seq("s0", "s1"),
+    Seq(("s0", "struct<idx:bigint,member:variant,n:string," +
+        "t:struct<@id:string,name:string,age:bigint>>", 20, "dd71a58e4c9f07d0"),
+      ("s1", "struct<idx:bigint,member:variant,n:string,t:struct<@k:bigint>>",
+        18, "a7283c56b4d2ee06")))
 }
