@@ -292,19 +292,56 @@ object JsoniqRun {
       // The log still lands BEFORE the revision commit (identity is
       // source of truth): a crash between log and commit leaves only an
       // orphan log at a number the reservation marker keeps skipped.
-      // the member tables don't depend on the revision NUMBER — only
-      // their final directory name does (the storeXml discipline). Write
-      // them into a hidden temp dir CONCURRENTLY with the (single-task)
-      // doc-row commit and rename into place after; the completion
-      // marker still lands last, so the crash contract is unchanged (an
-      // orphaned .tmp dir is inert garbage, never served).
+      commitShredded(path, json, shredPlan(json)) {
+        graft.sources.TemporalTable.write(
+          Seq(json).toDF("doc_json"), path,
+          onReserve = (r, token) => {
+            graft.sources.MetaIO.delete(editsPath(path, r))
+            evictEditState(path, r)
+            edits.foreach(es =>
+              logEdits(collection, doc, r, es, Some(token).filter(_.nonEmpty)))
+          })
+      }
+    }
+
+    /** Commit one document revision and its member-table ("shred")
+      * sidecar: the one commit path of [[store]] and [[storeXml]]. The
+      * sidecar holds one row per member of each large array, under
+      * `_shred/r<rev>`, so a 1M-member document distributes across
+      * executors instead of unboxing ONE multi-MB variant row in a single
+      * task — the Spark answer to the reference's node-store pages
+      * (bundles/sirix-core/src/main/java/io/sirix/page/
+      * KeyValueLeafPage.java:75, shredder service/json/shredder/
+      * JsonShredder.java:49). Small documents skip it: the 1-row read is
+      * already cheap, and the sidecar is a serving layout, not the
+      * source of truth.
+      *
+      * `commitRow` is the single-task doc-row commit and returns the
+      * revision; the member tables depend only on their final directory
+      * name, not on the revision NUMBER, so they are written into a
+      * hidden `_shred/.tmp-<uuid>` directory CONCURRENTLY with it and
+      * renamed into place after.
+      *
+      * The crash contract:
+      *  - the doc row is the source of truth. A failing `commitRow`
+      *    rethrows after a BOUNDED drain of the member job (a hung job
+      *    must not hold the cleanup and the original error forever; past
+      *    the bound the temp delete races only a doomed writer's own
+      *    directory), leaving no revision and no temp directory;
+      *  - a sidecar is served only once complete ([[sealShred]]: the
+      *    completion marker lands last), and a sidecar failure never
+      *    fails the commit — readers fall back to the doc row;
+      *  - a temp directory a hard-crashed writer orphaned is inert, never
+      *    served, and swept by a later commit once it is an hour old (a
+      *    concurrent writer's LIVE temp directory is younger), in one
+      *    LIST;
+      *  - fatal errors propagate, and the temp directory still goes. */
+    private def commitShredded(path: String, json: String,
+                               plan: Option[Seq[Store.ShredCandidate]])(
+        commitRow: => Int): Unit = {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
-      val plan = shredPlan(json)
-      // sweep temp dirs a hard-crashed writer orphaned (ADVICE r16: they
-      // are inert but accumulate unboundedly). Age-gated (1 h) so a
-      // concurrent writer's LIVE temp dir is never swept; one LIST.
       val shredRoot = s"$path/_shred"
       val sweepBefore = System.currentTimeMillis() - 3600000L
       graft.sources.MetaIO.listDirsAged(shredRoot).foreach { case (n, mt) =>
@@ -313,76 +350,66 @@ object JsoniqRun {
       }
       val tmp = s"$shredRoot/.tmp-${java.util.UUID.randomUUID().toString}"
       val memberJob: Option[Future[String]] =
-        plan.map { p => Future { writeShredTables(tmp, json, p) } }
+        plan.map(cands => Future(writeShredTables(tmp, json, cands)))
       val rev =
-        try graft.sources.TemporalTable.write(
-          Seq(json).toDF("doc_json"), path,
-          onReserve = (r, token) => {
-            graft.sources.MetaIO.delete(editsPath(path, r))
-            evictEditState(path, r)
-            edits.foreach(es =>
-              logEdits(collection, doc, r, es, Some(token).filter(_.nonEmpty)))
-          })
+        try commitRow
         catch {
           case e: Throwable =>
-            // BOUNDED drain (the TemporalTable.writeFrame discipline): a
-            // hung shred job must not delay the cleanup and the original
-            // error forever; past the bound the tmp delete races only a
-            // doomed writer's own temp dir
             memberJob.foreach(f =>
               scala.util.Try(Await.result(f, Duration(60, "s"))))
             graft.sources.MetaIO.delete(tmp, recursive = true)
             throw e
         }
-      // the shred is a serving sidecar, not the source of truth: the
-      // revision above is already durable, so a shred failure (e.g.
-      // member text the strict parquet write rejects) must not fail the
-      // store — readers fall back to the doc row. LOUD, not silent
-      // (ProjectionIndex's swallowed-marker lesson).
       var tmpRenamed = memberJob.isEmpty
       try memberJob.foreach { f =>
-        val meta = Await.result(f, Duration.Inf)
-        val dst = shredDir(path, rev)
-        if (!graft.sources.MetaIO.rename(tmp, dst))
-          throw new java.io.IOException(s"rename $tmp -> $dst failed")
-        tmpRenamed = true
-        graft.sources.MetaIO.writeStringOverwrite(s"$dst/_meta.json", meta)
-        writeSkeletonSidecar(path, rev, json, plan.get.cands)
-        // commit point: a crash/kill mid-job (task outputs visible
-        // under a v2 committer) must not leave a PARTIAL member table
-        // that later sessions serve silently — readers gate on this
-        // marker, not on directory existence (the ProjectionIndex
-        // CompleteMarker discipline)
-        graft.sources.MetaIO.writeStringOverwrite(
-          s"$dst/$ShredCompleteMarker", "{}")
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(
-            s"[graft] shred sidecar failed for $path rev $rev " +
-              s"(doc-row fallback serves reads): ${e.getMessage}")
-          graft.sources.MetaIO.delete(shredDir(path, rev), recursive = true)
-          ()
-        // fatal errors propagate — the finally still removes the temp dir
-        // (ADVICE r16: the NonFatal-only cleanup leaked it)
+        sealShred(path, rev, "shred", "doc-row fallback") { dst =>
+          val meta = Await.result(f, Duration.Inf)
+          if (!graft.sources.MetaIO.rename(tmp, dst))
+            throw new java.io.IOException(s"rename $tmp -> $dst failed")
+          tmpRenamed = true
+          graft.sources.MetaIO.writeStringOverwrite(s"$dst/_meta.json", meta)
+          writeSkeletonSidecar(path, rev, json, plan.get)
+        }
       } finally {
         if (!tmpRenamed) graft.sources.MetaIO.delete(tmp, recursive = true)
       }
     }
 
-    /** Member-table sidecar for large root-array documents: one row per
-      * top-level member (`idx`, `member_json`), range-partitioned on
-      * position, written per revision under `_shred/r<rev>`. Readers of
-      * `jn:doc(...)[]` / `for $x in jn:doc(...)` serve from it so a
-      * 1M-member document distributes across executors instead of
-      * unboxing ONE multi-MB variant row in a single task — the Spark
-      * answer to the reference's node-store pages
-      * (bundles/sirix-core/src/main/java/io/sirix/page/
-      * KeyValueLeafPage.java:75, shredder service/json/shredder/
-      * JsonShredder.java:49). Small documents skip it: the 1-row read
-      * is already cheap and corpus semantics are unchanged (the shred
-      * is a serving layout, not the source of truth). */
-    private[query] final case class ShredPlan(
-        cands: Seq[Store.ShredCandidate], preSplit: Option[Array[Long]])
+    /** Seal one revision's shred sidecar: `body` fills
+      * `shredDir(path, rev)`, then the completion marker lands LAST.
+      * Readers gate on the marker, not on the directory (the
+      * ProjectionIndex CompleteMarker discipline), so a crash or kill
+      * mid-body — task outputs visible under a v2 committer — leaves a
+      * PARTIAL sidecar that is never served. The sidecar is a serving
+      * layout, not the source of truth: a non-fatal failure prints one
+      * line, LOUD, not silent (ProjectionIndex's swallowed-marker
+      * lesson), deletes the directory and returns — `fallback` serves
+      * reads of `rev`, and the commit that made `rev` stands. */
+    private def sealShred(path: String, rev: Int, label: String,
+                          fallback: String)(body: String => Unit): Unit = {
+      val dst = shredDir(path, rev)
+      try {
+        body(dst)
+        graft.sources.MetaIO.writeStringOverwrite(
+          s"$dst/$ShredCompleteMarker", "{}")
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[graft] $label sidecar failed for $path " +
+            s"rev $rev ($fallback serves reads): ${e.getMessage}")
+          graft.sources.MetaIO.delete(dst, recursive = true)
+          ()
+      }
+    }
+
+    /** Carry a sidecar's manifest, and its skeleton if it has one, from
+      * `src` to `dst` unchanged (the copy and member-local commits keep
+      * their source revision's entries and elided arrays). */
+    private def copyShredMeta(src: String, dst: String): Unit = {
+      graft.sources.MetaIO.copyFile(s"$src/_meta.json", s"$dst/_meta.json")
+      if (graft.sources.MetaIO.exists(s"$src/_skeleton.json"))
+        graft.sources.MetaIO.copyFile(s"$src/_skeleton.json",
+          s"$dst/_skeleton.json")
+    }
 
     /** The driver half of the shred: one O(bytes) streaming scan locates
       * EVERY shreddable array — the root array, the large arrays of an
@@ -391,11 +418,12 @@ object JsoniqRun {
       * (the XmlItem encoding's `~c` arrays, addressed by element-name
       * chain). Fast path: a root ARRAY whose members are all below the
       * shred threshold cannot contain a nested candidate — the split
-      * (which the write needs anyway) doubles as the scan. None = no
-      * shred (small or candidate-free document). Independent of the
-      * revision number, so [[store]] overlaps the table writes with the
-      * doc-row commit. */
-    private def shredPlan(json: String): Option[ShredPlan] = {
+      * (which the write needs anyway) doubles as the scan, and the root
+      * candidate carries it as its member spans. None = no shred (small
+      * or candidate-free document). Independent of the revision number,
+      * so [[commitShredded]] overlaps the table writes with the doc-row
+      * commit. */
+    private def shredPlan(json: String): Option[Seq[Store.ShredCandidate]] = {
       if (json.length < Store.ShredMinBytes) return None
       var w = 0
       while (w < json.length && json.charAt(w).isWhitespace) w += 1
@@ -403,34 +431,38 @@ object JsoniqRun {
         if (w < json.length && json.charAt(w) == '[')
           Some(Store.splitTopLevelArraySpans(json))
         else None
+      val rootSpans = preSplit.map(
+        scala.collection.immutable.ArraySeq.unsafeWrapArray(_))
       val cands: Seq[Store.ShredCandidate] =
         if (preSplit.exists(sp => sp.nonEmpty && sp.forall(p =>
             (p & 0xFFFFFFFFL) - (p >>> 32) < Store.ShredMinBytes)))
           Seq(Store.ShredCandidate("json", Nil, 0, json.length,
-            preSplit.get.length))
-        else Store.shredCandidates(json)
-      if (cands.isEmpty) None else Some(ShredPlan(cands, preSplit))
+            preSplit.get.length, rootSpans))
+        else Store.shredCandidates(json).map(c =>
+          if (c.kind == "json" && c.steps.isEmpty) c.copy(members = rootSpans)
+          else c)
+      Some(cands).filter(_.nonEmpty)
     }
 
     /** The distributed half: write one member table per candidate under
       * `dir`, returning the manifest JSON (written by the caller at the
       * commit point, after the rename into the revision's shred dir). */
     private def writeShredTables(dir: String, json: String,
-                                 plan: ShredPlan): String = {
+                                 cands: Seq[Store.ShredCandidate]): String = {
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
       val metaArr = mapper.createArrayNode()
-      plan.cands.zipWithIndex.foreach { case (cand, k) =>
-        // locate member SPANS on the DRIVER (one O(bytes) scan — a
-        // Spark-side explode would run the whole parse in one task and
-        // re-execute it for range sampling); members materialize
-        // batched on executors, never one String each on the driver
-        val members =
-          if (cand.kind == "json" && cand.steps.isEmpty &&
-              plan.preSplit.isDefined) Store.MemberSpans(json, plan.preSplit.get)
-          else {
+      cands.zipWithIndex.foreach { case (cand, k) =>
+        // member SPANS are located on the DRIVER (one O(bytes) scan —
+        // a Spark-side explode would run the whole parse in one task
+        // and re-execute it for range sampling), or were already by the
+        // scan that found the candidate; members materialize batched on
+        // executors, never one String each on the driver
+        val members = cand.members match {
+          case Some(spans) => Store.MemberSpans(json, spans.toArray)
+          case None =>
             val sub = json.substring(cand.start, cand.end)
             Store.MemberSpans(sub, Store.splitTopLevelArraySpans(sub))
-          }
+        }
         writeMembers(s"$dir/s$k", members, cand.kind)
         val e = metaArr.addObject()
         e.put("dir", s"s$k")
@@ -511,9 +543,8 @@ object JsoniqRun {
       *
       * XML member tables (`kind = "xml"` — element nodes, not records)
       * take a DIFFERENT typed projection — [[writeXmlMembers]]. */
-    private[query] def writeMembers(dir: String,
-                                    members: Store.MemberSpans,
-                                    kind: String): Unit = {
+    private def writeMembers(dir: String, members: Store.MemberSpans,
+                             kind: String): Unit = {
       if (members.size == 0) return
       if (kind == "xml") { writeXmlMembers(dir, members); return }
       import org.apache.spark.sql.Encoders
@@ -613,8 +644,8 @@ object JsoniqRun {
       * predicates exactly like the variant path's try_cast — and a
       * name the sample never saw has no column at all, so the typed
       * predicate compiler declines and the variant walk serves. */
-    private[query] def writeXmlMembers(dir: String,
-                                       members: Store.MemberSpans): Unit = {
+    private def writeXmlMembers(dir: String,
+                                members: Store.MemberSpans): Unit = {
       import org.apache.spark.sql.graftbridge.GraftBridge
       val base = members.toDF(spark)
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -709,32 +740,17 @@ object JsoniqRun {
     }
 
     /** Copy the shred sidecar of one revision to another (content-
-      * identical commits — sdb:commit). File copies only: each member
-      * table dir, then the manifest, then the completion marker LAST —
-      * the same crash-safe ordering readers gate on. Non-fatal like
-      * [[maybeShred]]: the new revision's doc row is already durable. */
+      * identical commits — sdb:commit): file copies only, sealed by
+      * [[sealShred]]. */
     private[query] def copyShred(collection: String, doc: String,
                                  fromRev: Int, toRev: Int): Unit = {
       if (!shredExists(collection, doc, Some(fromRev))) return
       val path = docPath(collection, doc)
       val src = shredDir(path, fromRev)
-      val dst = shredDir(path, toRev)
-      try {
+      sealShred(path, toRev, "copied shred", "doc-row fallback") { dst =>
         graft.sources.MetaIO.listDirs(src).foreach(sub =>
           graft.sources.MetaIO.copyDir(s"$src/$sub", s"$dst/$sub"))
-        graft.sources.MetaIO.copyFile(s"$src/_meta.json", s"$dst/_meta.json")
-        if (graft.sources.MetaIO.exists(s"$src/_skeleton.json"))
-          graft.sources.MetaIO.copyFile(s"$src/_skeleton.json",
-            s"$dst/_skeleton.json")
-        graft.sources.MetaIO.writeStringOverwrite(
-          s"$dst/$ShredCompleteMarker", "{}")
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(
-            s"[graft] shred sidecar copy failed for $path rev $toRev " +
-              s"(doc-row fallback serves reads): ${e.getMessage}")
-          graft.sources.MetaIO.delete(dst, recursive = true)
-          ()
+        copyShredMeta(src, dst)
       }
     }
 
@@ -1925,12 +1941,14 @@ object JsoniqRun {
       lap("sentinel commit")
       // sidecar: HARDLINK the head's entry dirs (immutable parquet
       // files — O(files), not O(bytes)), then overwrite the touched
-      // entries' _patch overlays with merged rows; the completion
-      // marker lands LAST (a crash leaves no marker, and docText
-      // reconstructs from base text + edit logs regardless)
-      try {
-        val src = shredDir(path, head)
-        val dst = shredDir(path, rev)
+      // entries' _patch overlays with merged rows. The skeleton is
+      // UNCHANGED by member edits (the arrays stay elided slots; member
+      // content/count never shows in it), so the base's serves the new
+      // revision verbatim. A failed sidecar leaves docText to
+      // reconstruct from base text + edit logs.
+      val src = shredDir(path, head)
+      sealShred(path, rev, "member-local shred",
+          "docText reconstruction") { dst =>
         graft.sources.MetaIO.listDirs(src).foreach(sub =>
           graft.sources.MetaIO.linkOrCopyDir(s"$src/$sub", s"$dst/$sub"))
         lap("dir link")
@@ -1978,22 +1996,7 @@ object JsoniqRun {
             s"$pdir/_runs.json", runsJson)
         }
         lap("patch write")
-        graft.sources.MetaIO.copyFile(s"$src/_meta.json", s"$dst/_meta.json")
-        // the skeleton is UNCHANGED by member edits (the arrays stay
-        // elided slots; member content/count never shows in it) — the
-        // base's sidecar serves the new revision verbatim
-        if (graft.sources.MetaIO.exists(s"$src/_skeleton.json"))
-          graft.sources.MetaIO.copyFile(s"$src/_skeleton.json",
-            s"$dst/_skeleton.json")
-        graft.sources.MetaIO.writeStringOverwrite(
-          s"$dst/$ShredCompleteMarker", "{}")
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(
-            s"[graft] member-local shred sidecar failed for $path rev " +
-              s"$rev (docText reconstruction serves reads): ${e.getMessage}")
-          graft.sources.MetaIO.delete(shredDir(path, rev), recursive = true)
-          ()
+        copyShredMeta(src, dst)
       }
       true
     }
@@ -2017,79 +2020,18 @@ object JsoniqRun {
       * locates the shreddable child lists ([[XmlItem.xmlToJsonSpans]]),
       * so the store skips the candidate re-scan and the member split
       * the JSON path pays (the encoder already knows every member's
-      * span). Returns the encoded JSON so the caller can bind it as
-      * the query's context item. */
+      * span); the lists then take the JSON path's selection and commit.
+      * Returns the encoded JSON so the caller can bind it as the query's
+      * context item. */
     def storeXml(collection: String, doc: String, xml: String): String = {
       import spark.implicits._
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
       val (json, spans) = XmlItem.xmlToJsonSpans(xml, Store.ShredMinBytes)
       val path = docPath(collection, doc)
-      // same selection as shredCandidates: unique chains, top 12 by
-      // span (size + >=16-member rules were applied by the encoder)
-      val sel = spans.groupBy(_.steps).collect { case (_, Seq(one)) => one }
-        .toSeq.sortBy(s => s.start - s.end).take(12)
-      // the member tables don't depend on the revision NUMBER — only
-      // their final directory name does. Write them into a hidden temp
-      // dir CONCURRENTLY with the (single-task) doc-row commit, then
-      // rename into place; the completion marker still lands last, so
-      // the crash contract is unchanged (an orphaned .tmp dir is inert
-      // garbage, never served).
-      // stale-temp sweep, age-gated — the same discipline as store()
-      val shredRootX = s"$path/_shred"
-      val sweepBeforeX = System.currentTimeMillis() - 3600000L
-      graft.sources.MetaIO.listDirsAged(shredRootX).foreach { case (n, mt) =>
-        if (n.startsWith(".tmp-") && mt < sweepBeforeX)
-          graft.sources.MetaIO.delete(s"$shredRootX/$n", recursive = true)
-      }
-      val tmp = s"$shredRootX/.tmp-${java.util.UUID.randomUUID().toString}"
-      val memberJob: Option[Future[String]] =
-        if (sel.isEmpty) None
-        else Some(Future {
-          val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-          val metaArr = mapper.createArrayNode()
-          sel.zipWithIndex.foreach { case (span, k) =>
-            writeXmlMembers(s"$tmp/s$k",
-              Store.MemberSpans(json, span.members.toArray))
-            val e = metaArr.addObject()
-            e.put("dir", s"s$k")
-            e.put("kind", "xml")
-            val st = e.putArray("steps")
-            span.steps.foreach(st.add)
-          }
-          mapper.writeValueAsString(metaArr)
-        })
-      val rev =
-        try graft.sources.TemporalTable.write(Seq(json).toDF("doc_json"), path)
-        catch {
-          case e: Throwable =>
-            // bounded drain — same rationale as the JSON store path above
-            memberJob.foreach(f =>
-              scala.util.Try(Await.result(f, Duration(60, "s"))))
-            graft.sources.MetaIO.delete(tmp, recursive = true)
-            throw e
-        }
-      var tmpRenamedX = memberJob.isEmpty
-      try memberJob.foreach { f =>
-        val meta = Await.result(f, Duration.Inf)
-        val dst = shredDir(path, rev)
-        if (!graft.sources.MetaIO.rename(tmp, dst))
-          throw new java.io.IOException(s"rename $tmp -> $dst failed")
-        tmpRenamedX = true
-        graft.sources.MetaIO.writeStringOverwrite(s"$dst/_meta.json", meta)
-        graft.sources.MetaIO.writeStringOverwrite(
-          s"$dst/$ShredCompleteMarker", "{}")
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(
-            s"[graft] shred sidecar failed for $path rev $rev " +
-              s"(doc-row fallback serves reads): ${e.getMessage}")
-          graft.sources.MetaIO.delete(shredDir(path, rev), recursive = true)
-          ()
-      } finally {
-        if (!tmpRenamedX) graft.sources.MetaIO.delete(tmp, recursive = true)
-      }
+      val cands = Store.selectCandidates(spans.map(s =>
+        Store.ShredCandidate("xml", s.steps, s.start, s.end, s.count,
+          Some(s.members))))
+      commitShredded(path, json, Some(cands).filter(_.nonEmpty))(
+        graft.sources.TemporalTable.write(Seq(json).toDF("doc_json"), path))
       json
     }
   }
@@ -2198,18 +2140,19 @@ object JsoniqRun {
       * `steps` are the field names; empty = the root array) or "xml"
       * (an element's `~c` child list in the [[XmlItem]] encoding —
       * `steps` are the element names from the root element down).
-      * `[start, end)` is the array's character span in the source. */
+      * `[start, end)` is the array's character span in the source;
+      * `members`, when the scan that found the array already located
+      * them, its members' packed (start << 32 | end) spans in the
+      * source. */
     private[query] final case class ShredCandidate(
         kind: String, steps: List[String], start: Int, end: Int,
-        count: Int)
+        count: Int,
+        members: Option[scala.collection.IndexedSeq[Long]] = None)
 
     /** ONE driver-side streaming pass (no tree) over a stored document
-      * locating every shreddable array: the root array, large arrays of
-      * an object-rooted document, and large XML child lists. Selection:
-      * span >= ShredMinBytes and (root, or >= 16 members — a 6-element
-      * XML category list spanning the whole document distributes
-      * nothing); chains must be UNIQUE (two arrays at the same path are
-      * not addressable); top 12 by span. */
+      * locating every shreddable array — the root array, large arrays of
+      * an object-rooted document, and large XML child lists — then
+      * [[selectCandidates]]. */
     private[query] def shredCandidates(json: String): Seq[ShredCandidate] = {
       import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
       val parser = new JsonFactory().createParser(json)
@@ -2314,14 +2257,20 @@ object JsoniqRun {
             }
           case _ => None
         }
-      val sel = recs.iterator.flatMap(classify)
-        .filter(c => (c.end - c.start) >= ShredMinBytes &&
-          (c.count >= 16 || (c.kind == "json" && c.steps.isEmpty)))
-        .toSeq
-      sel.groupBy(c => (c.kind, c.steps)).collect {
-        case (_, Seq(one)) => one
-      }.toSeq.sortBy(c => c.start - c.end).take(12)
+      selectCandidates(recs.iterator.flatMap(classify).toSeq)
     }
+
+    /** The arrays a store shreds: span >= ShredMinBytes and (root, or
+      * >= 16 members — a 6-element XML category list spanning the whole
+      * document distributes nothing); chains must be UNIQUE (two arrays
+      * at the same path are not addressable); top 12 by span. */
+    private[query] def selectCandidates(
+        cands: Seq[ShredCandidate]): Seq[ShredCandidate] =
+      cands.filter(c => (c.end - c.start) >= ShredMinBytes &&
+          (c.count >= 16 || (c.kind == "json" && c.steps.isEmpty)))
+        .groupBy(c => (c.kind, c.steps)).collect {
+          case (_, Seq(one)) => one
+        }.toSeq.sortBy(c => c.start - c.end).take(12)
 
     /** Raw member texts of a top-level JSON array (depth/str-aware
       * scanner; no tree build). Nil when the input is not an array. */
