@@ -40,16 +40,19 @@ class CommitLogFailFs extends RawLocalFileSystem {
   * the doc row for their new revision), and per-revision time travel. */
 class ShredStoreSpec extends SparkSpec {
 
-  private def withShredded[A](body: JsoniqRun.Store => A): A = {
+  private def withShredMin[A](body: => A): A = {
     val prev = sys.props.get("graft.shred.min")
     sys.props("graft.shred.min") = "1"
-    try body(new JsoniqRun.Store(spark,
-      java.nio.file.Files.createTempDirectory("graft-shred-spec").toString))
+    try body
     finally prev match {
       case Some(v) => sys.props("graft.shred.min") = v
       case None => sys.props.remove("graft.shred.min"); ()
     }
   }
+
+  private def withShredded[A](body: JsoniqRun.Store => A): A =
+    withShredMin(body(new JsoniqRun.Store(spark,
+      java.nio.file.Files.createTempDirectory("graft-shred-spec").toString)))
 
   private val doc =
     (1 to 20).map(i => s"""{"v": $i, "w": ${i % 3}}""")
@@ -548,16 +551,6 @@ class ShredStoreSpec extends SparkSpec {
   }
 
   // ---- the commit's crash contract --------------------------------------
-
-  private def withShredMin[A](body: => A): A = {
-    val prev = sys.props.get("graft.shred.min")
-    sys.props("graft.shred.min") = "1"
-    try body
-    finally prev match {
-      case Some(v) => sys.props("graft.shred.min") = v
-      case None => sys.props.remove("graft.shred.min"); ()
-    }
-  }
 
   private val xmlDoc = "<site><people>" +
     (1 to 20).map(i =>
