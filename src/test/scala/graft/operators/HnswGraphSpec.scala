@@ -257,6 +257,33 @@ class HnswGraphSpec extends SparkSpec {
     assert(got == pinned, got.map { case (k, v) => s"$k -> $v" }.mkString("\n"))
   }
 
+  test("flat search reproduces the pinned NSW top-10 per query") {
+    val p = freshPath()
+    val (model, assigned) = IvfIndex.fit(emb, "embedding", nLists = 4)
+    NswGraph.writeGraphIndexed(assigned, model, "vec_id", "embedding", p, m = 8)
+    val queries = emb.filter($"vec_id" < 5L)
+      .selectExpr("vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS q")
+      .as[(Long, Seq[Double])].collect().sortBy(_._1)
+    val got = queries.map { case (qid, q) =>
+      qid -> NswGraph.searchGraph(spark, p, "vec_id", "embedding",
+          q.toArray, 10, nProbe = 4, ef = 48).as[(Long, Double)].collect().toSeq
+    }.toSeq
+    // taken from the flat tier's own search before it folded into this
+    // object: the flat layout must answer with the same ids and sims
+    val pinned = Seq(
+      0L -> Seq((0L, 1.0), (17L, 0.3345), (225L, 0.3151), (12L, 0.311), (483L, 0.3005),
+        (260L, 0.2987), (73L, 0.2972), (212L, 0.2814), (347L, 0.2745), (402L, 0.2745)),
+      1L -> Seq((1L, 1.0), (257L, 0.3918), (209L, 0.3815), (129L, 0.3515), (376L, 0.3048),
+        (440L, 0.2993), (75L, 0.29), (455L, 0.2824), (479L, 0.2689), (247L, 0.2615)),
+      2L -> Seq((2L, 1.0), (443L, 0.3576), (62L, 0.29), (246L, 0.2898), (185L, 0.2829),
+        (91L, 0.2789), (234L, 0.2777), (441L, 0.254), (309L, 0.2523), (183L, 0.2506)),
+      3L -> Seq((3L, 1.0), (223L, 0.3409), (205L, 0.3366), (84L, 0.3197), (212L, 0.3197),
+        (426L, 0.3151), (156L, 0.3111), (72L, 0.3089), (278L, 0.2694), (382L, 0.2673)),
+      4L -> Seq((4L, 1.0), (345L, 0.3749), (98L, 0.3398), (143L, 0.3297), (343L, 0.3124),
+        (57L, 0.2987), (357L, 0.2954), (62L, 0.2886), (229L, 0.2678), (472L, 0.2663)))
+    assert(got == pinned, got.mkString("\n"))
+  }
+
   test("search is deterministic run to run") {
     val p = freshPath()
     val (model, assigned) = IvfIndex.fit(emb, "embedding", nLists = 4)

@@ -421,6 +421,38 @@ class VectorIndexSpec extends SparkSpec {
     assert((lines.length, digest) == ((294, "b25aa8f4d8bd803c")), s"${lines.length} rows, digest $digest")
   }
 
+  /** A test resource directory tree, copied into a fresh temp dir. */
+  private def copyResourceTree(name: String): String = {
+    val src = java.nio.file.Paths.get(getClass.getResource(name).toURI)
+    val dst = Files.createTempDirectory("graft-vecidx-fixture").resolve("tbl")
+    val walk = Files.walk(src)
+    try walk.forEach(f => Files.copy(f, dst.resolve(src.relativize(f).toString)))
+    finally walk.close()
+    dst.toString
+  }
+
+  test("a flat layout on disk from before the graph-tier fold reads and maintains like a fresh one") {
+    // a table of ids 0-63 with its flat index "flat" (nLists = 4, m = 4),
+    // written by the code that kept the flat tier in an object of its own
+    val old = copyResourceTree("/vector-index/flat-nsw-table")
+    val now = Files.createTempDirectory("graft-vecidx-flat").resolve("tbl").toString
+    TemporalTable.write(rows(0L until 64L), now)
+    VectorIndex.create(spark, now, "flat", "node_key", "embedding", nLists = 4, m = 4)
+    def layouts = Seq(old, now).map(p => layoutLines(s"$p/_vecidx/flat"))
+    def searches(q: Array[Double]) = Seq(old, now).map(p =>
+      VectorIndex.search(spark, p, "flat", q, k = 5, nProbe = 1)
+        .as[(Long, Double)].collect().toSeq)
+    assert(layouts.distinct.size == 1, "a fresh create differs from the stored layout")
+    val before = searches(vec(1, 13L))
+    assert(before.distinct.size == 1 && before.head.head._1 == 13L, s"$before")
+    Seq(old, now).foreach(p =>
+      TemporalTable.write(rows((0L until 64L) ++ Seq(101L, 105L, 109L)), p))
+    assert(Seq(old, now).map(VectorIndex.maintain(spark, _, "flat")) == Seq(3L, 3L))
+    assert(layouts.distinct.size == 1, "maintain of the stored layout differs from a fresh one")
+    val after = searches(vec(1, 101L))
+    assert(after.distinct.size == 1 && after.head.head._1 == 101L, s"$after")
+  }
+
   test("commit hook wires maintenance into the write path") {
     val p = Files.createTempDirectory("graft-vecidx-hook").resolve("tbl").toString
     TemporalTable.write(rows(0L until 32L), p)
@@ -610,7 +642,11 @@ class VectorIndexSpec extends SparkSpec {
   test("maintain opens only the affected cells' files, in at most 6 jobs") {
     val (p, dir) = recordedTable("graft-vecidx-rec")
     TemporalTable.write(rows(0L until 64L), p)
-    Seq(("rn", 4, 0, 0), ("rh", 4, 0, 4), ("ri", 0, 0, 0), ("rq", 0, 2, 0)).foreach {
+    // every tier twice: the second copy is maintained with Spark's
+    // parallel partition discovery threshold below the layout's 4 cell
+    // directories, where a listing of the whole layout is a job of its own
+    val tiers = Seq(("rn", 4, 0, 0), ("rh", 4, 0, 4), ("ri", 0, 0, 0), ("rq", 0, 2, 0))
+    (tiers ++ tiers.map(t => t.copy(_1 = s"${t._1}-low"))).foreach {
       case (name, m, pqM, ml) =>
         VectorIndex.create(spark, p, name, "node_key", "embedding", nLists = 4,
           m = m, pqM = pqM, pqK = 8, hnswMl = ml)
@@ -618,7 +654,8 @@ class VectorIndexSpec extends SparkSpec {
     // two new vectors and a same-cell re-embed, all in cluster 1
     TemporalTable.merge(spark, p, rows(Seq(101L, 105L)).unionByName(
       Seq((9L, vec(1, 5000L).toSeq)).toDF("node_key", "embedding")), None)
-    Seq("rn", "rh", "ri", "rq").foreach { name =>
+    /** The jobs of one maintain, after checking what it read and wrote. */
+    def maintainJobs(name: String, graph: Boolean): Int = {
       val idxDir = s"$dir/_vecidx/$name"
       val model = IvfIndex.readModel(idxDir)
       val cell = s"ivf_cell=${IvfIndex.assignCells(rows(Seq(101L)), model, "embedding")
@@ -632,12 +669,22 @@ class VectorIndexSpec extends SparkSpec {
         .filter(_.startsWith(s"$idxDir/ivf_cell="))
         .map(_.stripPrefix(s"$idxDir/").takeWhile(_ != '/')).toSet
       assert(cellsOpened.subsetOf(Set(cell)), s"$name opened $cellsOpened, affected $cell")
-      if (name == "rn" || name == "rh") assert(cellsOpened == Set(cell), s"$name read no stored row")
+      if (graph) assert(cellsOpened == Set(cell), s"$name read no stored row")
       val after = cellBytes(idxDir)
       before.foreach { case (c, files) =>
         if (c != cell) assert(after(c) == files, s"$name: untouched $c changed")
       }
       assert(after(cell) != before(cell), s"$name: affected $cell unchanged")
+      jobs
+    }
+    val threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    tiers.foreach { case (name, m, _, _) =>
+      val jobs = maintainJobs(name, m > 0)
+      val saved = spark.conf.getOption(threshold)
+      spark.conf.set(threshold, "2")
+      val low = try maintainJobs(s"$name-low", m > 0)
+        finally saved.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
+      assert(low == jobs, s"$name: $low jobs with the threshold at 2, $jobs at the default")
     }
   }
 
