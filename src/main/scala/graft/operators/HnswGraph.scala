@@ -1,26 +1,33 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.collection.mutable
 
-/** Hierarchical NSW — the reference's layered vector graph
+/** Per-cell graph ANN — the reference's layered vector graph
   * (bundles/sirix-core/src/main/java/io/sirix/index/vector/hnsw/
-  * HnswGraph.java:24) on the [[IvfIndex]] clustered layout, completing
-  * the tier above [[NswGraph]]'s flat hub-seeded graph.
+  * HnswGraph.java:24, VectorIndexBuilder.java:52) on the [[IvfIndex]]
+  * clustered layout. One build kernel and one search serve both graph
+  * tiers: the layered one (level ratio `mL` ≥ 2) and the flat one
+  * (`mL` = 0, every node on level 0 — a navigable small world).
   *
   * What the hierarchy buys: entry-point selection in O(m·log n) distance
-  * evaluations. The flat graph spends √n hub evaluations to find a good
-  * starting basin; at very large per-cell populations (10⁶+ vectors) the
-  * layered descent reaches the right basin in ~log_{mL}(n) greedy hops of
-  * m evaluations each — the reference's upper-layer routing, re-expressed
-  * on the same storage discipline:
+  * evaluations. A flat cell spends √n hub evaluations instead — a
+  * deterministic hash-sample of the cell, all evaluated, seeds the beam,
+  * so search starts from the best of √n spread-out basins, not one
+  * arbitrary node that may be cut off from the query's component. At
+  * very large per-cell populations (10⁶+ vectors) the layered descent
+  * reaches the right basin in ~log_{mL}(n) greedy hops of m evaluations
+  * each — the reference's upper-layer routing, re-expressed on the same
+  * storage discipline. Either way, probed-cell I/O is the same; the graph
+  * trades distance evaluations, O(ef·m·depth) instead of O(|cell|):
   *
   *  - '''levels''' are a pure function of the id (geometric with ratio
   *    1/mL via splitmix64 — deterministic across JVMs and rebuilds, no
   *    stored RNG state; HNSW's `floor(-ln(U)·mL')` with U derived from
-  *    the id hash). Level ℓ holds ~n/mL^ℓ nodes.
+  *    the id hash). Level ℓ holds ~n/mL^ℓ nodes; at `mL` = 0 every level
+  *    is 0.
   *  - '''build''' (one shuffle on the cell id): within each cell, nodes
   *    are INSERTED in id order, each finding its per-layer neighbours by
   *    searching the partially built graph — greedy descent from the
@@ -34,18 +41,22 @@ import scala.collection.mutable
   *    O(n²), which at the 10⁶-vector cells the hierarchy targets meant
   *    ~10¹² evaluations; insertion reaches that regime. Deterministic:
   *    id-order insertion, id tie-breaks everywhere, no RNG. The
-  *    per-layer adjacency is stored as an `hnsw_layers:
-  *    array<array<long>>` column in the clustered table — the graph
-  *    ships with the data, partition pruning applies to both.
+  *    adjacency is a column of the clustered table — `hnsw_level` plus
+  *    the per-layer `hnsw_layers: array<array<long>>`, or layer 0 alone
+  *    as `nsw_neighbors: array<long>` on a flat graph — so the graph
+  *    ships with the data and partition pruning applies to both.
   *  - '''search''': probe `nProbe` cells (hive-partition pruning), per
   *    cell descend: start at the cell's top node (max level, ties to the
   *    lowest id — deterministic), greedy step through layers L..1 (move
   *    to the best improving neighbour until none), then a beam of width
-  *    `ef` on layer 0 seeded from where the descent landed. Global top-k
-  *    of the per-cell beams.
+  *    `ef` on layer 0 seeded from where the descent landed, or from the
+  *    hub sample in a cell with no node above level 0. Global top-k of
+  *    the per-cell beams.
   *
-  * The same memory contract as the flat graph: one cell materialized per
-  * grouped iterator; size cells via `nLists` so a cell fits an executor.
+  * Memory contract: search shuffles only the probed cells, and each
+  * grouped iterator materializes one cell at a time, even when several
+  * cells hash to the same task — size cells via `nLists` so a cell fits
+  * an executor (the contract HNSW has with RAM).
   */
 object HnswGraph {
 
@@ -53,11 +64,29 @@ object HnswGraph {
     * nodes per cell, far past the one-cell-fits-an-executor contract. */
   private val MaxLevel = 8
 
+  /** Cosine of vectors a and b over their common prefix; 0 when either
+    * norm is 0. */
+  private[operators] def cosine(a: Array[Double], b: Array[Double]): Double = {
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    val n = math.min(a.length, b.length)
+    while (i < n) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
+    if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+
+  /** Mix hash for the level assignment and the hub sample —
+    * full-avalanche, JVM-independent. */
+  private[operators] def splitmix64(x0: Long): Long = {
+    var x = x0 + 0x9E3779B97F4A7C15L
+    x = (x ^ (x >>> 30)) * 0xBF58476D1CE4E5B9L
+    x = (x ^ (x >>> 27)) * 0x94D049BB133111EBL
+    x ^ (x >>> 31)
+  }
+
   /** Deterministic geometric level of a node id: P(level ≥ l) = mL^-l.
     * Uses the top 53 hash bits as a uniform in (0,1] — id-stable, so an
     * incremental rebuild assigns every surviving node its old level. */
   private[graft] def levelOf(id: Long, mL: Int): Int = {
-    val u = ((NswGraph.splitmix64(id) >>> 11) + 1).toDouble / (1L << 53).toDouble
+    val u = ((splitmix64(id) >>> 11) + 1).toDouble / (1L << 53).toDouble
     math.min(MaxLevel, (-math.log(u) / math.log(mL.toDouble)).toInt)
   }
 
@@ -66,18 +95,22 @@ object HnswGraph {
   final case class HnswRow(id: Long, vec: Array[Double], cell: Int,
                            level: Int, layers: Array[Array[Long]])
 
-  /** Per-cell layered adjacency: one shuffle, search-based incremental
-    * insertion within each cell (see object scaladoc — ~O(n·ef·log n)
-    * distance evaluations, deterministic). Output layout = the clustered
-    * table + (`hnsw_level`, `hnsw_layers`). */
+  /** Per-cell adjacency: one shuffle, search-based incremental insertion
+    * within each cell (see object scaladoc — ~O(n·ef·log n) distance
+    * evaluations, deterministic); `mL` = 0 builds the flat graph. Output
+    * is [[layout]]'s. */
   def buildGraph(assigned: DataFrame, idCol: String, vecCol: String,
                  m: Int, mL: Int = 16, efConstruction: Int = 64): DataFrame = {
-    require(m >= 1 && mL >= 2, s"need m >= 1, mL >= 2; got m=$m mL=$mL")
+    require(m >= 1 && (mL == 0 || mL >= 2),
+      s"need m >= 1 and mL = 0 or >= 2; got m=$m mL=$mL")
     require(efConstruction >= m,
       s"efConstruction ($efConstruction) must be >= m ($m)")
     val spark = assigned.sparkSession
     import spark.implicits._
-    assigned.select(
+    // flatMapGroups (not repartition+mapPartitions): hash partitioning
+    // routinely co-locates several cells in one task, and the grouped
+    // iterator materializes one cell at a time (the memory contract)
+    layout(assigned.select(
         col(idCol).cast("long").as("id"),
         expr(s"transform($vecCol, x -> CAST(x AS DOUBLE))").as("vec"),
         col("ivf_cell").cast("int").as("cell")).as[VecRow]
@@ -85,17 +118,31 @@ object HnswGraph {
       .flatMapGroups { (cell, rows) =>
         val arr = rows.toArray.sortBy(_.id)
         cellRows(arr.map(_.id), arr.map(_.vec), cell, m, mL, efConstruction)
-      }
-      .toDF(idCol, vecCol, "ivf_cell", "hnsw_level", "hnsw_layers")
+      }, idCol, vecCol, mL)
   }
 
-  /** One cell's layered graph rows, the per-cell kernel of [[buildGraph]]
-    * (also run by [[graft.sources.VectorIndex]]'s maintenance):
-    * `ids`/`vecs` in insertion order — id order, as the callers sort
-    * them — each with its level and per-layer neighbour ids. */
+  /** Graph rows as the persisted columns: the caller's `idCol`/`vecCol`
+    * (id long, vector array<double>) and `ivf_cell`, then layer 0 as
+    * `nsw_neighbors` on a flat graph (`mL` = 0), else `hnsw_level` and
+    * `hnsw_layers` — either way interchangeable with a plain
+    * [[IvfIndex.writeClustered]] layout. */
+  private[graft] def layout(rows: Dataset[HnswRow], idCol: String, vecCol: String,
+                            mL: Int): DataFrame = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    if (mL == 0)
+      rows.map(r => (r.id, r.vec, r.cell, r.layers(0)))
+        .toDF(idCol, vecCol, "ivf_cell", "nsw_neighbors")
+    else rows.toDF(idCol, vecCol, "ivf_cell", "hnsw_level", "hnsw_layers")
+  }
+
+  /** One cell's graph rows, the per-cell kernel of [[buildGraph]] (also
+    * run by [[graft.sources.VectorIndex]]'s maintenance): `ids`/`vecs` in
+    * insertion order — id order, as the callers sort them — each with its
+    * level (0 throughout when `mL` = 0) and per-layer neighbour ids. */
   private[graft] def cellRows(ids: Array[Long], vecs: Array[Array[Double]], cell: Int,
                               m: Int, mL: Int, efConstruction: Int = 64): Iterator[HnswRow] = {
-    val levels = ids.map(levelOf(_, mL))
+    val levels = if (mL == 0) Array.fill(ids.length)(0) else ids.map(levelOf(_, mL))
     val (adj, _) = insertBuild(vecs, levels, m, efConstruction)
     ids.indices.iterator.map(i =>
       HnswRow(ids(i), vecs(i), cell, levels(i), adj(i).map(_.map(j => ids(j)))))
@@ -110,9 +157,9 @@ object HnswGraph {
     * diversity pick of the beam, and back-links bidirectionally with
     * cap-triggered re-pruning (cap `2m` on layer 0, `m` above — the
     * reference's mMax0/mMax split). Returns (per-node per-layer neighbour
-    * INDICES, ascending; total distance evaluations — the build-cost
-    * meter ProfileAnn growth-checks). Deterministic: no RNG, ties break
-    * on the lower index everywhere.
+    * INDICES, ascending; total distance evaluations, the build-cost
+    * meter). Deterministic: no RNG, ties break on the lower index
+    * everywhere.
     *
     * Primitive state throughout — the per-cell build is the hot loop of
     * every graph create and maintain: adjacency lives in fixed-capacity
@@ -121,7 +168,7 @@ object HnswGraph {
     * arrays ordered by (sim desc, index asc) under
     * `java.lang.Double.compare`, the visited set is an epoch-stamped int
     * array, and each vector's norm is computed once (pairs of unequal
-    * length fall back to [[NswGraph.cosine]] over their common prefix). */
+    * length fall back to [[cosine]] over their common prefix). */
   private[graft] def insertBuild(
       vecs: Array[Array[Double]], levels: Array[Int],
       m: Int, efConstruction: Int): (Array[Array[Array[Int]]], Long) = {
@@ -207,11 +254,11 @@ object HnswGraph {
     }
     private val sqrtNorm: Array[Double] = norm.map(math.sqrt)
 
-    /** [[NswGraph.cosine]] of vectors a and b, bit for bit. */
+    /** [[cosine]] of vectors a and b, bit for bit. */
     private def sim(a: Int, b: Int): Double = {
       evals += 1
       val va = vecs(a); val vb = vecs(b)
-      if (va.length != vb.length) NswGraph.cosine(va, vb)
+      if (va.length != vb.length) cosine(va, vb)
       else {
         var dot = 0.0; var k = 0
         while (k < va.length) { dot += va(k) * vb(k); k += 1 }
@@ -400,7 +447,8 @@ object HnswGraph {
   }
 
   /** Build over an [[IvfIndex.fit]] output and persist clustered by cell
-    * (centroid sidecar alongside — [[IvfIndex.writeClustered]]'s layout). */
+    * (centroid sidecar alongside — [[IvfIndex.writeClustered]]'s layout
+    * plus the adjacency columns). */
   def writeGraphIndexed(assigned: DataFrame, model: IvfIndex.Model,
                         idCol: String, vecCol: String, path: String,
                         m: Int = 8, mL: Int = 16,
@@ -409,17 +457,25 @@ object HnswGraph {
       buildGraph(assigned, idCol, vecCol, m, mL, efConstruction),
       model, path)
 
-  /** ANN top-k through the layered descent (see object scaladoc). */
+  /** ANN top-k: prune to the probed cells, co-locate each cell's graph,
+    * descend per cell (see object scaladoc), global top-k of the per-cell
+    * beams. `idCol`/`vecCol` are the names the graph was BUILT with (the
+    * same names [[IvfIndex.searchClustered]] takes on the same table);
+    * the layout's own columns tell a flat graph from a layered one. */
   def searchGraph(spark: SparkSession, path: String, idCol: String,
                   vecCol: String, query: Array[Double],
                   k: Int, nProbe: Int, ef: Int = 32): DataFrame = {
     import spark.implicits._
     val model = IvfIndex.readModel(path)
     val probes = model.nearestCentroids(query, nProbe)
-    val hits = graft.plans.FooterSchemas.readParquet(spark, path)
+    val stored = graft.plans.FooterSchemas.readParquet(spark, path)
+    val (level, layers) =
+      if (stored.columns.contains("nsw_neighbors")) (lit(0), array(col("nsw_neighbors")))
+      else (col("hnsw_level"), col("hnsw_layers"))
+    val hits = stored
       .filter(col("ivf_cell").isin(probes: _*))
       .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"),
-        col("ivf_cell").cast("int"), col("hnsw_level"), col("hnsw_layers"))
+        col("ivf_cell").cast("int"), level, layers)
       .as[(Long, Array[Double], Int, Int, Array[Array[Long]])]
       .groupByKey(_._3)
       .flatMapGroups { (_, rows) =>
@@ -435,17 +491,17 @@ object HnswGraph {
   private[operators] final case class Hit(id: Long, sim: Double)
 
   /** One cell: top-entry greedy descent through the upper layers, then an
-    * ef-beam on layer 0. A cell too small to have minted any upper-layer
-    * node (every level 0) has no routing hierarchy — there the beam
-    * seeds from the √n hub sample instead ([[NswGraph]]'s
-    * disconnected-basin guard; a single arbitrary entry could be cut off
-    * from the query's component of the kNN graph). Deterministic (ties
-    * on id everywhere). */
+    * ef-beam on layer 0 (≤ ef hits, sim-descending). A cell with no node
+    * above level 0 — a flat graph, or a cell too small to have minted an
+    * upper-layer node — has no routing hierarchy: there the beam seeds
+    * from the √n hub sample instead (the disconnected-basin guard; a
+    * single arbitrary entry could be cut off from the query's component
+    * of the kNN graph). Deterministic (ties on id everywhere). */
   private[operators] def descendSearch(
       graph: Map[Long, (Array[Double], Int, Array[Array[Long]])],
       query: Array[Double], ef: Int): Iterator[Hit] = {
     if (graph.isEmpty) return Iterator.empty
-    def sim(id: Long): Double = NswGraph.cosine(graph(id)._1, query)
+    def sim(id: Long): Double = cosine(graph(id)._1, query)
     // entry: the cell's top node — max level, ties to lowest id
     var cur = graph.keysIterator.maxBy(id => (graph(id)._2, -id))
     var curSim = sim(cur)
@@ -453,7 +509,7 @@ object HnswGraph {
     if (topLevel == 0) {
       val ids = graph.keysIterator.toArray
       val nHubs = math.max(1, math.ceil(math.sqrt(ids.length.toDouble)).toInt)
-      val hubs = ids.sortBy(id => (NswGraph.splitmix64(id), id)).take(nHubs)
+      val hubs = ids.sortBy(id => (splitmix64(id), id)).take(nHubs)
       return beamFrom(graph, hubs.map(h => Hit(h, sim(h))), query, ef)
     }
     // greedy descent: layers top..1, move while an improving neighbour exists
@@ -481,7 +537,7 @@ object HnswGraph {
   private def beamFrom(
       graph: Map[Long, (Array[Double], Int, Array[Array[Long]])],
       seeds: Array[Hit], query: Array[Double], ef: Int): Iterator[Hit] = {
-    def sim(id: Long): Double = NswGraph.cosine(graph(id)._1, query)
+    def sim(id: Long): Double = cosine(graph(id)._1, query)
     implicit val hitOrd: Ordering[Hit] =
       Ordering.by[Hit, (Double, Long)](h => (-h.sim, h.id))
     val candidates = mutable.PriorityQueue.empty[Hit](hitOrd.reverse)

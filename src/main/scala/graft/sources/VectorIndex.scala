@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.operators.{HnswGraph, IvfIndex, NswGraph, Pq}
+import graft.operators.{HnswGraph, IvfIndex, Pq}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,12 +13,12 @@ import org.apache.spark.sql.functions._
   * {{{
   * table/_vectoridx/<name>.json     // {"name","idCol","vecCol","nLists","m"}
   * table/_vecidx/<name>/            // IvfIndex.writeClustered layout
-  *                                  //   (+ nsw_neighbors column when m > 0)
+  *                                  //   (+ HnswGraph adjacency when m > 0)
   * table/_vecidx/<name>/_ivf/indexed_upto.txt   // maintenance watermark
   * }}}
   *
   * CREATE fits the coarse quantizer over the current latest revision and
-  * persists the cell-clustered layout (with the per-cell NSW adjacency
+  * persists the cell-clustered layout (with the per-cell graph adjacency
   * when `m` > 0). MAINTAIN (the commit-hook body) brings the index to the
   * newest committed revision WITHOUT a rebuild, in one planned pass that
   * reads and rewrites only the cells the increment reaches, for every
@@ -56,8 +56,9 @@ import org.apache.spark.sql.functions._
   * The returned count is exact: the vectors newly indexed after the
   * guard.
   *
-  * Search stays [[IvfIndex.searchClustered]] / [[NswGraph.searchGraph]]
-  * over the index path — they see maintained vectors with no API change.
+  * Search stays [[IvfIndex.searchClustered]] / [[HnswGraph.searchGraph]]
+  * / [[Pq.searchClusteredPq]] over the index path — they see maintained
+  * vectors with no API change.
   *
   * Append-only contract (documented, like the reference's lazy deletes —
   * its vector index tombstones in place, index/vector/VectorIndex.java):
@@ -78,9 +79,9 @@ import org.apache.spark.sql.functions._
   */
 object VectorIndex {
 
-  /** `m` > 0 → per-cell graph adjacency (flat NSW, or the hierarchical
-    * HNSW tier when `hnswMl` > 0 — [[graft.operators.HnswGraph]]'s
-    * layered layout with level ratio `hnswMl`); `pqM` > 0 → PQ codes
+  /** `m` > 0 → per-cell [[HnswGraph]] adjacency with level ratio
+    * `hnswMl` (0: the flat graph, every node on level 0; ≥ 2: the
+    * layered one); `pqM` > 0 → PQ codes
     * ride in the layout (the byte-budget tier: ADC ranking reads codes
     * only, exact re-rank reads `refine·k` vectors). Graph and PQ tiers
     * are exclusive. */
@@ -144,34 +145,26 @@ object VectorIndex {
       .select(col(spec.idCol).cast("long").as(spec.idCol),
         expr(s"transform(${spec.vecCol}, x -> CAST(x AS DOUBLE))").as(spec.vecCol))
 
-  /** The spec's graph build: flat NSW, or the layered HNSW adjacency. */
+  /** The spec's graph build. */
   private def graphOf(assigned: DataFrame, spec: Spec): DataFrame =
-    if (spec.hnswMl > 0)
-      HnswGraph.buildGraph(assigned, spec.idCol, spec.vecCol, spec.m, spec.hnswMl)
-    else NswGraph.buildGraph(assigned, spec.idCol, spec.vecCol, spec.m)
+    HnswGraph.buildGraph(assigned, spec.idCol, spec.vecCol, spec.m, spec.hnswMl)
 
   /** [[graphOf]] over cells already grouped: each an id-sorted array of
-    * one cell's rows, through the same per-cell kernel as the build
-    * ([[NswGraph.cellRows]] / [[HnswGraph.cellRows]]), with the same
+    * one cell's rows, through the build's per-cell kernel, with the same
     * output columns. */
   private def graphOfCells(spark: SparkSession,
                            cells: org.apache.spark.rdd.RDD[Array[CellRow]],
                            spec: Spec): DataFrame = {
     import spark.implicits._
     val (m, mL) = (spec.m, spec.hnswMl)
-    if (mL > 0)
-      spark.createDataset(cells.flatMap(c =>
-          HnswGraph.cellRows(c.map(_._1), c.map(_._2), c.head._3, m, mL)))
-        .toDF(spec.idCol, spec.vecCol, "ivf_cell", "hnsw_level", "hnsw_layers")
-    else
-      spark.createDataset(cells.flatMap(c =>
-          NswGraph.cellRows(c.map(_._1), c.map(_._2), c.head._3, m)))
-        .toDF(spec.idCol, spec.vecCol, "ivf_cell", "nsw_neighbors")
+    HnswGraph.layout(spark.createDataset(cells.flatMap(c =>
+      HnswGraph.cellRows(c.map(_._1), c.map(_._2), c.head._3, m, mL))),
+      spec.idCol, spec.vecCol, mL)
   }
 
   /** Declare + build the index over the table's current latest revision.
     * `m` = 0 → plain IVF layout; `m` > 0 → per-cell graph adjacency rides
-    * along (NSW, or HNSW when `hnswMl` > 0). */
+    * along (flat, or layered when `hnswMl` > 0). */
   def create(spark: SparkSession, tablePath: String, name: String,
              idCol: String, vecCol: String, nLists: Int, m: Int = 0,
              seed: Long = 42L, fitFraction: Double = 1.0,
@@ -341,9 +334,11 @@ object VectorIndex {
   }
 
   /** [[maintain]]'s per-cell step over the affected cells (steps 3–4 of
-    * the object scaladoc). Only those cells' files are opened: the layout
-    * is read with the schema of one of their footers and pruned to their
-    * `ivf_cell=` partitions. The graph tiers take each cell's stored rows
+    * the object scaladoc). Only those cells' directories are listed and
+    * their files opened, with the schema of one of their footers: listing
+    * the layout's root would list every cell, and above
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` directories
+    * Spark lists them in a job of its own. The graph tiers take each cell's stored rows
     * whole; plain IVF and IVF-PQ take only the stored rows with a
     * candidate's id (a broadcast semi-join), the only ones the guard can
     * match. A [[CellPartitioner]] gives each affected cell a task of its
@@ -358,14 +353,16 @@ object VectorIndex {
     import spark.implicits._
     val fresh = candidates
       .select(col(spec.idCol), col(spec.vecCol), col("ivf_cell"), lit(true))
-    val probe = affected.iterator.flatMap(c =>
-      MetaIO.listFiles(s"$path/ivf_cell=$c").collectFirst {
-        case (n, _) if n.endsWith(".parquet") => s"$path/ivf_cell=$c/$n"
-      }).nextOption()
-    val rows = probe.fold(fresh) { file =>
+    // (directory, one of its data files) of every affected cell that has any
+    val storedCells = affected.toSeq.flatMap { c =>
+      val dir = s"$path/ivf_cell=$c"
+      MetaIO.listFiles(dir).collectFirst {
+        case (n, _) if n.endsWith(".parquet") => (dir, s"$dir/$n")
+      }
+    }
+    val rows = storedCells.headOption.fold(fresh) { case (_, file) =>
       val stored = spark.read.schema(graft.plans.FooterSchemas.readParquet(spark, file).schema)
-        .parquet(path)
-        .filter(col("ivf_cell").isin(affected.toSeq: _*))
+        .option("basePath", path).parquet(storedCells.map(_._1): _*)
         .select(col(spec.idCol), col(spec.vecCol), col("ivf_cell").cast("int"), lit(false))
       (if (spec.m > 0) stored
        else stored.join(broadcast(candidates.select(spec.idCol)), Seq(spec.idCol), "left_semi"))
@@ -391,9 +388,10 @@ object VectorIndex {
   }
 
   /** Top-k search over a maintained index. `exact = false` searches the
-    * raw layout ([[IvfIndex.searchClustered]] / [[NswGraph.searchGraph]]
-    * — may surface ghosts of deleted rows and stale embeddings, per the
-    * append-only contract). `exact = true` closes that gap at query time:
+    * raw layout ([[IvfIndex.searchClustered]] / [[HnswGraph.searchGraph]]
+    * / [[Pq.searchClusteredPq]] — may surface ghosts of deleted rows and
+    * stale embeddings, per the append-only contract). `exact = true`
+    * closes that gap at query time:
     *
     *  1. the approximate probe OVERFETCHES `overfetch × k` candidate ids
     *     from the layout (ghosts consume candidate slots; the slack keeps
@@ -423,11 +421,8 @@ object VectorIndex {
       // the beam must be at least as wide as the ask: the default ef=32
       // would silently truncate an exact-search overfetch (k·overfetch
       // candidates) — or a large plain k — to 32 hits per cell
-      if (spec.m > 0 && spec.hnswMl > 0)
-        graft.operators.HnswGraph.searchGraph(spark, path, spec.idCol,
-          spec.vecCol, query, kk, nProbe, ef = math.max(32, kk))
-      else if (spec.m > 0)
-        NswGraph.searchGraph(spark, path, spec.idCol, spec.vecCol, query, kk,
+      if (spec.m > 0)
+        HnswGraph.searchGraph(spark, path, spec.idCol, spec.vecCol, query, kk,
           nProbe, ef = math.max(32, kk))
       else if (spec.pqM > 0)
         Pq.searchClusteredPq(spark, path, spec.idCol, spec.vecCol, query, kk, nProbe)
@@ -473,7 +468,7 @@ object VectorIndex {
     * the layout before its stale copy drops), then ONLY the cells that
     * actually contain ghosts are rewritten (dynamic partition overwrite;
     * clean cells' files stay byte-identical — same discipline as
-    * maintenance). NSW cells re-derive their in-cell adjacency over the
+    * maintenance). Graph cells re-derive their in-cell adjacency over the
     * survivors; cells left empty have their directories removed. Returns
     * the number of rows purged. */
   def purge(spark: SparkSession, tablePath: String, name: String): Long = {
@@ -515,8 +510,8 @@ object VectorIndex {
         // re-encoding beats trusting possibly-hand-edited code columns)
         else if (spec.pqM > 0) Pq.encode(survivors, spec.vecCol, Pq.readModel(path))
         else survivors
-      // read + overwrite of the same path: cut lineage first (see
-      // patchGraphCells) so a recomputed block can't re-scan replaced files
+      // read + overwrite of the same path: cut lineage first so a
+      // recomputed block can't re-scan replaced files
       val checkpointed = out.localCheckpoint(true)
       // dynamic overwrite only touches partitions PRESENT in the output —
       // a cell whose every row was a ghost writes nothing, so its

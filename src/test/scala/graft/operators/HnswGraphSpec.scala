@@ -58,32 +58,37 @@ class HnswGraphSpec extends SparkSpec {
   }
 
   test("search finds the query's own vector and has high recall vs brute force") {
-    val p = freshPath()
     val (model, assigned) = IvfIndex.fit(emb, "embedding", nLists = 4)
-    HnswGraph.writeGraphIndexed(assigned, model, "vec_id", "embedding", p,
-      m = 8, mL = 4)
-    // the layout stays interchangeable with plain IVF search
     val q0 = emb.filter($"vec_id" === 3L)
       .selectExpr("transform(embedding, x -> CAST(x AS DOUBLE)) AS q")
       .as[Seq[Double]].head().toArray
-    assert(IvfIndex.searchClustered(spark, p, "vec_id", "embedding",
-      q0, 5, nProbe = 4).count() == 5)
     val queries = emb.filter($"vec_id" < 5L)
       .selectExpr("vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS q")
       .as[(Long, Seq[Double])].collect()
-    val recalls = queries.map { case (qid, q) =>
-      val approx = HnswGraph.searchGraph(spark, p, "vec_id", "embedding",
-          q.toArray, 10, nProbe = 4, ef = 48)
-        .as[(Long, Double)].collect()
-      assert(approx.head._1 == qid && approx.head._2 == 1.0,
-        s"query $qid did not find itself: ${approx.take(3).toSeq}")
-      val truth = Similarity.cosineTopK(emb, "vec_id", "embedding",
-        spark.range(1).select(lit(q.toArray).as("qvec")), 10)
-        .as[(Long, Double)].collect().map(_._1).toSet
-      (approx.map(_._1).toSet intersect truth).size.toDouble / truth.size
+      .map { case (qid, q) =>
+        (qid, q.toArray, Similarity.cosineTopK(emb, "vec_id", "embedding",
+          spark.range(1).select(lit(q.toArray).as("qvec")), 10)
+          .as[(Long, Double)].collect().map(_._1).toSet)
+      }
+    // the layered graph and the flat one
+    Seq(4, 0).foreach { mL =>
+      val p = freshPath()
+      HnswGraph.writeGraphIndexed(assigned, model, "vec_id", "embedding", p,
+        m = 8, mL = mL)
+      // the layout stays interchangeable with plain IVF search
+      assert(IvfIndex.searchClustered(spark, p, "vec_id", "embedding",
+        q0, 5, nProbe = 4).count() == 5)
+      val recalls = queries.map { case (qid, q, truth) =>
+        val approx = HnswGraph.searchGraph(spark, p, "vec_id", "embedding",
+            q, 10, nProbe = 4, ef = 48)
+          .as[(Long, Double)].collect()
+        assert(approx.head._1 == qid && approx.head._2 == 1.0,
+          s"mL=$mL: query $qid did not find itself: ${approx.take(3).toSeq}")
+        (approx.map(_._1).toSet intersect truth).size.toDouble / truth.size
+      }
+      val mean = recalls.sum / recalls.length
+      assert(mean >= 0.85, s"mL=$mL: mean recall@10 too low: $mean")
     }
-    val mean = recalls.sum / recalls.length
-    assert(mean >= 0.85, s"mean recall@10 too low: $mean")
   }
 
   test("upper-layer descent reaches a basin far from the entry's start") {
@@ -260,12 +265,13 @@ class HnswGraphSpec extends SparkSpec {
   test("flat search reproduces the pinned NSW top-10 per query") {
     val p = freshPath()
     val (model, assigned) = IvfIndex.fit(emb, "embedding", nLists = 4)
-    NswGraph.writeGraphIndexed(assigned, model, "vec_id", "embedding", p, m = 8)
+    HnswGraph.writeGraphIndexed(assigned, model, "vec_id", "embedding", p,
+      m = 8, mL = 0)
     val queries = emb.filter($"vec_id" < 5L)
       .selectExpr("vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS q")
       .as[(Long, Seq[Double])].collect().sortBy(_._1)
     val got = queries.map { case (qid, q) =>
-      qid -> NswGraph.searchGraph(spark, p, "vec_id", "embedding",
+      qid -> HnswGraph.searchGraph(spark, p, "vec_id", "embedding",
           q.toArray, 10, nProbe = 4, ef = 48).as[(Long, Double)].collect().toSeq
     }.toSeq
     // taken from the flat tier's own search before it folded into this
@@ -285,17 +291,35 @@ class HnswGraphSpec extends SparkSpec {
   }
 
   test("search is deterministic run to run") {
-    val p = freshPath()
     val (model, assigned) = IvfIndex.fit(emb, "embedding", nLists = 4)
-    HnswGraph.writeGraphIndexed(assigned, model, "vec_id", "embedding", p,
-      m = 8, mL = 4)
     val q = emb.filter($"vec_id" === 7L)
       .selectExpr("transform(embedding, x -> CAST(x AS DOUBLE)) AS q")
       .as[Seq[Double]].head().toArray
-    val r1 = HnswGraph.searchGraph(spark, p, "vec_id", "embedding", q, 10, 4)
-      .as[(Long, Double)].collect().toSeq
-    val r2 = HnswGraph.searchGraph(spark, p, "vec_id", "embedding", q, 10, 4)
-      .as[(Long, Double)].collect().toSeq
-    assert(r1 == r2 && r1.size == 10)
+    // the layered graph and the flat one
+    Seq(4, 0).foreach { mL =>
+      val p = freshPath()
+      HnswGraph.writeGraphIndexed(assigned, model, "vec_id", "embedding", p,
+        m = 8, mL = mL)
+      def run() = HnswGraph.searchGraph(spark, p, "vec_id", "embedding", q, 10, 4)
+        .as[(Long, Double)].collect().toSeq
+      val r1 = run()
+      assert(r1 == run() && r1.size == 10, s"mL=$mL: $r1")
+    }
+    // one flat cell's beam: deterministic, at most ef hits, best first
+    val rnd = new scala.util.Random(7)
+    val vecs = (0L until 50L).map(i => i -> Array.fill(8)(rnd.nextDouble() - 0.5)).toMap
+    val graph = vecs.map { case (id, v) =>
+      val nn = vecs.keys.filter(_ != id).toSeq
+        .sortBy(o => -vecs(o).zip(v).map { case (x, y) => x * y }.sum).take(6)
+      id -> (v, 0, Array(nn.toArray))
+    }
+    val qf = Array.fill(8)(0.1)
+    val b1 = HnswGraph.descendSearch(graph, qf, ef = 10).toSeq
+    assert(b1 == HnswGraph.descendSearch(graph, qf, ef = 10).toSeq)
+    assert(b1.nonEmpty && b1.size <= 10, s"${b1.size} hits at ef = 10")
+    assert(b1.sliding(2).forall {
+      case Seq(a, b) => a.sim >= b.sim
+      case _ => true
+    }, s"sims increase: $b1")
   }
 }

@@ -2,6 +2,9 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.Tables
+import org.apache.spark.sql.functions._
+
+import java.nio.file.Files
 
 class IvfIndexSpec extends SparkSpec {
   import spark.implicits._
@@ -32,6 +35,31 @@ class IvfIndexSpec extends SparkSpec {
       fitFraction = 1e-9)
     assert(tiny.centroids.length == 4)
     assert(tinyAssigned.count() == emb.count())
+  }
+
+  test("writeClustered persists centroids; cell IN-list prunes the file listing") {
+    val p = Files.createTempDirectory("graft-ivf").resolve("idx").toString
+    val (model, assigned) = IvfIndex.fit(emb, "embedding", nLists = 8)
+    IvfIndex.writeClustered(assigned, model, p)
+    val restored = IvfIndex.readModel(p)
+    assert(restored.centroids.length == 8)
+    assert(restored.centroids.map(_.toSeq) sameElements model.centroids.map(_.toSeq))
+    // a 2-cell probe must touch a strict subset of the data files
+    val all = spark.read.parquet(p)
+    val totalFiles = all.select(input_file_name()).distinct().count()
+    val prunedFiles = all.filter($"ivf_cell".isin(0, 1))
+      .select(input_file_name()).distinct().count()
+    assert(prunedFiles < totalFiles,
+      s"probe read $prunedFiles of $totalFiles files — partition pruning is not firing")
+    // searchClustered over the persisted layout = search over the frame
+    val query = emb.filter($"vec_id" === 3L)
+      .selectExpr("transform(embedding, x -> CAST(x AS DOUBLE)) AS q")
+      .as[Seq[Double]].head().toArray
+    val fromDisk = IvfIndex.searchClustered(spark, p, "vec_id", "embedding",
+      query, 5, nProbe = 3).as[(Long, Double)].collect().toSeq
+    val fromFrame = IvfIndex.search(assigned, model, "vec_id", "embedding",
+      query, 5, nProbe = 3).as[(Long, Double)].collect().toSeq
+    assert(fromDisk == fromFrame)
   }
 
   test("search probes a subset of cells and still finds the true nearest") {

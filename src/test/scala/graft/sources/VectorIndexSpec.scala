@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.operators.{IvfIndex, NswGraph}
+import graft.operators.{HnswGraph, IvfIndex}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
@@ -137,7 +137,7 @@ class VectorIndexSpec extends SparkSpec {
     // members must have gained edges to it (append-without-patch would
     // leave it unreachable except as a hub seed)
     val q = vec(1, 101L)
-    val top = NswGraph.searchGraph(spark, idxPath, "node_key", "embedding",
+    val top = HnswGraph.searchGraph(spark, idxPath, "node_key", "embedding",
       q, k = 3, nProbe = 1, ef = 16).select("node_key").as[Long].collect()
     assert(top.contains(101L), s"patched graph missed the new vector: ${top.toSeq}")
     // new vectors also carry adjacency of their own
@@ -181,7 +181,7 @@ class VectorIndexSpec extends SparkSpec {
       .select(col("node_key").cast("long"), col("hnsw_level"))
       .as[(Long, Int)].collect()
     maintained.foreach { case (id, lvl) =>
-      assert(lvl == graft.operators.HnswGraph.levelOf(id, 4),
+      assert(lvl == HnswGraph.levelOf(id, 4),
         s"node $id re-levelled to $lvl after maintain")
     }
     // backlink repair: surviving nodes in the patched cell must point AT
@@ -390,7 +390,7 @@ class VectorIndexSpec extends SparkSpec {
     assert(!MetaIO.listDirs(idxPath).contains(s"ivf_cell=$cluster3Cell"),
       "emptied cell directory not removed")
     // graph search over survivors still works
-    val top = NswGraph.searchGraph(spark, idxPath, "node_key", "embedding",
+    val top = HnswGraph.searchGraph(spark, idxPath, "node_key", "embedding",
       vec(2, 2L), k = 3, nProbe = 1, ef = 16).select("node_key").as[Long].collect()
     assert(top.contains(2L), s"graph search broken after purge: ${top.toSeq}")
   }
