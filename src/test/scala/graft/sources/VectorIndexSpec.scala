@@ -654,7 +654,7 @@ class VectorIndexSpec extends SparkSpec {
     // two new vectors and a same-cell re-embed, all in cluster 1
     TemporalTable.merge(spark, p, rows(Seq(101L, 105L)).unionByName(
       Seq((9L, vec(1, 5000L).toSeq)).toDF("node_key", "embedding")), None)
-    /** The jobs of one maintain, after checking what it read and wrote. */
+    // the jobs of one maintain, after checking what it read and wrote
     def maintainJobs(name: String, graph: Boolean): Int = {
       val idxDir = s"$dir/_vecidx/$name"
       val model = IvfIndex.readModel(idxDir)
