@@ -81,9 +81,9 @@ object VectorIndex {
 
   /** `m` > 0 → per-cell [[HnswGraph]] adjacency with level ratio
     * `hnswMl` (0: the flat graph, every node on level 0; ≥ 2: the
-    * layered one); `pqM` > 0 → PQ codes
-    * ride in the layout (the byte-budget tier: ADC ranking reads codes
-    * only, exact re-rank reads `refine·k` vectors). Graph and PQ tiers
+    * layered one); `pqM` > 0 → PQ codes ride in the layout (the
+    * byte-budget tier: ADC ranking reads codes only, exact re-rank reads
+    * `refine·k` vectors). Graph and PQ tiers
     * are exclusive. */
   final case class Spec(name: String, idCol: String, vecCol: String,
                         nLists: Int, m: Int, pqM: Int = 0, pqK: Int = 256,
@@ -338,13 +338,13 @@ object VectorIndex {
     * their files opened, with the schema of one of their footers: listing
     * the layout's root would list every cell, and above
     * `spark.sql.sources.parallelPartitionDiscovery.threshold` directories
-    * Spark lists them in a job of its own. The graph tiers take each cell's stored rows
-    * whole; plain IVF and IVF-PQ take only the stored rows with a
-    * candidate's id (a broadcast semi-join), the only ones the guard can
-    * match. A [[CellPartitioner]] gives each affected cell a task of its
-    * own. The graph tiers rebuild through [[graphOfCells]]; PQ rows encode
-    * with the STORED codebooks (no refit: drift degrades recall, not
-    * correctness, until rebuild). Read and write are one job: the dynamic
+    * Spark lists them in a job of its own. The graph tiers take each
+    * cell's stored rows whole; plain IVF and IVF-PQ take only the stored
+    * rows with a candidate's id (a broadcast semi-join), the only ones
+    * the guard can match. A [[CellPartitioner]] gives each affected cell
+    * a task of its own. The graph tiers rebuild through [[graphOfCells]];
+    * PQ rows encode with the STORED codebooks (no refit: drift degrades
+    * recall, not correctness, until rebuild). Read and write are one job: the dynamic
     * overwrite replaces a cell only when the job commits, after every
     * read. Returns the number of new rows, counted in the write's own
     * tasks (an action's accumulator counts each task once). */
