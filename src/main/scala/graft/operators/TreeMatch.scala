@@ -290,7 +290,10 @@ object TreeMatch {
     * insert/delete/update/move emission). A node can be both updated and
     * moved; it appears once per applicable op. */
   def editScript(a: DataFrame, b: DataFrame, matches: DataFrame): DataFrame = {
-    val m = matches.select("doc_id", "a_key", "b_key")
+    // materialized once (one job): the match set is read four times
+    // below, and inlined each read carried matchTrees' whole plan into
+    // every stage's task binary — 30 to 63 MiB each for a ~20-node tree
+    val m = matches.select("doc_id", "a_key", "b_key").localCheckpoint(true)
     val deletes = a.join(m.withColumnRenamed("a_key", "node_key"),
         Seq("doc_id", "node_key"), "left_anti")
       .select(col("doc_id"), lit("delete").as("op"),

@@ -58,37 +58,32 @@ class HnswGraphSpec extends SparkSpec {
   }
 
   test("search finds the query's own vector and has high recall vs brute force") {
+    val p = freshPath()
     val (model, assigned) = IvfIndex.fit(emb, "embedding", nLists = 4)
+    HnswGraph.writeGraphIndexed(assigned, model, "vec_id", "embedding", p,
+      m = 8, mL = 4)
+    // the layout stays interchangeable with plain IVF search
     val q0 = emb.filter($"vec_id" === 3L)
       .selectExpr("transform(embedding, x -> CAST(x AS DOUBLE)) AS q")
       .as[Seq[Double]].head().toArray
+    assert(IvfIndex.searchClustered(spark, p, "vec_id", "embedding",
+      q0, 5, nProbe = 4).count() == 5)
     val queries = emb.filter($"vec_id" < 5L)
       .selectExpr("vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS q")
       .as[(Long, Seq[Double])].collect()
-      .map { case (qid, q) =>
-        (qid, q.toArray, Similarity.cosineTopK(emb, "vec_id", "embedding",
-          spark.range(1).select(lit(q.toArray).as("qvec")), 10)
-          .as[(Long, Double)].collect().map(_._1).toSet)
-      }
-    // the layered graph and the flat one
-    Seq(4, 0).foreach { mL =>
-      val p = freshPath()
-      HnswGraph.writeGraphIndexed(assigned, model, "vec_id", "embedding", p,
-        m = 8, mL = mL)
-      // the layout stays interchangeable with plain IVF search
-      assert(IvfIndex.searchClustered(spark, p, "vec_id", "embedding",
-        q0, 5, nProbe = 4).count() == 5)
-      val recalls = queries.map { case (qid, q, truth) =>
-        val approx = HnswGraph.searchGraph(spark, p, "vec_id", "embedding",
-            q, 10, nProbe = 4, ef = 48)
-          .as[(Long, Double)].collect()
-        assert(approx.head._1 == qid && approx.head._2 == 1.0,
-          s"mL=$mL: query $qid did not find itself: ${approx.take(3).toSeq}")
-        (approx.map(_._1).toSet intersect truth).size.toDouble / truth.size
-      }
-      val mean = recalls.sum / recalls.length
-      assert(mean >= 0.85, s"mL=$mL: mean recall@10 too low: $mean")
+    val recalls = queries.map { case (qid, q) =>
+      val approx = HnswGraph.searchGraph(spark, p, "vec_id", "embedding",
+          q.toArray, 10, nProbe = 4, ef = 48)
+        .as[(Long, Double)].collect()
+      assert(approx.head._1 == qid && approx.head._2 == 1.0,
+        s"query $qid did not find itself: ${approx.take(3).toSeq}")
+      val truth = Similarity.cosineTopK(emb, "vec_id", "embedding",
+        spark.range(1).select(lit(q.toArray).as("qvec")), 10)
+        .as[(Long, Double)].collect().map(_._1).toSet
+      (approx.map(_._1).toSet intersect truth).size.toDouble / truth.size
     }
+    val mean = recalls.sum / recalls.length
+    assert(mean >= 0.85, s"mean recall@10 too low: $mean")
   }
 
   test("upper-layer descent reaches a basin far from the entry's start") {
@@ -262,64 +257,19 @@ class HnswGraphSpec extends SparkSpec {
     assert(got == pinned, got.map { case (k, v) => s"$k -> $v" }.mkString("\n"))
   }
 
-  test("flat search reproduces the pinned NSW top-10 per query") {
+
+  test("search is deterministic run to run") {
     val p = freshPath()
     val (model, assigned) = IvfIndex.fit(emb, "embedding", nLists = 4)
     HnswGraph.writeGraphIndexed(assigned, model, "vec_id", "embedding", p,
-      m = 8, mL = 0)
-    val queries = emb.filter($"vec_id" < 5L)
-      .selectExpr("vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS q")
-      .as[(Long, Seq[Double])].collect().sortBy(_._1)
-    val got = queries.map { case (qid, q) =>
-      qid -> HnswGraph.searchGraph(spark, p, "vec_id", "embedding",
-          q.toArray, 10, nProbe = 4, ef = 48).as[(Long, Double)].collect().toSeq
-    }.toSeq
-    // taken from the flat tier's own search before it folded into this
-    // object: the flat layout must answer with the same ids and sims
-    val pinned = Seq(
-      0L -> Seq((0L, 1.0), (17L, 0.3345), (225L, 0.3151), (12L, 0.311), (483L, 0.3005),
-        (260L, 0.2987), (73L, 0.2972), (212L, 0.2814), (347L, 0.2745), (402L, 0.2745)),
-      1L -> Seq((1L, 1.0), (257L, 0.3918), (209L, 0.3815), (129L, 0.3515), (376L, 0.3048),
-        (440L, 0.2993), (75L, 0.29), (455L, 0.2824), (479L, 0.2689), (247L, 0.2615)),
-      2L -> Seq((2L, 1.0), (443L, 0.3576), (62L, 0.29), (246L, 0.2898), (185L, 0.2829),
-        (91L, 0.2789), (234L, 0.2777), (441L, 0.254), (309L, 0.2523), (183L, 0.2506)),
-      3L -> Seq((3L, 1.0), (223L, 0.3409), (205L, 0.3366), (84L, 0.3197), (212L, 0.3197),
-        (426L, 0.3151), (156L, 0.3111), (72L, 0.3089), (278L, 0.2694), (382L, 0.2673)),
-      4L -> Seq((4L, 1.0), (345L, 0.3749), (98L, 0.3398), (143L, 0.3297), (343L, 0.3124),
-        (57L, 0.2987), (357L, 0.2954), (62L, 0.2886), (229L, 0.2678), (472L, 0.2663)))
-    assert(got == pinned, got.mkString("\n"))
-  }
-
-  test("search is deterministic run to run") {
-    val (model, assigned) = IvfIndex.fit(emb, "embedding", nLists = 4)
+      m = 8, mL = 4)
     val q = emb.filter($"vec_id" === 7L)
       .selectExpr("transform(embedding, x -> CAST(x AS DOUBLE)) AS q")
       .as[Seq[Double]].head().toArray
-    // the layered graph and the flat one
-    Seq(4, 0).foreach { mL =>
-      val p = freshPath()
-      HnswGraph.writeGraphIndexed(assigned, model, "vec_id", "embedding", p,
-        m = 8, mL = mL)
-      def run() = HnswGraph.searchGraph(spark, p, "vec_id", "embedding", q, 10, 4)
-        .as[(Long, Double)].collect().toSeq
-      val r1 = run()
-      assert(r1 == run() && r1.size == 10, s"mL=$mL: $r1")
-    }
-    // one flat cell's beam: deterministic, at most ef hits, best first
-    val rnd = new scala.util.Random(7)
-    val vecs = (0L until 50L).map(i => i -> Array.fill(8)(rnd.nextDouble() - 0.5)).toMap
-    val graph = vecs.map { case (id, v) =>
-      val nn = vecs.keys.filter(_ != id).toSeq
-        .sortBy(o => -vecs(o).zip(v).map { case (x, y) => x * y }.sum).take(6)
-      id -> (v, 0, Array(nn.toArray))
-    }
-    val qf = Array.fill(8)(0.1)
-    val b1 = HnswGraph.descendSearch(graph, qf, ef = 10).toSeq
-    assert(b1 == HnswGraph.descendSearch(graph, qf, ef = 10).toSeq)
-    assert(b1.nonEmpty && b1.size <= 10, s"${b1.size} hits at ef = 10")
-    assert(b1.sliding(2).forall {
-      case Seq(a, b) => a.sim >= b.sim
-      case _ => true
-    }, s"sims increase: $b1")
+    val r1 = HnswGraph.searchGraph(spark, p, "vec_id", "embedding", q, 10, 4)
+      .as[(Long, Double)].collect().toSeq
+    val r2 = HnswGraph.searchGraph(spark, p, "vec_id", "embedding", q, 10, 4)
+      .as[(Long, Double)].collect().toSeq
+    assert(r1 == r2 && r1.size == 10)
   }
 }
